@@ -14,6 +14,7 @@ from __future__ import annotations
 import gc
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -235,7 +236,7 @@ def main() -> None:
             t0 = time.perf_counter()
             spark.range(1).count()
             ts.append(time.perf_counter() - t0)
-        return sorted(ts)[5] * 1000.0
+        return statistics.median(ts) * 1000.0
 
     # warmup: JVM + codegen + parquet footer caches (before the pre-
     # canary so the canary measures a warm JVM, same as the post one)

@@ -7,10 +7,12 @@ Reference parity, generalized (SURVEY §3, §7 Phase 2):
   hive-partitioned parquet ``year=/month=`` (S4, extract_forex.py:168).
 - **silver** (stg_eurusd.sql:14-42): typed projection (P1), incremental
   high-watermark filter (P3), QUALIFY-style dedup on the event key (D2),
-  audit timestamp (P6), MERGE upsert on the key (S9).
+  audit timestamp (P6); appended, since the watermark makes the MERGE on
+  the key (S9) a no-op.
 - **gold** (fct_eurusd_timeframes.sql:15-86): N-day lookback reprocess
   (P4), multi-timeframe candles (T1-T4/U1/A1-A6), window indicators
-  (W2-W4), md5 surrogate key (F1-F3), MERGE on unique_id.
+  (W2-W4), md5 surrogate key (F1-F3); the MERGE on unique_id is a
+  replace of the recomputed range.
 - **checks**: Q1-Q3 dbt-test equivalents over gold.
 
 Parameterized by (symbol, timeframes, lookback) instead of the
@@ -44,7 +46,14 @@ from ..operators.quality import (
     run_checks,
     unique_violations,
 )
-from ..sources.writers import high_watermark, merge_upsert, write_partitioned
+from ..sources.writers import (
+    column_max,
+    high_watermark,
+    merge_upsert,
+    read_table,
+    replace_table,
+    write_partitioned,
+)
 
 
 @dataclass
@@ -105,12 +114,23 @@ def silver_transform(bronze: DataFrame, watermark=None) -> DataFrame:
 
 
 def silver_run(spark: SparkSession, cfg: PipelineConfig) -> None:
+    """Incremental silver, append-only.
+
+    ``silver_transform`` keeps only rows above the table's high
+    watermark, so silver grows only at its tail: no batch key can
+    collide with a stored one, and the MERGE's anti-join would remove
+    nothing. The first write goes through ``merge_upsert``; every later
+    run appends its batch as new part files and leaves the stored ones
+    untouched. A day therefore costs its batch, not the table, at the
+    price of one more small file per run — ``sources.writers.compact``
+    folds those back together."""
     bronze = spark.read.parquet(cfg.bronze_path)
     wm = high_watermark(spark, cfg.silver_path, "observed_at")
     batch = silver_transform(bronze, wm)
-    merge_upsert(
-        spark, cfg.silver_path, batch, ["symbol", "observed_at"],
-    )
+    if wm is None:
+        merge_upsert(spark, cfg.silver_path, batch, ["symbol", "observed_at"])
+    else:
+        write_partitioned(batch, cfg.silver_path, mode="append")
 
 
 def _finalize_gold(candles_with_indicators: DataFrame) -> DataFrame:
@@ -164,10 +184,19 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
        pruned read of an already-materialized table. At 100 TB this is
        the difference between scanning days and scanning months.
     3. Indicators are computed over context ∪ recomputed, then only
-       rows at/after the merge edge are upserted.
+       rows at/after the merge edge are written.
+
+    Range-replace contract: silver below its watermark never changes
+    (``silver_run`` only appends), so every stored candle at or after
+    its timeframe's edge is recomputed and none before it is. The MERGE
+    on unique_id thus reduces to ``existing below the edge ∪
+    recomputed``, written through one atomic swap — no key anti-join,
+    and the recompute runs once. The one gold read serves the
+    watermark, the indicator context and the kept rows.
     """
     silver = spark.read.parquet(cfg.silver_path)
-    wm = high_watermark(spark, cfg.gold_path, "candle_start")
+    gold = read_table(spark, cfg.gold_path)
+    wm = None if gold is None else column_max(gold, "candle_start")
     if wm is None:
         merge_upsert(
             spark, cfg.gold_path, gold_transform(cfg, silver), ["unique_id"],
@@ -191,10 +220,7 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
         keep_spec=True,
     )
 
-    spec = _tf_spec_df(spark, cfg)
-    existing = spark.read.parquet(cfg.gold_path).join(
-        F.broadcast(spec), "timeframe"
-    )
+    existing = _with_tf_spec(gold, cfg)
     edge = _edge_epoch(cutoff)
     cs_epoch = F.unix_timestamp(F.col("candle_start").cast("timestamp"))
     context = existing.filter(
@@ -209,17 +235,26 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
         unioned, ["symbol", "timeframe"], "candle_start",
         "close_value", cfg.sma_windows,
     )
-    to_merge = indicated.filter(cs_epoch >= edge).drop("dur_s", "shift_s")
-    merge_upsert(
-        spark, cfg.gold_path, _finalize_gold(to_merge), ["unique_id"],
+    to_merge = _finalize_gold(indicated.filter(cs_epoch >= edge))
+    kept = existing.filter(F.coalesce(cs_epoch < edge, F.lit(True))).select(
+        *gold.columns
+    )
+    replace_table(
+        kept.unionByName(to_merge.select(*gold.columns)), cfg.gold_path,
         sort_within=("timeframe", "candle_start"),      # cluster_by, fct:11
     )
 
 
-def _tf_spec_df(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    return spark.createDataFrame(
-        [(tf.name, tf.seconds, tf.shift_seconds) for tf in cfg.timeframes],
-        "timeframe string, dur_s int, shift_s int",
+def _with_tf_spec(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Attach each row's ``dur_s``/``shift_s`` from literal maps — no
+    join, so no broadcast job. A timeframe no longer configured gets
+    NULLs, which keep its stored rows out of the recompute."""
+    def spec(attr: str):
+        pairs = [F.lit(v) for tf in cfg.timeframes for v in (tf.name, getattr(tf, attr))]
+        return F.create_map(*pairs)[F.col("timeframe")]
+
+    return df.withColumn("dur_s", spec("seconds")).withColumn(
+        "shift_s", spec("shift_seconds")
     )
 
 

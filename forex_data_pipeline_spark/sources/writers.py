@@ -1,27 +1,25 @@
 """Sinks: partitioned parquet writer + incremental MERGE upsert (SURVEY
 §2.1 S3/S4/S9).
 
-The reference gets MERGE for free from BigQuery
-(/root/reference/models/staging/stg_eurusd.sql:2-11,
- /root/reference/models/marts/fct_eurusd_timeframes.sql:2-13:
-``incremental_strategy='merge'`` on a ``unique_key``, day-partitioned).
-Pure-Spark equivalent, two strategies:
+The reference's MERGE is day-partitioned, so its daily cost follows the
+batch, not the table (models/staging/stg_eurusd.sql:2-11,
+models/marts/fct_eurusd_timeframes.sql:2-13). Here:
 
-- ``rewrite``  — read existing → anti-join on keys → union new → write to
-  a temp dir → atomic swap. Correct everywhere; rewrites the whole
-  table, so only for small/medium tables.
-- ``dynamic``  — dynamic partition overwrite: only partitions touched by
-  the new batch are read, anti-joined, and overwritten
-  (``spark.sql.sources.partitionOverwriteMode=dynamic``). This is the
-  100 TB path: cost ∝ touched partitions (a daily batch touches 1-2 day
-  partitions), not table size — exactly the reference's day-partitioned
-  MERGE cost model.
+- ``merge_upsert`` — ``rewrite``: existing ⋉̸ keys(batch) ∪ batch, the
+  whole table, through :func:`replace_table`; ``dynamic``: the same over
+  only the partitions the batch touches, the 100 TB path.
+- append — the medallion's silver: its watermark admits only keys above
+  every stored key, so a MERGE would remove nothing. A day adds part
+  files and rewrites none; :func:`compact` folds the small files back.
+- range replace — the medallion's gold: a run recomputes every stored
+  row at or after a known edge and none before it, so ``existing below
+  the edge ∪ recomputed`` goes through :func:`replace_table`.
 
 Atomicity caveat (SURVEY §7 hard-part 1): without a transactional table
-format, ``rewrite`` swaps directories (brief window where the table is a
-moved-aside copy) and ``dynamic`` relies on Spark's output-committer
-per-partition atomicity. Delta Lake's MERGE INTO would subsume both
-behind this same interface; it is not available in this container.
+format, :func:`replace_table` swaps directories (brief window where the
+table is a moved-aside copy) and ``dynamic`` relies on Spark's
+output-committer per-partition atomicity. Delta Lake's MERGE INTO would
+subsume these behind one interface; it is not available in this container.
 """
 
 from __future__ import annotations
@@ -31,6 +29,7 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,12 +61,30 @@ def write_partitioned(
     w.parquet(path)
 
 
-def table_exists(spark: SparkSession, path: str) -> bool:
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when there is none (missing
+    path / empty dir). One schema inference — one Spark job — so callers
+    reuse the frame instead of probing for existence and reading again."""
     try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:  # noqa: BLE001 - missing path / empty dir
-        return False
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
+def replace_table(
+    df: DataFrame,
+    path: str,
+    partition_cols: Sequence[str] = (),
+    sort_within: Sequence[str] = (),
+) -> None:
+    """Replace the table at ``path`` with ``df`` — which may read ``path``
+    itself — by writing a sibling temp dir and swapping it in."""
+    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+    write_partitioned(df, tmp, partition_cols, sort_within=sort_within)
+    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def merge_upsert(
@@ -87,11 +104,10 @@ def merge_upsert(
     UPDATE ALL WHEN NOT MATCHED INSERT ALL``.
     """
     keys = list(keys)
-    if not table_exists(spark, path):
+    existing = read_table(spark, path)
+    if existing is None:
         write_partitioned(new_df, path, partition_cols, sort_within=sort_within)
         return
-
-    existing = spark.read.parquet(path)
 
     if strategy == "dynamic" and partition_cols:
         # Scale path: touch only the partitions present in the new batch.
@@ -101,31 +117,30 @@ def merge_upsert(
         result = kept.unionByName(new_df.select(*kept.columns))
         if sort_within:
             result = result.sortWithinPartitions(*sort_within)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # 'overwrite' + dynamic mode replaces only partitions present in
-        # `result` — everything else on disk is untouched.
-        result.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+        # dynamic overwrite replaces only the partitions in `result`; a
+        # per-write option, as concurrent models share the session conf
+        w = result.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        w.partitionBy(*partition_cols).parquet(path)
         return
 
     kept = existing.join(new_df.select(*keys).distinct(), keys, "left_anti")
     result = kept.unionByName(new_df.select(*kept.columns))
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    write_partitioned(result, tmp, partition_cols, sort_within=sort_within)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    replace_table(result, path, partition_cols, sort_within)
 
 
-def high_watermark(
-    spark: SparkSession, path: str, col: str
-):
+def high_watermark(spark: SparkSession, path: str, col: str):
     """P3: max(col) of an existing table, None when absent
     (stg_eurusd.sql:18-21). Collected on the driver so the incremental
     filter becomes a pushable literal predicate."""
-    if not table_exists(spark, path):
-        return None
-    return spark.read.parquet(path).agg(F.max(col)).first()[0]
+    table = read_table(spark, path)
+    return None if table is None else column_max(table, col)
+
+
+def column_max(table: DataFrame, col: str):
+    """max(col) of ``table`` (None when empty) in one Spark job: a top-1 per
+    partition, where a global aggregate adds an exchange and, under AQE, a job."""
+    row = table.select(col).orderBy(F.col(col).desc_nulls_last()).first()
+    return None if row is None else row[0]
 
 
 def write_bucketed(
@@ -164,7 +179,7 @@ def compact(
 ) -> int:
     """Small-file compaction: rewrite the table at ``path`` into
     ``target_files`` files (per partition when partitioned), atomically
-    via temp-dir + swap. Returns the row count preserved.
+    via :func:`replace_table`. Returns the row count preserved.
 
     The daily micro-batch regime produces one file per batch
     (the reference's one-parquet-per-day layout,
@@ -176,17 +191,9 @@ def compact(
     intends."""
     df = spark.read.parquet(path)
     n = df.count()
-    compacted = (
-        df.repartition(target_files, *partition_cols)
-        if partition_cols
-        else df.coalesce(target_files)
-    )
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    write_partitioned(compacted, tmp, partition_cols)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    compacted = (df.repartition(target_files, *partition_cols)
+                 if partition_cols else df.coalesce(target_files))
+    replace_table(compacted, path, partition_cols)
     return n
 
 
@@ -198,8 +205,8 @@ def delete_rows(
     partition_cols: Sequence[str] = (),
 ) -> int:
     """DELETE WHERE for a parquet table: rewrite ``path`` keeping only
-    rows NOT matching ``predicate``, atomically via temp-dir + swap
-    (same mechanics as :func:`compact`). Returns rows deleted.
+    rows NOT matching ``predicate``, atomically via
+    :func:`replace_table`. Returns rows deleted.
 
     The retention / right-to-erasure half of the CRUD surface the
     MERGE writer (upsert) doesn't cover. On a partitioned table a
@@ -209,15 +216,9 @@ def delete_rows(
     maps to a native DELETE."""
     df = spark.read.parquet(path)
     keep = df.filter(~predicate)
-    n_total = df.count()
-    n_keep = keep.count()
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    write_partitioned(keep, tmp, partition_cols)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return n_total - n_keep
+    n_deleted = df.count() - keep.count()
+    replace_table(keep, path, partition_cols)
+    return n_deleted
 
 
 def write_with_expectations(
@@ -241,8 +242,6 @@ def write_with_expectations(
     the tiny flag columns. Per-rule flags in the quarantine output
     make triage queryable ('which rule killed this row').
     """
-    from pyspark.sql import functions as F
-
     if not expectations:
         # any_viol below would stay None and ~None is a TypeError at
         # plan build; an expectation-gated write with no expectations

@@ -54,7 +54,9 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
     to DATA, not cores: the count grows linearly with input and returns
     to the session default once the staged source reaches
     default × 32 MB, so a cluster-scale ingest keeps the operator's
-    configured width (nothing here is tuned to local[32])."""
+    configured width (nothing here is tuned to local[32]). Input it
+    cannot size — a remote path ``os.path`` cannot see reads as 0
+    bytes — gets the cap, never a single frozen state store."""
     total = 0
     for p in paths:
         if os.path.isdir(p):
@@ -68,6 +70,8 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         cap = spark.sparkContext.defaultParallelism
+    if total == 0:
+        return cap
     return max(1, min(cap, -(-total // _STATE_PARTITION_BYTES)))
 
 

@@ -90,6 +90,26 @@ def test_merge_dynamic_touches_only_new_partitions(spark, tmp_path):
     )
 
 
+def test_merge_dynamic_leaves_session_conf_unchanged(spark, tmp_path):
+    """Dynamic overwrite is a per-write option: the runner runs models
+    concurrently in one session, so a merge must not flip the
+    session-wide partitionOverwriteMode under another model's write."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    path = f"{tmp_path}/c"
+    base = spark.createDataFrame(
+        [(1, "d1", 1), (2, "d2", 2)], "k int, day string, v int"
+    )
+    write_partitioned(base, path, ("day",))
+    batch = spark.createDataFrame([(2, "d2", 22)], "k int, day string, v int")
+    merge_upsert(spark, path, batch, ["k"], partition_cols=("day",),
+                 strategy="dynamic")
+    assert spark.conf.get(key) == before
+    # d1 was not in the batch and survives: the write was dynamic
+    assert _rows(spark, path).v.tolist() == [1, 22]
+
+
 def test_merge_key_moving_partition_dynamic(spark, tmp_path):
     """A key that moves partitions in the batch must not end up twice:
     the old partition copy survives only if untouched — document the
@@ -109,12 +129,16 @@ def test_merge_key_moving_partition_dynamic(spark, tmp_path):
 
 
 def test_high_watermark(spark, tmp_path):
+    from forex_data_pipeline_spark.sources.writers import column_max
+
     path = f"{tmp_path}/w"
     assert high_watermark(spark, path, "v") is None
     write_partitioned(
-        spark.createDataFrame([(1, 5), (2, 9)], "k int, v int"), path
+        spark.createDataFrame([(1, 5), (2, 9), (3, None)], "k int, v int"),
+        path,
     )
-    assert high_watermark(spark, path, "v") == 9
+    assert high_watermark(spark, path, "v") == 9  # NULLs never win
+    assert column_max(spark.createDataFrame([], "v int"), "v") is None
 
 
 def test_sort_within_clusters_rows_for_rowgroup_skipping(spark, tmp_path):

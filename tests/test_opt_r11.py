@@ -51,6 +51,18 @@ def test_state_partitions_grow_with_input_and_cap_at_default(
     assert huge == cap  # capped at the session default, cores untouched
 
 
+def test_state_partitions_unresolvable_path_gets_the_cap(spark):
+    """A path os.path cannot see (a remote URI) sizes to 0 bytes; it must
+    get the session's width, not one state store frozen into the
+    checkpoint."""
+    from forex_data_pipeline_spark.streaming.candles_stream import (
+        state_partitions_for,
+    )
+
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert state_partitions_for(spark, "s3a://bucket/ticks/") == cap
+
+
 def test_stream_shuffle_partitions_restores_session_conf(spark):
     from forex_data_pipeline_spark.streaming.candles_stream import (
         stream_shuffle_partitions,

@@ -4,6 +4,7 @@ stg_eurusd.sql:18-21 / fct:25-29 exist to guarantee."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pandas as pd
@@ -130,6 +131,146 @@ def test_idempotent_rerun(spark, tmp_path):
 
     pd.testing.assert_frame_equal(before_s, after_s)
     pd.testing.assert_frame_equal(before_g, after_g)
+
+
+def _part_files(path: str) -> dict[str, int]:
+    return {
+        f: os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if not f.startswith((".", "_"))
+    }
+
+
+def test_incremental_silver_appends_and_leaves_stored_files(spark, tmp_path):
+    """Silver only grows at its tail (the watermark filter), so an
+    incremental day appends its batch as new part files: every stored
+    part file keeps its name and size."""
+    cfg = _cfg(tmp_path, "append")
+    run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-01", 288 * 2)))
+    before = _part_files(cfg.silver_path)
+    n_before = spark.read.parquet(cfg.silver_path).count()
+
+    # half of this batch re-delivers stored rows; 144 bars are new
+    run_batch(
+        spark, cfg, spark.createDataFrame(make_ticks("2024-03-02 12:00", 288))
+    )
+    after = _part_files(cfg.silver_path)
+    assert {f: after.get(f) for f in before} == before
+    assert len(after) > len(before)
+    assert spark.read.parquet(cfg.silver_path).count() == n_before + 144
+
+
+def test_gold_rows_before_edge_keep_dbt_updated_at(spark, tmp_path):
+    """Gold replaces only the recomputed range: candles before each
+    timeframe's merge edge are carried over as stored (same
+    dbt_updated_at); every candle at or after it is rewritten."""
+    cfg = _cfg(tmp_path, "edge", lookback=1)
+    run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-01", 288 * 4)))
+    cols = ["unique_id", "timeframe", "candle_start", "dbt_updated_at"]
+    before = spark.read.parquet(cfg.gold_path).select(*cols).toPandas()
+    run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-05", 288)))
+    after = spark.read.parquet(cfg.gold_path).select("unique_id", "dbt_updated_at")
+    both = before.merge(after.toPandas(), on="unique_id", suffixes=("", "_new"))
+    assert len(both) == len(before)  # nothing stored was dropped
+
+    def epoch(ts):
+        return (ts - pd.Timestamp("1970-01-01")) // pd.Timedelta("1s")
+
+    cut = epoch(before.candle_start.max() - pd.Timedelta(days=cfg.lookback_days))
+    tf = {t.name: t for t in TFS}
+    edge = both.timeframe.map(
+        lambda n: (cut + tf[n].shift_seconds) // tf[n].seconds * tf[n].seconds
+        - tf[n].shift_seconds
+    )
+    below = epoch(both.candle_start) < edge
+    assert below.any() and (~below).any()
+    kept = both[below]
+    assert (kept.dbt_updated_at_new == kept.dbt_updated_at).all()
+    redone = both[~below]
+    assert (redone.dbt_updated_at_new > redone.dbt_updated_at).all()
+
+
+def test_gold_keeps_rows_of_a_dropped_timeframe(spark, tmp_path):
+    """A timeframe removed from the config is no longer recomputed, and
+    the range replace must still carry its stored candles over, as the
+    MERGE on unique_id did."""
+    from dataclasses import replace
+
+    cfg = _cfg(tmp_path, "dropped", lookback=1)
+    run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-01", 288 * 4)))
+    stored = _collect(spark, cfg.gold_path, GOLD_COLS)
+    run_batch(
+        spark, replace(cfg, timeframes=TFS[:2]),
+        spark.createDataFrame(make_ticks("2024-03-05", 288)),
+    )
+    got = _collect(spark, cfg.gold_path, GOLD_COLS)
+    pd.testing.assert_frame_equal(
+        got[got.timeframe == "24h"].reset_index(drop=True),
+        stored[stored.timeframe == "24h"].reset_index(drop=True),
+    )
+
+
+def test_incremental_symbol_day_job_budget(spark, tmp_path):
+    """Spark jobs of one incremental symbol-day, per model, counted by
+    job group. The budgets equal today's counts, so a change that adds
+    a job (a second read of a table, a count() per check, a key
+    anti-join) fails here. Today: silver reads bronze and silver once
+    each, takes the watermark in one job, then one shuffle and one
+    append; gold reads silver and gold once each, takes the watermark
+    in one job, then three shuffles and one write; checks read gold once
+    and count every check in one action."""
+    from forex_data_pipeline_spark.pipeline.medallion import (
+        bronze_ingest,
+        gold_checks,
+        gold_run,
+        silver_run,
+    )
+
+    budget = {"bronze": 1, "silver": 5, "gold": 7, "checks": 3}
+    cfg = _cfg(tmp_path, "budget")
+    run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-01", 288 * 4)))
+    run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-05", 288)))
+    raw = spark.createDataFrame(make_ticks("2024-03-05 12:00", 288))
+    sc = spark.sparkContext
+    jobs = {}
+    for layer, run in (
+        ("bronze", lambda: bronze_ingest(cfg, raw)),
+        ("silver", lambda: silver_run(spark, cfg)),
+        ("gold", lambda: gold_run(spark, cfg)),
+        ("checks", lambda: gold_checks(spark, cfg)),
+    ):
+        group = f"budget:{tmp_path.name}:{layer}"
+        sc.setJobGroup(group, layer)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[layer] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(jobs[k] <= budget[k] for k in budget), (jobs, budget)
+
+
+def test_run_checks_counts_every_check(spark):
+    from forex_data_pipeline_spark.operators.quality import (
+        accepted_values_violations,
+        not_null_violations,
+        run_checks,
+        unique_violations,
+    )
+
+    bad = spark.createDataFrame(
+        [("a", "5m"), ("a", "5m"), ("b", "99x"), (None, "5m")],
+        "unique_id string, timeframe string",
+    )
+    assert run_checks(
+        {
+            "unique": unique_violations(bad, ["unique_id", "timeframe"]),
+            "not_null": not_null_violations(bad, "unique_id"),
+            "not_null_tf": not_null_violations(bad, "timeframe"),
+            "accepted": accepted_values_violations(bad, "timeframe", ["5m"]),
+        }
+    ) == {"unique": 1, "not_null": 1, "not_null_tf": 0, "accepted": 1}
+    assert run_checks({}) == {}
 
 
 def test_quality_checks_catch_violations(spark, tmp_path):
