@@ -119,18 +119,15 @@ def silver_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     ``silver_transform`` keeps only rows above the table's high
     watermark, so silver grows only at its tail: no batch key can
     collide with a stored one, and the MERGE's anti-join would remove
-    nothing. The first write goes through ``merge_upsert``; every later
-    run appends its batch as new part files and leaves the stored ones
-    untouched. A day therefore costs its batch, not the table, at the
-    price of one more small file per run — ``sources.writers.compact``
-    folds those back together."""
+    nothing. That holds on the first run too: with no watermark the
+    table is missing, empty or all-NULL keyed, and NULL keys never
+    match. Every run appends its batch as new part files and leaves the
+    stored ones untouched. A day therefore costs its batch, not the
+    table, at the price of one more small file per run —
+    ``sources.writers.compact`` folds those back together."""
     bronze = spark.read.parquet(cfg.bronze_path)
     wm = high_watermark(spark, cfg.silver_path, "observed_at")
-    batch = silver_transform(bronze, wm)
-    if wm is None:
-        merge_upsert(spark, cfg.silver_path, batch, ["symbol", "observed_at"])
-    else:
-        write_partitioned(batch, cfg.silver_path, mode="append")
+    write_partitioned(silver_transform(bronze, wm), cfg.silver_path, mode="append")
 
 
 def _finalize_gold(candles_with_indicators: DataFrame) -> DataFrame:
