@@ -9,29 +9,46 @@ Reference parity, generalized (SURVEY §3, §7 Phase 2):
   high-watermark filter (P3), QUALIFY-style dedup on the event key (D2),
   audit timestamp (P6); appended, since the watermark makes the MERGE on
   the key (S9) a no-op.
-- **gold** (fct_eurusd_timeframes.sql:15-86): N-day lookback reprocess
-  (P4), multi-timeframe candles (T1-T4/U1/A1-A6), window indicators
-  (W2-W4), md5 surrogate key (F1-F3); the MERGE on unique_id is a
-  replace of the recomputed range.
+- **gold** (fct_eurusd_timeframes.sql:15-86): reprocess from gold's own
+  watermark (P4), multi-timeframe candles (T1-T4/U1/A1-A6), window
+  indicators (W2-W4), md5 surrogate key (F1-F3); the MERGE on
+  unique_id is a replace of the recomputed range.
 - **checks**: Q1-Q3 dbt-test equivalents over gold.
 
-Parameterized by (symbol, timeframes, lookback) instead of the
+Parameterized by (symbol, timeframes, SMA windows) instead of the
 reference's hard-coded EUR/USD — one code path serves any series.
 
-Incremental-correctness contract (SURVEY §7 hard-part 2): the gold
-lookback must cover ``max(sma window) × max(timeframe)`` so window
-indicators are recomputed with full history at the merge seam; the
-reference's 60-day lookback encodes exactly that for SMA-50 × 24 h.
+Incremental-correctness contract (SURVEY §7 hard-part 2): every row
+``silver_run`` adds has ``observed_at`` above the silver watermark, and
+gold's watermark ``wm`` (its max ``candle_start``) is at or below that
+watermark, because a candle starts at or before its ticks. So a new row
+lands in a candle starting at or after ``bucket_tf(wm)`` for every
+timeframe ``tf``, and no candle before that edge can change — also when
+gold lags silver by several runs. Gold recomputes candles from that
+edge only and takes the window indicators' history (the max(sma)
+candles before it) from stored gold. The reference instead re-derives
+a fixed 60-day tail from silver (fct:25-29), which only re-produces
+candles that cannot change. The contract rests on silver changing only
+above its watermark: restating silver below it (a backfill of old
+ticks, a corrected bar) requires a gold rebuild — delete the gold
+table and the next ``gold_run`` rebuilds it on its first-run path. The
+same holds for a change of ``timeframes`` or ``sma_windows``.
+
+Silver and gold are read with their known schemas (``silver_schema``,
+``gold_schema``), which spares the schema-inference job per read;
+bronze keeps inference, as its columns follow the vendor payload.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.candles import (
     REFERENCE_TIMEFRAMES,
@@ -61,7 +78,6 @@ class PipelineConfig:
     base_dir: str
     symbol: str = "EUR/USD"
     timeframes: Sequence[Timeframe] = field(default=REFERENCE_TIMEFRAMES)
-    lookback_days: int = 60  # fct:28
     sma_windows: Sequence[int] = (20, 50)
 
     @property
@@ -91,6 +107,16 @@ def bronze_ingest(cfg: PipelineConfig, raw: DataFrame) -> None:
         enriched, cfg.bronze_path, ("year", "month"), mode="append",
         coalesce_small=True,
     )
+
+
+silver_schema = T.StructType(
+    [T.StructField("observed_at", T.TimestampNTZType())]
+    + [T.StructField(c, T.DoubleType())
+       for c in ("open_price", "high_price", "low_price", "close_price")]
+    + [T.StructField("symbol", T.StringType()),
+       T.StructField("dbt_updated_at", T.TimestampType())]
+)
+"""The columns ``silver_transform`` writes, in order."""
 
 
 def silver_transform(bronze: DataFrame, watermark=None) -> DataFrame:
@@ -124,10 +150,36 @@ def silver_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     match. Every run appends its batch as new part files and leaves the
     stored ones untouched. A day therefore costs its batch, not the
     table, at the price of one more small file per run —
-    ``sources.writers.compact`` folds those back together."""
-    bronze = spark.read.parquet(cfg.bronze_path)
-    wm = high_watermark(spark, cfg.silver_path, "observed_at")
+    ``sources.writers.compact`` folds those back together.
+
+    Bronze is read only from the watermark's ``year=/month=`` partition
+    on: an older partition holds no row above the watermark, so it is
+    neither listed nor read."""
+    wm = high_watermark(spark, cfg.silver_path, "observed_at", silver_schema)
+    bronze = spark.read.option("basePath", cfg.bronze_path).parquet(
+        *_bronze_partitions_from(cfg.bronze_path, wm)
+    )
     write_partitioned(silver_transform(bronze, wm), cfg.silver_path, mode="append")
+
+
+def _bronze_partitions_from(path: str, wm) -> list[str]:
+    """The ``year=Y/month=M`` directories of the bronze table at ``path``
+    whose month is at or after ``wm``'s, or the whole table when there is
+    no watermark. A NULL partition (``__HIVE_DEFAULT_PARTITION__``) is
+    skipped: its rows have no ``observed_at`` to pass the watermark."""
+    if wm is None:
+        return [path]
+
+    def value(d: str) -> int:
+        v = d.split("=", 1)[1]
+        return int(v) if v.isdigit() else -1
+
+    return [
+        os.path.join(path, y, m)
+        for y in os.listdir(path) if y.startswith("year=")
+        for m in os.listdir(os.path.join(path, y)) if m.startswith("month=")
+        if (value(y), value(m)) >= (wm.year, wm.month)
+    ]
 
 
 def _finalize_gold(candles_with_indicators: DataFrame) -> DataFrame:
@@ -140,6 +192,23 @@ def _finalize_gold(candles_with_indicators: DataFrame) -> DataFrame:
             )
         ),
     ).withColumn("dbt_updated_at", F.current_timestamp())
+
+
+def gold_schema(cfg: PipelineConfig) -> T.StructType:
+    """The columns ``gold_transform`` writes for ``cfg``, in order; the
+    ``sma_N`` columns follow ``cfg.sma_windows``."""
+    string, double = T.StringType(), T.DoubleType()
+    return T.StructType(
+        [T.StructField("symbol", string), T.StructField("timeframe", string),
+         T.StructField("candle_start", T.TimestampNTZType())]
+        + [T.StructField(c, double)
+           for c in ("open_value", "high_value", "low_value", "close_value")]
+        + [T.StructField("n_ticks", T.LongType()),
+           T.StructField("price_diff", double)]
+        + [T.StructField(f"sma_{n}", double) for n in cfg.sma_windows]
+        + [T.StructField("unique_id", string),
+           T.StructField("dbt_updated_at", T.TimestampType())]
+    )
 
 
 def gold_transform(cfg: PipelineConfig, silver: DataFrame) -> DataFrame:
@@ -161,38 +230,48 @@ def gold_transform(cfg: PipelineConfig, silver: DataFrame) -> DataFrame:
 
 
 def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
-    """Incremental gold (P4 + S9) — seam-exact, unlike the reference.
+    """Incremental gold (P4 + S9) — recomputed from gold's own watermark,
+    seam-exact, unlike the reference.
 
     The reference re-aggregates a 60-day tail of silver and MERGEs it
-    (fct:25-29). That design has two seam defects: (a) the lookback edge
+    (fct:25-29). That design has two seam defects: (a) the tail's edge
     slices candles mid-bucket, so the edge candle is re-aggregated from
     partial ticks and overwrites a complete one; (b) SMA windows at the
     head of the recomputed tail are truncated, overwriting correct old
-    values. Both are fixed here:
+    values. And most of what it recomputes cannot have changed.
 
-    1. Recompute candles only from each timeframe's OWN boundary at/below
-       the cutoff (per-tf snap — no partial aggregates; with mixed clock
-       shifts no single instant is a boundary for every timeframe).
-    2. Take indicator *context* (the max(sma)−1 candles before each
+    Watermark-edge argument: every row silver gained since the last run
+    has ``observed_at`` above the silver watermark, and gold's watermark
+    ``wm`` (its max ``candle_start``) is at or below it. So every new row
+    falls in a candle starting at or after ``bucket_tf(wm)``, each
+    timeframe's own bucket of ``wm``, and no candle before that edge can
+    change — however many silver runs gold missed. Hence:
+
+    1. Recompute candles only from each timeframe's edge (a per-tf snap —
+       no partial aggregates; with mixed clock shifts no single instant
+       is a boundary for every timeframe). The silver scan is the rows
+       since ``wm`` plus one coarsest bucket, and is small enough that
+       one exploded aggregation beats the two-stage rollup.
+    2. Take indicator *context* (the max(sma) candles before each
        timeframe's edge) from the EXISTING gold table — those candles
-       are final, so re-reading them is both exact and far cheaper than
-       re-aggregating weeks of silver: the silver scan shrinks to
-       ~lookback + one coarsest bucket, and window history costs one
-       pruned read of an already-materialized table. At 100 TB this is
-       the difference between scanning days and scanning months.
+       are final, so re-reading them is exact and far cheaper than
+       re-aggregating silver.
     3. Indicators are computed over context ∪ recomputed, then only
-       rows at/after the merge edge are written.
+       rows at/after the edge are written.
 
-    Range-replace contract: silver below its watermark never changes
-    (``silver_run`` only appends), so every stored candle at or after
-    its timeframe's edge is recomputed and none before it is. The MERGE
-    on unique_id thus reduces to ``existing below the edge ∪
+    The MERGE on unique_id thus reduces to ``existing below the edge ∪
     recomputed``, written through one atomic swap — no key anti-join,
     and the recompute runs once. The one gold read serves the
-    watermark, the indicator context and the kept rows.
+    watermark, the indicator context and the kept rows. The kept rows
+    keep their stored files' split, so like silver, gold gains a small
+    part file per run; ``sources.writers.compact`` folds them.
+
+    Restating silver below its watermark breaks the argument; it needs
+    a gold rebuild: delete the gold table, and this function rebuilds
+    it on its first-run path (a full ``gold_transform``).
     """
-    silver = spark.read.parquet(cfg.silver_path)
-    gold = read_table(spark, cfg.gold_path)
+    silver = spark.read.schema(silver_schema).parquet(cfg.silver_path)
+    gold = read_table(spark, cfg.gold_path, gold_schema(cfg))
     wm = None if gold is None else column_max(gold, "candle_start")
     if wm is None:
         merge_upsert(
@@ -201,24 +280,24 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
         )
         return
 
-    cutoff = wm - timedelta(days=cfg.lookback_days)            # P4, fct:28
     sma_max = max(cfg.sma_windows)
     max_dur = max(tf.seconds for tf in cfg.timeframes)
     max_shift = max(tf.shift_seconds for tf in cfg.timeframes)
 
     # Coarse driver-side prefilter → parquet row-group/partition pruning;
     # the per-tf exploded filter inside multi_timeframe_ohlc is exact.
-    scan_lo = cutoff - timedelta(seconds=max_dur + max_shift)
+    scan_lo = wm - timedelta(seconds=max_dur + max_shift)
     recomputed = multi_timeframe_ohlc(
         silver.filter(F.col("observed_at") >= F.lit(scan_lo)),
         "observed_at", "close_price", ["symbol"],
         timeframes=cfg.timeframes,
-        min_candle_start=cutoff,
+        min_candle_start=wm,
         keep_spec=True,
+        strategy="explode",
     )
 
     existing = _with_tf_spec(gold, cfg)
-    edge = _edge_epoch(cutoff)
+    edge = _edge_epoch(wm)
     cs_epoch = F.unix_timestamp(F.col("candle_start").cast("timestamp"))
     context = existing.filter(
         (cs_epoch < edge) & (cs_epoch >= edge - sma_max * F.col("dur_s"))
@@ -255,10 +334,10 @@ def _with_tf_spec(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def _edge_epoch(cutoff):
+def _edge_epoch(wm):
     """Per-timeframe merge edge as a Column expression factory: the
-    bucket of ``cutoff`` in each row's own (dur_s, shift_s)."""
-    cut = F.unix_timestamp(F.lit(cutoff).cast("timestamp"))
+    bucket of ``wm`` in each row's own (dur_s, shift_s)."""
+    cut = F.unix_timestamp(F.lit(wm).cast("timestamp"))
     return (
         F.floor((cut + F.col("shift_s")) / F.col("dur_s")) * F.col("dur_s")
         - F.col("shift_s")
@@ -267,7 +346,7 @@ def _edge_epoch(cutoff):
 
 def gold_checks(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
     """Q1-Q3 (marts_eurusd.yml:1-21) over the materialized gold table."""
-    gold = spark.read.parquet(cfg.gold_path)
+    gold = spark.read.schema(gold_schema(cfg)).parquet(cfg.gold_path)
     tf_names = [tf.name for tf in cfg.timeframes]
     return run_checks(
         {

@@ -32,6 +32,11 @@ Spark-side concurrency notes (why this is safe and what it buys):
   concurrency with an atomic version-slot claim — the loser of a
   commit race rebases on the new snapshot and retries (or raises
   ConcurrentWriteError), never silently dropping a commit.
+- No model may start or drain a stream while another model runs in the
+  same session: ``streaming.candles_stream.stream_shuffle_partitions``
+  sets ``spark.sql.shuffle.partitions`` session-wide for the stream's
+  duration, so a concurrent batch model would plan with the stream's
+  partition count. Run stream models alone, or on a separate session.
 
 Results record per-model wall-clock (started/finished monotonic
 stamps), which is how tests prove two independent models actually

@@ -37,7 +37,7 @@ from ..functions.text import (
     tokens_sql,
 )
 from ..functions.vector import cosine, cosine_sql, dot, dot_sql, norm
-from ..scratch import scratch_dir
+from ..scratch import scratch_dir, stage_hash_chunks
 from ..tables import load
 
 MINHASH_K = 8          # signature length
@@ -4580,32 +4580,12 @@ def streaming_covariance_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     emb_path = f"{sf_dir}/embeddings.parquet"
     schema = spark.read.parquet(emb_path).schema
     src = scratch_dir("fx_cov_src_")
-    # stage three deterministic hash-chunks as separate stream files —
-    # in ONE corpus pass (write.partitionBy on the chunk key) instead
-    # of three filtered scans (r11). Chunk contents identical (same
-    # hash expression); row order within a chunk changes, which the
-    # moment-cell fold is insensitive to (commutative exact-integer
-    # monoid).
+    # stage three deterministic hash-chunks as separate stream files in
+    # ONE corpus pass instead of three filtered scans (r11). Row order
+    # within a chunk is the write's, which the moment-cell fold is
+    # insensitive to (commutative exact-integer monoid).
     emb = load(spark, sf_dir, "embeddings")
-    stage = scratch_dir("fx_cov_stage_")
-    (
-        emb.withColumn(
-            "chunk", (F.col("vec_id") * F.lit(2654435761)) % 3
-        )
-        .repartition(3, "chunk")
-        .write.mode("overwrite")
-        .partitionBy("chunk")
-        .parquet(stage)
-    )
-    for k in range(3):
-        chunk_dir = os.path.join(stage, f"chunk={k}")
-        part = next(
-            f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-        )
-        os.rename(
-            os.path.join(chunk_dir, part),
-            os.path.join(src, f"chunk_{k}.parquet"),
-        )
+    stage_hash_chunks(emb, "vec_id", src)
 
     state = scratch_dir("fx_cov_state_") + "/cells"
 

@@ -38,7 +38,7 @@ from ..functions.text import (
     tokens_sql,
 )
 from ..functions.vector import cosine, cosine_sql, dot, norm
-from ..scratch import scratch_dir
+from ..scratch import scratch_dir, stage_hash_chunks
 from ..tables import load
 
 # ---------------------------------------------------------------------------
@@ -1536,31 +1536,11 @@ def streaming_retrieval_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(docs_path).schema
     src = scratch_dir("fx_rstat_src_")
     docs = load(spark, sf_dir, "documents")
-    # Stage all three hash-chunks in ONE corpus pass (write.partitionBy
-    # on the chunk key) instead of three filtered scans — the staging
-    # loop was 3 full reads of the corpus per call (r11). Chunk
-    # CONTENTS are identical (same hash expression); row order within a
-    # chunk file changes, which the folded state is insensitive to by
-    # construction (commutative exact-integer monoid).
-    stage = scratch_dir("fx_rstat_stage_")
-    (
-        docs.withColumn(
-            "chunk", (F.col("doc_id") * F.lit(2654435761)) % 3
-        )
-        .repartition(3, "chunk")
-        .write.mode("overwrite")
-        .partitionBy("chunk")
-        .parquet(stage)
-    )
-    for k in range(3):
-        chunk_dir = os.path.join(stage, f"chunk={k}")
-        part = next(
-            f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-        )
-        os.rename(
-            os.path.join(chunk_dir, part),
-            os.path.join(src, f"chunk_{k}.parquet"),
-        )
+    # Stage all three hash-chunks in ONE corpus pass instead of three
+    # filtered scans (r11). Row order within a chunk file is the
+    # write's, which the folded state is insensitive to by construction
+    # (commutative exact-integer monoid).
+    stage_hash_chunks(docs, "doc_id", src)
 
     state = scratch_dir("fx_rstat_state_") + "/stats"
 

@@ -32,6 +32,7 @@ from collections.abc import Sequence
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def write_partitioned(
@@ -61,12 +62,17 @@ def write_partitioned(
     w.parquet(path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
     """The parquet table at ``path``, or None when there is none (missing
-    path / empty dir). One schema inference — one Spark job — so callers
-    reuse the frame instead of probing for existence and reading again."""
+    path; an empty dir too when ``schema`` is None). Without ``schema``
+    the read infers it — one Spark job — so callers reuse the frame
+    instead of probing for existence and reading again; a known
+    ``schema`` costs no job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException:
         return None
 
@@ -128,11 +134,14 @@ def merge_upsert(
     replace_table(result, path, partition_cols, sort_within)
 
 
-def high_watermark(spark: SparkSession, path: str, col: str):
-    """P3: max(col) of an existing table, None when absent
+def high_watermark(
+    spark: SparkSession, path: str, col: str, schema: StructType | None = None
+):
+    """P3: max(col) of an existing table, None when absent or empty
     (stg_eurusd.sql:18-21). Collected on the driver so the incremental
-    filter becomes a pushable literal predicate."""
-    table = read_table(spark, path)
+    filter becomes a pushable literal predicate. ``schema`` as in
+    :func:`read_table`."""
+    table = read_table(spark, path, schema)
     return None if table is None else column_max(table, col)
 
 

@@ -79,7 +79,14 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
 def stream_shuffle_partitions(spark: SparkSession, n: int | None):
     """Set spark.sql.shuffle.partitions around a streaming start/drain
     (the value a stateful query freezes into its checkpoint), restoring
-    the session default afterwards so batch queries are untouched."""
+    the session default afterwards so batch queries are untouched.
+
+    Restriction: the conf is session-global, not per thread. A batch
+    model running concurrently in the same session (``pipeline.runner``
+    runs independent models on a thread pool) would plan its shuffles
+    with ``n`` partitions while the block is open, and two overlapping
+    blocks can restore each other's value. So no batch model may run
+    concurrently with a stream start or drain in the same session."""
     if n is None:
         yield
         return

@@ -9,6 +9,7 @@ import shutil
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from forex_data_pipeline_spark.pipeline.medallion import (
     PipelineConfig,
@@ -49,11 +50,10 @@ def make_ticks(start: str, periods: int, dup_every: int = 50) -> pd.DataFrame:
     )
 
 
-def _cfg(tmp_path, name: str, lookback: int = 60) -> PipelineConfig:
+def _cfg(tmp_path, name: str) -> PipelineConfig:
     return PipelineConfig(
         base_dir=f"{tmp_path}/{name}",
         timeframes=TFS,
-        lookback_days=lookback,
         sma_windows=(20, 50),
     )
 
@@ -90,12 +90,12 @@ def test_full_pipeline_green(spark, tmp_path):
 def test_incremental_equals_full_recompute(spark, tmp_path):
     """Three daily batches with overlapping re-fetches (late duplicates)
     must converge to byte-identical silver+gold vs one full run."""
-    # lookback=1 day on an 8-day span forces genuine merge seams: the
-    # cutoff lands mid-candle for every timeframe and the SMA-50 window
-    # reaches far past it — both the per-tf boundary snap and the
-    # existing-gold context path must engage for equality to hold.
-    inc = _cfg(tmp_path, "inc", lookback=1)
-    full = _cfg(tmp_path, "fullr", lookback=1)
+    # gold's watermark edge lands mid-candle for the coarser timeframes
+    # and the SMA-50 window reaches far past it — both the per-tf
+    # boundary snap and the existing-gold context path must engage for
+    # equality to hold.
+    inc = _cfg(tmp_path, "inc")
+    full = _cfg(tmp_path, "fullr")
 
     # batches overlap by half a day — the high-watermark filter (P3)
     # must drop the re-fetched tail, the merge (S9) must never dup.
@@ -164,7 +164,7 @@ def test_gold_rows_before_edge_keep_dbt_updated_at(spark, tmp_path):
     """Gold replaces only the recomputed range: candles before each
     timeframe's merge edge are carried over as stored (same
     dbt_updated_at); every candle at or after it is rewritten."""
-    cfg = _cfg(tmp_path, "edge", lookback=1)
+    cfg = _cfg(tmp_path, "edge")
     run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-01", 288 * 4)))
     cols = ["unique_id", "timeframe", "candle_start", "dbt_updated_at"]
     before = spark.read.parquet(cfg.gold_path).select(*cols).toPandas()
@@ -176,7 +176,7 @@ def test_gold_rows_before_edge_keep_dbt_updated_at(spark, tmp_path):
     def epoch(ts):
         return (ts - pd.Timestamp("1970-01-01")) // pd.Timedelta("1s")
 
-    cut = epoch(before.candle_start.max() - pd.Timedelta(days=cfg.lookback_days))
+    cut = epoch(before.candle_start.max())
     tf = {t.name: t for t in TFS}
     edge = both.timeframe.map(
         lambda n: (cut + tf[n].shift_seconds) // tf[n].seconds * tf[n].seconds
@@ -196,7 +196,7 @@ def test_gold_keeps_rows_of_a_dropped_timeframe(spark, tmp_path):
     MERGE on unique_id did."""
     from dataclasses import replace
 
-    cfg = _cfg(tmp_path, "dropped", lookback=1)
+    cfg = _cfg(tmp_path, "dropped")
     run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-01", 288 * 4)))
     stored = _collect(spark, cfg.gold_path, GOLD_COLS)
     run_batch(
@@ -214,11 +214,12 @@ def test_incremental_symbol_day_job_budget(spark, tmp_path):
     """Spark jobs of one incremental symbol-day, per model, counted by
     job group. The budgets equal today's counts, so a change that adds
     a job (a second read of a table, a count() per check, a key
-    anti-join) fails here. Today: silver reads bronze and silver once
-    each, takes the watermark in one job, then one shuffle and one
-    append; gold reads silver and gold once each, takes the watermark
-    in one job, then three shuffles and one write; checks read gold once
-    and count every check in one action."""
+    anti-join) fails here. Today: silver infers bronze's schema and
+    takes its watermark in one job each, then one shuffle and one
+    append; gold takes its watermark in one job, then two shuffles (the
+    candles, the indicators) and one write; checks count every check in
+    one action of two jobs. Silver and gold are read with their known
+    schemas, so reading them costs no job."""
     from forex_data_pipeline_spark.pipeline.medallion import (
         bronze_ingest,
         gold_checks,
@@ -226,7 +227,7 @@ def test_incremental_symbol_day_job_budget(spark, tmp_path):
         silver_run,
     )
 
-    budget = {"bronze": 1, "silver": 5, "gold": 7, "checks": 3}
+    budget = {"bronze": 1, "silver": 4, "gold": 4, "checks": 2}
     cfg = _cfg(tmp_path, "budget")
     run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-01", 288 * 4)))
     run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-03-05", 288)))
@@ -248,6 +249,85 @@ def test_incremental_symbol_day_job_budget(spark, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         jobs[layer] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert all(jobs[k] <= budget[k] for k in budget), (jobs, budget)
+
+
+def test_gold_lagging_silver_equals_full_recompute(spark, tmp_path):
+    """Gold recomputes from its own watermark, not silver's: silver may
+    take several batches while gold does not run, and the next gold run
+    still equals a full recompute."""
+    from forex_data_pipeline_spark.pipeline.medallion import (
+        bronze_ingest,
+        gold_run,
+        silver_run,
+    )
+
+    inc = _cfg(tmp_path, "lag")
+    full = _cfg(tmp_path, "lagfull")
+    b1 = make_ticks("2024-03-01", 288 * 3)
+    b2 = make_ticks("2024-03-03 12:00", 288 * 2)
+    b3 = make_ticks("2024-03-05", 288 * 2)
+    run_batch(spark, inc, spark.createDataFrame(b1))
+    for b in (b2, b3):  # two silver runs that gold does not see
+        bronze_ingest(inc, spark.createDataFrame(b))
+        silver_run(spark, inc)
+    gold_run(spark, inc)
+
+    run_batch(
+        spark, full,
+        spark.createDataFrame(pd.concat([b1, b2, b3], ignore_index=True)),
+    )
+    pd.testing.assert_frame_equal(
+        _collect(spark, inc.gold_path, GOLD_COLS),
+        _collect(spark, full.gold_path, GOLD_COLS),
+        check_like=True,
+    )
+
+
+@pytest.mark.parametrize("sma_windows", [(20, 50), (5, 10, 30)])
+def test_table_schemas_match_transform_outputs(spark, tmp_path, sma_windows):
+    """The schemas silver and gold are read with are the ones their
+    transforms write, by names and types."""
+    from forex_data_pipeline_spark.pipeline.medallion import (
+        gold_schema,
+        gold_transform,
+        silver_schema,
+        silver_transform,
+    )
+
+    cfg = PipelineConfig(
+        base_dir=str(tmp_path), timeframes=TFS, sma_windows=sma_windows
+    )
+    raw = spark.createDataFrame(make_ticks("2024-03-01", 12)).withColumn(
+        "symbol", F.lit(cfg.symbol)
+    )
+    silver = silver_transform(raw)
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    assert fields(silver.schema) == fields(silver_schema)
+    assert fields(gold_transform(cfg, silver).schema) == fields(gold_schema(cfg))
+
+
+def test_silver_skips_bronze_months_below_watermark(spark, tmp_path):
+    """silver_run reads bronze only from the silver watermark's month
+    on: a bronze partition of an older month is neither listed nor read,
+    so even an unreadable file there leaves the run unaffected."""
+    cfg = _cfg(tmp_path, "prune")
+    run_batch(spark, cfg, spark.createDataFrame(make_ticks("2024-02-27", 288 * 4)))
+    old_month = os.path.join(cfg.bronze_path, "year=2024", "month=2")
+    assert os.path.isdir(old_month)
+    for f in os.listdir(old_month):
+        if f.endswith(".parquet"):
+            with open(os.path.join(old_month, f), "wb") as fh:
+                fh.write(b"not parquet")
+    n_before = spark.read.parquet(cfg.silver_path).count()
+
+    # half of this batch re-delivers stored bars; 144 are new, in March
+    run_batch(
+        spark, cfg, spark.createDataFrame(make_ticks("2024-03-01 12:00", 288))
+    )
+    assert spark.read.parquet(cfg.silver_path).count() == n_before + 144
 
 
 def test_run_checks_counts_every_check(spark):
@@ -405,7 +485,6 @@ def test_concurrent_two_symbols_overlap_and_match_sequential(
             base_dir=f"{tmp_path}/{prefix}/{symbol.replace('/', '_')}",
             symbol=symbol,
             timeframes=TFS,
-            lookback_days=60,
             sma_windows=(20, 50),
         )
         return cfg

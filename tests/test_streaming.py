@@ -3,6 +3,8 @@ in test_correctness via the registered streaming_candles_5m query)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -572,3 +574,27 @@ def test_versioned_stream_merge_restart_is_time_travel_auditable(
     stream3 = spark.readStream.schema(sdf1.schema).parquet(str(src / "*"))
     run_stream_merge_versioned(stream3, tbl, ["k"], ckpt).awaitTermination()
     assert table_versions(tbl) == [0, 1]
+
+
+def test_stage_hash_chunks_one_file_per_chunk_and_empty_chunk_fails(
+    spark, tmp_path
+):
+    """Staging writes every row once, one file per chunk; a chunk no key
+    hashes to fails with a message naming it instead of a bare
+    StopIteration or FileNotFoundError."""
+    from forex_data_pipeline_spark.scratch import stage_hash_chunks
+
+    dest = tmp_path / "src"
+    dest.mkdir()
+    df = spark.range(30).withColumnRenamed("id", "doc_id")
+    stage_hash_chunks(df, "doc_id", str(dest))
+    assert sorted(os.listdir(dest)) == [f"chunk_{k}.parquet" for k in range(3)]
+    assert sorted(
+        r.doc_id for r in spark.read.parquet(str(dest)).collect()
+    ) == list(range(30))
+
+    lone = tmp_path / "lone"
+    lone.mkdir()
+    with pytest.raises(ValueError, match=r"chunk [12] of 3 is empty"):
+        stage_hash_chunks(spark.range(1).withColumnRenamed("id", "doc_id"),
+                          "doc_id", str(lone))
