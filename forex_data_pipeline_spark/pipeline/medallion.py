@@ -25,18 +25,20 @@ watermark, because a candle starts at or before its ticks. So a new row
 lands in a candle starting at or after ``bucket_tf(wm)`` for every
 timeframe ``tf``, and no candle before that edge can change — also when
 gold lags silver by several runs. Gold recomputes candles from that
-edge only and takes the window indicators' history (the max(sma)
-candles before it) from stored gold. The reference instead re-derives
-a fixed 60-day tail from silver (fct:25-29), which only re-produces
-candles that cannot change. The contract rests on silver changing only
-above its watermark: restating silver below it (a backfill of old
-ticks, a corrected bar) requires a gold rebuild — delete the gold
-table and the next ``gold_run`` rebuilds it on its first-run path. The
-same holds for a change of ``timeframes`` or ``sma_windows``.
+edge only and takes the window indicators' history (the last
+max(sma)-1 candles before it, counted in rows) from stored gold. The
+reference instead re-derives a fixed 60-day tail from silver
+(fct:25-29), which only re-produces candles that cannot change. The
+contract rests on silver changing only above its watermark: restating
+silver below it (a backfill of old ticks, a corrected bar) requires a
+gold rebuild — delete the gold table and the next ``gold_run`` rebuilds
+it on its first-run path. The same holds for a change of
+``timeframes`` or ``sma_windows``.
 
 Silver and gold are read with their known schemas (``silver_schema``,
-``gold_schema``), which spares the schema-inference job per read;
-bronze keeps inference, as its columns follow the vendor payload.
+and ``gold_schema``, derived from ``gold_transform``), which spares the
+schema-inference job per read; bronze keeps inference, as its columns
+follow the vendor payload.
 """
 
 from __future__ import annotations
@@ -46,7 +48,7 @@ from collections.abc import Sequence
 from dataclasses import dataclass, field
 from datetime import timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -194,21 +196,19 @@ def _finalize_gold(candles_with_indicators: DataFrame) -> DataFrame:
     ).withColumn("dbt_updated_at", F.current_timestamp())
 
 
-def gold_schema(cfg: PipelineConfig) -> T.StructType:
-    """The columns ``gold_transform`` writes for ``cfg``, in order; the
-    ``sma_N`` columns follow ``cfg.sma_windows``."""
-    string, double = T.StringType(), T.DoubleType()
-    return T.StructType(
-        [T.StructField("symbol", string), T.StructField("timeframe", string),
-         T.StructField("candle_start", T.TimestampNTZType())]
-        + [T.StructField(c, double)
-           for c in ("open_value", "high_value", "low_value", "close_value")]
-        + [T.StructField("n_ticks", T.LongType()),
-           T.StructField("price_diff", double)]
-        + [T.StructField(f"sma_{n}", double) for n in cfg.sma_windows]
-        + [T.StructField("unique_id", string),
-           T.StructField("dbt_updated_at", T.TimestampType())]
-    )
+_GOLD_SCHEMAS: dict[tuple[int, ...], T.StructType] = {}
+
+
+def gold_schema(spark: SparkSession, cfg: PipelineConfig) -> T.StructType:
+    """The columns ``gold_transform`` writes for ``cfg``, taken from its
+    plan over an empty silver frame: no Spark job, but a few hundred ms
+    of analysis, so each is kept by ``sma_windows``, the only setting
+    the columns follow."""
+    key = tuple(cfg.sma_windows)
+    if key not in _GOLD_SCHEMAS:
+        empty = spark.createDataFrame([], silver_schema)
+        _GOLD_SCHEMAS[key] = gold_transform(cfg, empty).schema
+    return _GOLD_SCHEMAS[key]
 
 
 def gold_transform(cfg: PipelineConfig, silver: DataFrame) -> DataFrame:
@@ -252,10 +252,12 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
        is a boundary for every timeframe). The silver scan is the rows
        since ``wm`` plus one coarsest bucket, and is small enough that
        one exploded aggregation beats the two-stage rollup.
-    2. Take indicator *context* (the max(sma) candles before each
-       timeframe's edge) from the EXISTING gold table — those candles
-       are final, so re-reading them is exact and far cheaper than
-       re-aggregating silver.
+    2. Take indicator *context* (the last max(sma)-1 candles before
+       each timeframe's edge, by row count, as the SMA frames count
+       rows: a time range would come up short after a weekend gap)
+       from the EXISTING gold table — those candles are final, so
+       re-reading them is exact and far cheaper than re-aggregating
+       silver.
     3. Indicators are computed over context ∪ recomputed, then only
        rows at/after the edge are written.
 
@@ -263,15 +265,16 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     recomputed``, written through one atomic swap — no key anti-join,
     and the recompute runs once. The one gold read serves the
     watermark, the indicator context and the kept rows. The kept rows
-    keep their stored files' split, so like silver, gold gains a small
-    part file per run; ``sources.writers.compact`` folds them.
+    are coalesced into one file, so after a run gold holds one file
+    plus one per partition of the recompute, however many runs it has
+    seen; its whole table is rewritten each run anyway.
 
     Restating silver below its watermark breaks the argument; it needs
     a gold rebuild: delete the gold table, and this function rebuilds
     it on its first-run path (a full ``gold_transform``).
     """
     silver = spark.read.schema(silver_schema).parquet(cfg.silver_path)
-    gold = read_table(spark, cfg.gold_path, gold_schema(cfg))
+    gold = read_table(spark, cfg.gold_path, gold_schema(spark, cfg))
     wm = None if gold is None else column_max(gold, "candle_start")
     if wm is None:
         merge_upsert(
@@ -280,7 +283,6 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
         )
         return
 
-    sma_max = max(cfg.sma_windows)
     max_dur = max(tf.seconds for tf in cfg.timeframes)
     max_shift = max(tf.shift_seconds for tf in cfg.timeframes)
 
@@ -299,14 +301,25 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     existing = _with_tf_spec(gold, cfg)
     edge = _edge_epoch(wm)
     cs_epoch = F.unix_timestamp(F.col("candle_start").cast("timestamp"))
-    context = existing.filter(
-        (cs_epoch < edge) & (cs_epoch >= edge - sma_max * F.col("dur_s"))
-    ).select(
+    # The SMA frames count rows, and price_diff lags one: the context is
+    # the last max(sma)-1 candles (at least 1) before each edge, however
+    # far back a gap such as a weekend puts them. Ranked newest first
+    # with the recomputed candles tied at rank 1, they are ranks
+    # 2..max(sma); the rank filter runs as a per-partition limit before
+    # the one shuffle, which the indicators' window reuses.
+    context = existing.filter(cs_epoch < edge).select(
         "symbol", "timeframe", "dur_s", "shift_s", "candle_start",
         "open_value", "high_value", "low_value", "close_value", "n_ticks",
     )
-
-    unioned = context.unionByName(recomputed.select(*context.columns))
+    newest_first = Window.partitionBy("symbol", "timeframe").orderBy(
+        F.least(cs_epoch, edge).desc()
+    )
+    unioned = (
+        context.unionByName(recomputed.select(*context.columns))
+        .withColumn("_rank", F.dense_rank().over(newest_first))
+        .filter(F.col("_rank") <= max(*cfg.sma_windows, 2))
+        .drop("_rank")
+    )
     indicated = with_indicators(
         unioned, ["symbol", "timeframe"], "candle_start",
         "close_value", cfg.sma_windows,
@@ -314,7 +327,7 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     to_merge = _finalize_gold(indicated.filter(cs_epoch >= edge))
     kept = existing.filter(F.coalesce(cs_epoch < edge, F.lit(True))).select(
         *gold.columns
-    )
+    ).coalesce(1)
     replace_table(
         kept.unionByName(to_merge.select(*gold.columns)), cfg.gold_path,
         sort_within=("timeframe", "candle_start"),      # cluster_by, fct:11
@@ -346,7 +359,7 @@ def _edge_epoch(wm):
 
 def gold_checks(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
     """Q1-Q3 (marts_eurusd.yml:1-21) over the materialized gold table."""
-    gold = spark.read.schema(gold_schema(cfg)).parquet(cfg.gold_path)
+    gold = spark.read.schema(gold_schema(spark, cfg)).parquet(cfg.gold_path)
     tf_names = [tf.name for tf in cfg.timeframes]
     return run_checks(
         {
