@@ -137,10 +137,9 @@ def multi_timeframe_ohlc(
     exploded one-scan form runs instead (both proven equal to the
     reference's 7-way UNION oracle, and to each other in
     tests/test_edge_cases.py). ``strategy``: "auto" (rollup when
-    aligned), "rollup" (error if misaligned), or "explode" — the
-    single-stage form, marginally lower latency on tiny inputs where
-    the extra rollup stage outweighs the multi-fold shuffle-byte
-    saving.
+    aligned) or "explode" — the single-stage form, marginally lower
+    latency on tiny inputs where the extra rollup stage outweighs the
+    multi-fold shuffle-byte saving.
     """
     base = min(timeframes, key=lambda t: t.seconds)
     aligned = all(
@@ -148,8 +147,6 @@ def multi_timeframe_ohlc(
         and (t.shift_seconds - base.shift_seconds) % base.seconds == 0
         for t in timeframes
     )
-    if strategy == "rollup" and not aligned:
-        raise ValueError("rollup strategy requires base-aligned frames")
     if strategy == "explode":
         aligned = False
     tf_array = F.array(

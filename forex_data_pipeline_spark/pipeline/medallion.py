@@ -151,8 +151,8 @@ def silver_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     table is missing, empty or all-NULL keyed, and NULL keys never
     match. Every run appends its batch as new part files and leaves the
     stored ones untouched. A day therefore costs its batch, not the
-    table, at the price of one more small file per run —
-    ``sources.writers.compact`` folds those back together.
+    table, at the price of more small files: each run adds its part
+    files, and no pipeline path compacts them.
 
     Bronze is read only from the watermark's ``year=/month=`` partition
     on: an older partition holds no row above the watermark, so it is
@@ -317,7 +317,7 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     unioned = (
         context.unionByName(recomputed.select(*context.columns))
         .withColumn("_rank", F.dense_rank().over(newest_first))
-        .filter(F.col("_rank") <= max(*cfg.sma_windows, 2))
+        .filter(F.col("_rank") <= max((*cfg.sma_windows, 2)))
         .drop("_rank")
     )
     indicated = with_indicators(

@@ -547,8 +547,7 @@ def ewma_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _heikin_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw hourly OHLC input shared by the sequential kernel and
-    operators/scan.py::distributed_heikin_ashi (scale path)."""
+    """Raw hourly OHLC input of the heikin_ashi sequential kernel."""
     ev = load(spark, sf_dir, "events")
     return ohlc_window(
         ev, "ts", "value", ["event_type"], duration="1 hour"
@@ -812,8 +811,8 @@ def rolling_correlation_30(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _balance_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signed micro-unit flow input shared by the sequential kernel and
-    operators/scan.py::distributed_clamped_balance (scale path)."""
+    """Signed micro-unit flow input of clamped_running_balance's
+    window-function form."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "error")
     )
@@ -1083,9 +1082,8 @@ def winsorized_mean_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _supertrend_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(event_type, candle_start, c, bu, bl) band input shared by the
-    sequential kernel and operators/scan.py::distributed_supertrend
-    (scale path)."""
+    """(event_type, candle_start, c, bu, bl) band input of the
+    supertrend sequential kernel."""
     base_iv = _hourly_micro(spark, sf_dir)
     w1 = _series_window()
     w14 = _series_window().rowsBetween(-13, 0)

@@ -10,7 +10,8 @@ models/marts/fct_eurusd_timeframes.sql:2-13). Here:
   only the partitions the batch touches, the 100 TB path.
 - append — the medallion's silver: its watermark admits only keys above
   every stored key, so a MERGE would remove nothing. A day adds part
-  files and rewrites none; :func:`compact` folds the small files back.
+  files and rewrites none; nothing compacts them, so silver's file
+  count grows with every run.
 - range replace — the medallion's gold: a run recomputes every stored
   row at or after a known edge and none before it, so ``existing below
   the edge ∪ recomputed`` goes through :func:`replace_table`.

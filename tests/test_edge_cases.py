@@ -98,8 +98,9 @@ def test_merge_upsert_with_empty_new_batch(spark, tmp_path):
 def test_multi_timeframe_strategies_agree(spark, sf_dir):
     """The hierarchical-rollup and exploded-single-pass forms of
     multi_timeframe_ohlc must produce identical candles on the
-    reference frame set (the rollup's exactness condition holds:
-    every coarse boundary lies on a 5m boundary)."""
+    reference frame set ("auto" takes the rollup there, because its
+    exactness condition holds: every coarse boundary lies on a 5m
+    boundary)."""
     from forex_data_pipeline_spark.operators.candles import (
         multi_timeframe_ohlc,
     )
@@ -111,7 +112,7 @@ def test_multi_timeframe_strategies_agree(spark, sf_dir):
         F.col("value").alias("close_price"),
     )
     a = multi_timeframe_ohlc(
-        ev, "observed_at", "close_price", ["symbol"], strategy="rollup"
+        ev, "observed_at", "close_price", ["symbol"], strategy="auto"
     )
     b = multi_timeframe_ohlc(
         ev, "observed_at", "close_price", ["symbol"], strategy="explode"
@@ -129,14 +130,3 @@ def test_global_rank_empty_input(spark):
     assert n == 0
     assert ranked.count() == 0
     assert "rn" in ranked.columns
-
-
-def test_distributed_ema_empty_input(spark):
-    from forex_data_pipeline_spark.operators.scan import distributed_ema
-
-    empty = spark.createDataFrame(
-        [], "event_type string, ts timestamp_ntz, value double"
-    )
-    out = distributed_ema(empty, "event_type", "ts", "value", 0.2)
-    assert out.count() == 0
-    assert set(out.columns) == {"event_type", "ts", "value", "ema"}

@@ -50,11 +50,11 @@ def make_ticks(start: str, periods: int, dup_every: int = 50) -> pd.DataFrame:
     )
 
 
-def _cfg(tmp_path, name: str) -> PipelineConfig:
+def _cfg(tmp_path, name: str, sma_windows=(20, 50)) -> PipelineConfig:
     return PipelineConfig(
         base_dir=f"{tmp_path}/{name}",
         timeframes=TFS,
-        sma_windows=(20, 50),
+        sma_windows=sma_windows,
     )
 
 
@@ -87,15 +87,20 @@ def test_full_pipeline_green(spark, tmp_path):
     assert day1_5m.filter("n_ticks != 1").count() == 0  # dedup held
 
 
-def test_incremental_equals_full_recompute(spark, tmp_path):
+@pytest.mark.parametrize("sma_windows", [(20, 50), ()], ids=["sma20_50", "no_sma"])
+def test_incremental_equals_full_recompute(spark, tmp_path, sma_windows):
     """Three daily batches with overlapping re-fetches (late duplicates)
-    must converge to byte-identical silver+gold vs one full run."""
+    must converge to byte-identical silver+gold vs one full run, also
+    when no SMA is configured (the context then is price_diff's lag)."""
     # gold's watermark edge lands mid-candle for the coarser timeframes
     # and the SMA-50 window reaches far past it — both the per-tf
     # boundary snap and the existing-gold context path must engage for
     # equality to hold.
-    inc = _cfg(tmp_path, "inc")
-    full = _cfg(tmp_path, "fullr")
+    inc = _cfg(tmp_path, "inc", sma_windows)
+    full = _cfg(tmp_path, "fullr", sma_windows)
+    gold_cols = [c for c in GOLD_COLS if not c.startswith("sma_")] + [
+        f"sma_{w}" for w in sma_windows
+    ]
 
     # batches overlap by half a day — the high-watermark filter (P3)
     # must drop the re-fetched tail, the merge (S9) must never dup.
@@ -110,7 +115,7 @@ def test_incremental_equals_full_recompute(spark, tmp_path):
         spark.createDataFrame(pd.concat([b1, b2, b3], ignore_index=True)),
     )
 
-    for path_attr, cols in (("silver_path", SILVER_COLS), ("gold_path", GOLD_COLS)):
+    for path_attr, cols in (("silver_path", SILVER_COLS), ("gold_path", gold_cols)):
         got = _collect(spark, getattr(inc, path_attr), cols)
         exp = _collect(spark, getattr(full, path_attr), cols)
         pd.testing.assert_frame_equal(got, exp, check_like=True)

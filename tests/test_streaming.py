@@ -144,163 +144,6 @@ def test_stream_merge_foreachbatch_idempotent(spark, tmp_path):
     assert got.v.tolist() == [10, 20, 33, 44]  # k=3 upserted by batch 2
 
 
-def _protobuf_available() -> bool:
-    # the transformWithStateInPandas driver worker speaks protobuf to
-    # the JVM; without a working google.protobuf it crashes on init
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="HARD BLOCKER in this container: transformWithStateInPandas' "
-    "Python worker imports generated StateMessage_pb2 modules that need "
-    "the real google.protobuf runtime (absent; no pip installs allowed; "
-    "a shim would be a protobuf reimplementation). The processor's own "
-    "fold logic is covered without Spark plumbing by "
-    "test_transform_with_state_processor_logic_mock_handle below.",
-)
-def test_transform_with_state_running_stats(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4.x stateful API): per-key
-    (count, sum) state must fold across two micro-batches to the same
-    totals as a single batch aggregation over all input."""
-    from forex_data_pipeline_spark.streaming.stateful_v2 import (
-        running_stats,
-    )
-
-    src = tmp_path / "tws_src"
-    src.mkdir()
-    full = pd.DataFrame(
-        {
-            "event_id": range(40),
-            "ts": pd.date_range("2024-01-01", periods=40, freq="1min"),
-            "event_type": ["click", "view"] * 20,
-            "value": [float(10 + (i * 7 % 13)) for i in range(40)],
-        }
-    )
-    sdf = spark.createDataFrame(full).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    sdf.filter("event_id < 20").coalesce(1).write.parquet(str(src / "f1"))
-    sdf.filter("event_id >= 20").coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(sdf.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    # transformWithStateInPandas requires the RocksDB state store
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            running_stats(stream)
-            .writeStream.format("memory")
-            .queryName("tws_t")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-
-    out = spark.table("tws_t").toPandas()
-    # update mode emits one row per key per micro-batch; the final state
-    # per key is the row with the highest n_events
-    final = (
-        out.sort_values("n_events").groupby("event_type").tail(1)
-        .set_index("event_type")
-    )
-    expect = full.groupby("event_type")["value"].agg(["count", "sum"])
-    for k in ("click", "view"):
-        assert final.loc[k, "n_events"] == expect.loc[k, "count"]
-        assert abs(final.loc[k, "total_value"] - expect.loc[k, "sum"]) < 1e-9
-        assert (
-            abs(
-                final.loc[k, "mean_value"]
-                - expect.loc[k, "sum"] / expect.loc[k, "count"]
-            )
-            < 1e-9
-        )
-
-
-def test_transform_with_state_processor_logic_mock_handle():
-    """RunningStatsProcessor fold logic WITHOUT Spark plumbing: a mock
-    ValueState handle stands in for the state store, and the processor
-    is driven across three simulated micro-batches per key. Covers
-    everything the skipped end-to-end test would except Spark's
-    protobuf wire path (see the skipif note above): state init on
-    first batch, cross-batch accumulation, and the emitted row shape
-    matching OUTPUT_SCHEMA."""
-    from forex_data_pipeline_spark.streaming.stateful_v2 import (
-        OUTPUT_SCHEMA,
-        RunningStatsProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, FakeValueState())
-
-    proc = RunningStatsProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-
-    batches = [
-        pd.DataFrame({"value": [1.0, 2.0, 3.0]}),
-        pd.DataFrame({"value": [4.0]}),
-        pd.DataFrame({"value": [5.0, 6.0]}),
-    ]
-    outs = []
-    for b in batches:
-        outs.extend(proc.handleInputRows(("click",), iter([b]), None))
-    proc.close()
-
-    cols = [c.split()[0] for c in OUTPUT_SCHEMA.split(", ")]
-    assert list(outs[-1].columns) == cols
-    # state accumulated across batches, not reset per batch
-    assert outs[0].n_events[0] == 3 and outs[0].total_value[0] == 6.0
-    assert outs[1].n_events[0] == 4 and outs[1].total_value[0] == 10.0
-    assert outs[2].n_events[0] == 6 and outs[2].total_value[0] == 21.0
-    assert outs[2].mean_value[0] == 3.5
-    # a second key folds independently through its own handle state
-    proc2 = RunningStatsProcessor()
-    proc2.init(FakeHandle())
-    (out_v,) = proc2.handleInputRows(
-        ("view",), iter([pd.DataFrame({"value": [7.0]})]), None
-    )
-    assert out_v.n_events[0] == 1 and out_v.total_value[0] == 7.0
-
-
 def test_stream_merge_restart_recovers_from_checkpoint(spark, tmp_path):
     """Effectively-once across RESTARTS: a second streaming query on
     the same checkpoint may REPLAY the last un-committed batch (that is
@@ -463,58 +306,6 @@ def test_streaming_session_windows_merge_and_split(spark, tmp_path):
         [1, "2024-01-01 00:02:00", "2024-01-01 00:02:30", 1],
         [2, "2024-01-01 00:00:10", "2024-01-01 00:00:40", 1],
     ]
-
-
-# ------------------------- fold_stats state transition, driver-free
-
-def test_fold_stats_multi_batch_fold():
-    """The (n, total) moment fold across several simulated micro-batches
-    must equal the batch aggregate over their concatenation — the pure
-    state transition behind RunningStatsProcessor, exercised without a
-    streaming query (the integration path needs protobuf, absent here)."""
-    import pandas as pd
-
-    from forex_data_pipeline_spark.streaming.stateful_v2 import fold_stats
-
-    batches = [
-        [pd.DataFrame({"value": [1.0, 2.5]})],
-        [pd.DataFrame({"value": [4.0]}), pd.DataFrame({"value": [0.5, 2.0]})],
-        [pd.DataFrame({"value": []})],
-    ]
-    state = (0, 0.0)
-    for arrow_batches in batches:
-        state = fold_stats(state, iter(arrow_batches))
-    assert state == (5, 10.0)
-
-
-def test_fold_stats_empty_batch_is_identity():
-    from forex_data_pipeline_spark.streaming.stateful_v2 import fold_stats
-
-    assert fold_stats((7, 3.25), iter([])) == (7, 3.25)
-
-
-def test_fold_stats_first_batch_no_state():
-    """First micro-batch for a key starts from the zero state (the
-    processor's `exists()` miss path)."""
-    import pandas as pd
-
-    from forex_data_pipeline_spark.streaming.stateful_v2 import fold_stats
-
-    n, total = fold_stats((0, 0.0), iter([pd.DataFrame({"value": [3.0]})]))
-    assert (n, total) == (1, 3.0)
-
-
-def test_stats_output_row_mean_and_empty_key():
-    from forex_data_pipeline_spark.streaming.stateful_v2 import (
-        stats_output_row,
-    )
-
-    row = stats_output_row(("click",), 4, 10.0)
-    assert row.iloc[0].tolist() == ["click", 4, 10.0, 2.5]
-    # n=0 (a key whose only batches were empty): mean must be NULL, not
-    # a ZeroDivisionError
-    zero = stats_output_row(("view",), 0, 0.0)
-    assert zero["mean_value"].isna().all()
 
 
 def test_versioned_stream_merge_restart_is_time_travel_auditable(
