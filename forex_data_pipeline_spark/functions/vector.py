@@ -58,22 +58,6 @@ def l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product with the fold unrolled over a KNOWN dimension: plain
-    element_at arithmetic stays inside whole-stage codegen, ~5-10×
-    faster than the interpreted higher-order ``aggregate`` fold when
-    dim is a compile-time constant. Summation order matches ``dot``
-    (left-to-right), so results are bit-identical — oracle hashes are
-    unaffected by swapping one for the other."""
-    out = None
-    for i in range(1, dim + 1):
-        term = F.element_at(a, i).cast("double") * F.element_at(
-            b, i
-        ).cast("double")
-        out = term if out is None else out + term
-    return out
-
-
 def l2sq_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Squared Euclidean distance with the fold unrolled over a KNOWN
     dimension: plain element_at arithmetic stays inside whole-stage

@@ -81,23 +81,6 @@ def bucket(ts: Column, seconds: int | Column, shift_seconds: int | Column = 0) -
     ).cast("timestamp_ntz")
 
 
-def ohlc(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    series_cols: Sequence[str] = (),
-    *,
-    seconds: int = 300,
-    shift_seconds: int = 0,
-) -> DataFrame:
-    """Single-timeframe OHLC candles (SURVEY §2.6 A1-A6).
-
-    Output: series_cols..., candle_start, open/high/low/close, n_ticks.
-    """
-    b = bucket(F.col(ts_col), seconds, shift_seconds).alias("candle_start")
-    return df.groupBy(*series_cols, b).agg(*_ohlc_aggs(ts_col, value_col))
-
-
 def multi_timeframe_ohlc(
     df: DataFrame,
     ts_col: str,
@@ -216,9 +199,11 @@ def ohlc_window(
     *,
     duration: str = "5 minutes",
 ) -> DataFrame:
-    """Same candles via the idiomatic ``F.window`` tumbling window —
-    used by the flagship query and the streaming variant; must agree
-    with :func:`ohlc` (asserted in tests)."""
+    """Single-timeframe OHLC candles (SURVEY §2.6 A1-A6) via the
+    idiomatic ``F.window`` tumbling window — used by the flagship
+    ``candles_5m`` and the indicator queries, whose DuckDB oracles
+    bucket by epoch arithmetic instead. Output: series_cols...,
+    candle_start, open/high/low/close, n_ticks."""
     w = F.window(F.col(ts_col), duration).alias("w")
     out = df.groupBy(*series_cols, w).agg(*_ohlc_aggs(ts_col, value_col))
     return out.select(

@@ -53,32 +53,3 @@ def run_checks(checks: dict[str, DataFrame]) -> dict[str, int]:
     tagged = [df.select(F.lit(name).alias("check")) for name, df in checks.items()]
     counts = dict(reduce(DataFrame.union, tagged).groupBy("check").count().collect())
     return {name: counts.get(name, 0) for name in checks}
-
-
-def observed_quality(
-    df: DataFrame,
-    not_null_cols: Sequence[str] = (),
-    accepted: dict[str, Sequence[str]] | None = None,
-):
-    """Attach Q1-Q3-style metrics to ``df`` via ``Dataset.observe`` —
-    computed DURING whatever action next runs the plan, with no second
-    scan (the violation-DataFrame helpers above each re-read the table;
-    at 100 TB this free-rider form is how a pipeline self-audits every
-    batch). Returns ``(df, observation)``; read ``observation.get``
-    after an action.
-    """
-    from pyspark.sql import Observation
-
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for c in not_null_cols:
-        metrics.append(
-            F.count_if(F.col(c).isNull()).alias(f"nulls_{c}")
-        )
-    for c, values in (accepted or {}).items():
-        metrics.append(
-            F.count_if(
-                ~F.col(c).isin(list(values)) | F.col(c).isNull()
-            ).alias(f"rejected_{c}")
-        )
-    obs = Observation()
-    return df.observe(obs, *metrics), obs

@@ -2,8 +2,8 @@
 keys hurt … salting for skew").
 
 AQE's skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`, on in
-`session.RUNTIME_CONFS`) handles most skew at runtime; these explicit
-operators cover the two cases AQE cannot:
+`session.RUNTIME_CONFS`) splits skewed join partitions at runtime; this
+explicit operator covers the case AQE cannot:
 
 - **salted_aggregate** — a groupBy where one key holds a huge share of
   rows. The partial/final aggregate pair already combines map-side, but
@@ -11,16 +11,10 @@ operators cover the two cases AQE cannot:
   high-cardinality-per-key aggregation state (e.g. collect-like or many
   distinct sub-keys) that reducer is the straggler. Salting splits each
   key into ``salts`` sub-groups (two shuffles of much smaller groups).
-- **salted_broadcast_replicate join** — a shuffle join where the LEFT
-  side's join key is skewed and the right side is too big to broadcast
-  whole but small enough to replicate ``salts`` times: the right side
-  is exploded with a salt column, the left side computes a
-  deterministic salt from a uniform-ish column, and the join key
-  becomes (key, salt) — the hot key now lands on ``salts`` reducers.
 
 Salt derivation is ``pmod(xxhash64(uniform_cols), salts)`` — stable
 across retries (no rand(): a failed task must re-derive the same salt
-or the join silently drops/dups rows on recompute).
+or the shuffle silently drops/dups rows on recompute).
 
 The algebra: SUM/COUNT/MIN/MAX are commutative monoids, so
 ``final(agg(partial per salt))`` ≡ ``agg(everything)`` — the re-agg
@@ -48,46 +42,6 @@ def salt_column(uniform_cols: Sequence[str], salts: int) -> Column:
     """Deterministic salt in [0, salts) from columns that vary within a
     hot key (e.g. the row's unique id) — never rand()."""
     return F.pmod(F.xxhash64(*uniform_cols), F.lit(salts)).alias("_salt")
-
-
-def _parse_size_bytes(v: str | None) -> int:
-    """Parse a Spark size conf value ('10485760', '10MB', '-1')."""
-    if v is None:
-        return -1
-    s = v.strip().lower()
-    units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    for suf in ("kb", "mb", "gb", "k", "m", "g", "b"):
-        if s.endswith(suf):
-            return int(float(s[: -len(suf)]) * units[suf[0]])
-    return int(s)
-
-
-def gated_salt_count(df: DataFrame, salts: int) -> int:
-    """``salts`` if ``df`` is too big to auto-broadcast, else 1.
-
-    Salting a replicate-join pays ``salts``× replication of the build
-    side to spread a hot key's probe work over ``salts`` reducers.
-    But when the build side fits under
-    ``spark.sql.autoBroadcastJoinThreshold``, AQE turns the shuffle
-    join into a broadcast join at runtime — every probe task already
-    sees the whole build relation, so the replication buys nothing
-    and just multiplies the broadcasted bytes. Gate on Catalyst's own
-    size estimate (the same statistic the planner's broadcast decision
-    uses) so the salt engages exactly when the shuffle regime does.
-    Results are salt-count-independent (each candidate pair meets
-    exactly once for any S >= 1), so the gate can never change output.
-    """
-    if salts <= 1:
-        return 1
-    threshold = _parse_size_bytes(
-        df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    )
-    if threshold <= 0:  # auto-broadcast disabled: always shuffle regime
-        return salts
-    est = int(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    return 1 if est <= threshold else salts
 
 
 def salted_aggregate(
@@ -127,28 +81,3 @@ def salted_aggregate(
             for out, (fn, _col) in aggs.items()
         ]
     )
-
-
-def salted_replicate_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    *,
-    salts: int = 8,
-    left_uniform_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Equi-join resilient to hot LEFT keys: replicate the right side
-    ``salts``× with an exploded salt column, derive the matching salt on
-    the left deterministically, and join on (on…, _salt). Row-for-row
-    identical to ``left.join(right, on)`` — every left row still meets
-    exactly one replica of its right match."""
-    on = list(on)
-    left_uniform_cols = list(left_uniform_cols or left.columns)
-    salted_left = left.withColumn(
-        "_salt", salt_column(left_uniform_cols, salts)
-    )
-    salted_right = right.withColumn(
-        "_salt",
-        F.explode(F.array(*[F.lit(i).cast("bigint") for i in range(salts)])),
-    )
-    return salted_left.join(salted_right, [*on, "_salt"]).drop("_salt")

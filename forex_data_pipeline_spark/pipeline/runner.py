@@ -21,17 +21,13 @@ Spark-side concurrency notes (why this is safe and what it buys):
   the default FIFO scheduler concurrent jobs still interleave whenever
   the head job leaves free task slots; the pool property is simply
   inert, so the runner works unchanged on any session.
-- Parallelism is for INDEPENDENT models only. Two models that MERGE
-  into the same table path via plain ``merge_versioned`` are not
-  independent even without a ref() edge — that path is
-  last-writer-wins at the directory level — so such writers must be
-  linked by an edge, as in dbt (where they'd be the same model).
-  ``validate`` enforces declared-edge acyclicity. Writers that CANNOT
-  be serialized by the DAG should use
-  ``sources.writers.merge_versioned_cas`` instead: optimistic
-  concurrency with an atomic version-slot claim — the loser of a
-  commit race rebases on the new snapshot and retries (or raises
-  ConcurrentWriteError), never silently dropping a commit.
+- Parallelism is for INDEPENDENT models only. Two models that write
+  the same table path are not independent even without a ref() edge —
+  every writer here is last-writer-wins at the directory level — so
+  such writers must be serialized by a DAG edge, as in dbt (where
+  they'd be the same model). ``validate`` enforces declared-edge
+  acyclicity, and ``run_batch_concurrent`` refuses symbols that share
+  a ``base_dir``.
 - No model may start or drain a stream while another model runs in the
   same session: ``streaming.candles_stream.stream_shuffle_partitions``
   sets ``spark.sql.shuffle.partitions`` session-wide for the stream's

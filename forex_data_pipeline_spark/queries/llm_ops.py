@@ -1207,8 +1207,8 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 50k docs: 5.7 vs 8.6); above it candidates ~ Sigma(bucket^2)
     # explode past what any JVM per-candidate evaluation sustains
     # (sf10/500k docs: join 1524 s vs kernel 181 s). Same size-gating
-    # discipline as _TRI_BCAST_MAX_NODES / gated_salt_count; both
-    # branches are value-hash-identical to the oracle.
+    # discipline as _TRI_BCAST_MAX_NODES; both branches are
+    # value-hash-identical to the oracle.
     n_docs = fp.count()
     if n_docs < _SH_KERNEL_MIN_DOCS:
         e0 = fp.select(
@@ -1863,10 +1863,10 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so each unordered candidate pair meets in exactly one group and
     # the big block's n^2 work spreads over C(C+1)/2 tasks. Arrow
     # volume grows by (C+1)/2 x — linear in n, still never candidates.
-    # size-gated like gated_salt_count: below ~50k vectors the largest
-    # block's GEMM is sub-second and the (C+1)/2x Arrow replication is
-    # pure overhead (measured 2x at sf1), so chunking engages only at
-    # the scale where the straggler actually binds (C=1 degenerates to
+    # size-gated: below ~50k vectors the largest block's GEMM is
+    # sub-second and the (C+1)/2x Arrow replication is pure overhead
+    # (measured 2x at sf1), so chunking engages only at the scale
+    # where the straggler actually binds (C=1 degenerates to
     # one (0,0) pair group per block — the unchunked plan).
     _GEMM_CHUNKS = 4 if emb.count() >= 50_000 else 1
     chunk_pairs = spark.createDataFrame(
@@ -2783,7 +2783,6 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: from the signature's 0..7, so bloom bits and minhash values are
 #: independent.
 _BLOOM_M_LOGS = tuple(range(20, 27))
-_BLOOM_HASHES = (8, 9)
 #: 32-bit lane mask within a packed word: 1 << (bit % 32), as BIGINT
 _BLOOM_LANE = "shiftleft(CAST(1 AS BIGINT), CAST({b} % 32 AS INT))"
 
@@ -4647,8 +4646,8 @@ def streaming_covariance_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     FROM embeddings
     """,
     doc="mapInArrow kernel (the remaining Arrow UDF shape after "
-    "pandas_udf / applyInPandas / mapInPandas / applyInPandasWithState "
-    "/ UDTF): per-vector squared L2 norm in exact integer milli^2 "
+    "pandas_udf / applyInPandas / mapInPandas / UDTF): per-vector "
+    "squared L2 norm in exact integer milli^2 "
     "units, computed on raw pyarrow RecordBatches - list offsets "
     "sliced zero-copy into one numpy int64 vector op per batch, no "
     "pandas materialization at all (the lowest-overhead Python hook "
@@ -4709,7 +4708,7 @@ def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="applyInArrow grouped-map kernel (completing the Arrow shape "
     "matrix: scalar/grouped-agg pandas_udf, applyInPandas, "
-    "mapInPandas, applyInPandasWithState, UDTF, mapInArrow, and now "
+    "mapInPandas, UDTF, mapInArrow, and now "
     "grouped applyInArrow): per-source exact integer moment stats of "
     "document length (n, sum, sum-of-squares, min, max) computed "
     "directly on the group's RecordBatches with numpy int64 - no "

@@ -1366,9 +1366,6 @@ def ranker_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental maintenance of the retrieval collection statistics
 # ---------------------------------------------------------------------------
 
-_RSTAT_SPLIT_FRAC = 0.8  # base = first 80% of doc_ids, delta = rest
-
-
 @register(
     "incremental_retrieval_stats",
     oracle=f"""

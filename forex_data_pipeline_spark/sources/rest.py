@@ -41,10 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 Transport = Callable[[str, str, str, str, int], pd.DataFrame]
 
 
-class RateLimitError(RuntimeError):
-    """Raised by transports when the vendor throttles the call."""
-
-
 def is_rate_limit_error(exc: BaseException) -> bool:
     """The reference's error taxonomy (extract_forex.py:98-100): retry
     only when the message looks throttle-shaped; anything else is a

@@ -31,7 +31,7 @@ import uuid
 from collections.abc import Sequence
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -153,33 +153,6 @@ def column_max(table: DataFrame, col: str):
     return None if row is None else row[0]
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    buckets: int,
-    key_cols: Sequence[str],
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Bucketed, optionally sorted, managed parquet table — the
-    co-located-join layout: two tables bucketed by the same key into the
-    same bucket count join with NO shuffle (each bucket pair meets
-    locally), and sortBy pre-sorts within buckets so sort-merge join
-    skips its sort too. This is the 100 TB answer for a join both of
-    whose sides are too big to broadcast and which is executed
-    repeatedly (fact-to-fact); the write pays the shuffle once.
-
-    The reference's ``cluster_by=['timeframe']``
-    (/root/reference/models/marts/fct_eurusd_timeframes.sql:11) is the
-    warehouse cousin of this layout.
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        buckets, *key_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
 def compact(
     spark: SparkSession,
     path: str,
@@ -205,100 +178,6 @@ def compact(
                  if partition_cols else df.coalesce(target_files))
     replace_table(compacted, path, partition_cols)
     return n
-
-
-def delete_rows(
-    spark: SparkSession,
-    path: str,
-    predicate: Column,
-    *,
-    partition_cols: Sequence[str] = (),
-) -> int:
-    """DELETE WHERE for a parquet table: rewrite ``path`` keeping only
-    rows NOT matching ``predicate``, atomically via
-    :func:`replace_table`. Returns rows deleted.
-
-    The retention / right-to-erasure half of the CRUD surface the
-    MERGE writer (upsert) doesn't cover. On a partitioned table a
-    predicate on the partition column prunes the rewrite to affected
-    partitions at scan time (partition pruning makes untouched
-    partitions a metadata-only copy); with Delta/Iceberg the same call
-    maps to a native DELETE."""
-    df = spark.read.parquet(path)
-    keep = df.filter(~predicate)
-    n_deleted = df.count() - keep.count()
-    replace_table(keep, path, partition_cols)
-    return n_deleted
-
-
-def write_with_expectations(
-    df: DataFrame,
-    path: str,
-    expectations: "dict[str, Column]",
-    *,
-    quarantine_path: "str | None" = None,
-    partition_cols: "Sequence[str]" = (),
-) -> "DataFrame":
-    """Constraint-gated write (dbt test severity=error, Delta-style
-    CHECK constraints): rows satisfying every expectation land in
-    ``path``; violators are quarantined (with a per-rule flag column
-    each) instead of poisoning the table or failing the job. Returns
-    the audit frame (rule → violation count, plus the pass count under
-    rule '__passed').
-
-    One scan feeds both writes: the rule columns are computed once,
-    the pass/fail split is two filters over the same plan (Spark scans
-    twice but map-side only — no shuffle), and the audit aggregates
-    the tiny flag columns. Per-rule flags in the quarantine output
-    make triage queryable ('which rule killed this row').
-    """
-    if not expectations:
-        # any_viol below would stay None and ~None is a TypeError at
-        # plan build; an expectation-gated write with no expectations
-        # is a caller bug, not an all-pass write — fail loudly.
-        raise ValueError("expectations must be non-empty")
-
-    # SQL three-valued logic: a NULL expectation result is a VIOLATION
-    # (the row can't be shown valid) — coalescing here guarantees every
-    # row lands in exactly one of target/quarantine; without it,
-    # NULL-condition rows would satisfy neither filter and vanish.
-    flagged = df.select(
-        "*",
-        *[
-            (~F.coalesce(cond, F.lit(False))).alias(f"__viol_{name}")
-            for name, cond in expectations.items()
-        ],
-    )
-    any_viol = None
-    for name in expectations:
-        c = F.col(f"__viol_{name}")
-        any_viol = c if any_viol is None else (any_viol | c)
-
-    passed = flagged.filter(~any_viol).drop(
-        *[f"__viol_{n}" for n in expectations]
-    )
-    write_partitioned(passed, path, partition_cols=partition_cols)
-    if quarantine_path is not None:
-        flagged.filter(any_viol).write.mode("overwrite").parquet(
-            quarantine_path
-        )
-
-    spark = df.sparkSession
-    # ONE aggregation pass for the whole audit (per-rule sums + total +
-    # any-violation count ride the same scan), unpivoted driver-side
-    counts = flagged.agg(
-        *[
-            F.sum(F.col(f"__viol_{name}").cast("long")).alias(name)
-            for name in expectations
-        ],
-        F.sum(any_viol.cast("long")).alias("__any_viol"),
-        F.count(F.lit(1)).alias("__total"),
-    ).collect()[0]
-    rows = [(name, int(counts[name] or 0)) for name in expectations]
-    rows.append(
-        ("__passed", int(counts["__total"]) - int(counts["__any_viol"] or 0))
-    )
-    return spark.createDataFrame(rows, "rule string, violations bigint")
 
 
 # ---------------------------------------------------------- time travel
@@ -335,12 +214,11 @@ def _write_filelist(version_dir: str) -> None:
     """Record the version's data files inside the version dir BEFORE it
     is published (the transaction-log analogue of Delta listing data
     files in the commit json). Readers resolve files from this list,
-    never from a directory listing — a directory listing raced against
-    a concurrent VACUUM's rmtree can return a SUBSET of part files and
-    silently serve torn (partial) data, the exact failure the
-    stress test in tests/test_merge.py caught: with an explicit file
-    list, a vacuumed file fails the scan (FileNotFound → clean job
-    error), it can never shrink the scan."""
+    never from a directory listing: a listing taken while the directory
+    is being deleted or rewritten can return a SUBSET of the part files,
+    and a scan of it serves torn data without an error. With an
+    explicit list a missing file fails the scan (FileNotFoundError); it
+    can never shrink it."""
     parts = sorted(
         f for f in os.listdir(version_dir)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
@@ -380,25 +258,18 @@ def read_version(
     latest via the manifest.
 
     The scan is built from the version's ``_filelist`` (written at
-    commit time), NOT a directory listing: listing a version dir that
-    a concurrent VACUUM is rmtree-ing can return a subset of part
-    files and silently serve torn data (caught by the r9 stress test
-    in tests/test_merge.py). With explicit paths every vacuumed file
-    fails the scan cleanly (FileNotFound), and a fully-vacuumed
-    version fails at filelist-open — the reader contract is committed
-    snapshot or clean error, never partial. There is deliberately NO
-    directory-scan fallback for a missing filelist (see the inline
-    comment): every ledger writer commits one, so its absence means a
-    vacuum is (or was) deleting this version."""
+    commit time, see :func:`_write_filelist`), NOT a directory listing,
+    so the reader contract is the committed snapshot or a clean error,
+    never a partial scan. A missing filelist is an error too: every
+    ledger writer commits one, so its absence means the version is
+    being (or was) deleted."""
     v = latest_version(table_dir) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
     vdir = os.path.join(table_dir, f"v={v}")
-    # No directory-listing fallback when the filelist is gone: every
-    # ledger writer commits one, so its absence means a VACUUM is (or
-    # was) removing this version — rmtree deletes the filelist and the
-    # part files in arbitrary order, and listing the half-deleted dir
-    # would serve a silent subset. Missing filelist → clean error.
+    # No directory-listing fallback when the filelist is gone: rmtree
+    # deletes the filelist and the part files in arbitrary order, and
+    # listing the half-deleted dir would serve a silent subset.
     with open(os.path.join(vdir, _FILELIST)) as f:
         parts = [ln for ln in f.read().splitlines() if ln]
     if not parts:  # empty-table version: scan the (empty-schema) dir
@@ -423,195 +294,3 @@ def merge_versioned(
     remaining = base.join(updates.select(*keys).distinct(), list(keys), "left_anti")
     merged = remaining.unionByName(updates)
     return write_version(merged, table_dir)
-
-
-class ConcurrentWriteError(RuntimeError):
-    """Another writer claimed the same version slot (or the table moved
-    past the expected version). The caller's merge was computed against
-    a stale snapshot — re-read and retry, Delta-style."""
-
-
-def _flip_latest_monotone(table_dir: str, nxt: int) -> None:
-    """Advance the manifest to ``nxt`` if it is ahead of the committed
-    latest. The read-compare-replace runs under a short O_EXCL lock
-    file so two winners (e.g. a recovering writer publishing v=5 while
-    a newer one publishes v=6) can never interleave into a manifest
-    REGRESSION; the data directories themselves are immutable once
-    claimed, so the lock only ever guards this microsecond flip."""
-    import time as _time
-
-    lock = os.path.join(table_dir, ".manifest.lock")
-    fd = None
-    for _ in range(2000):  # ~20 s worst case; flips take microseconds
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            _time.sleep(0.01)
-    if fd is None:
-        raise ConcurrentWriteError(
-            f"manifest lock {lock} is stuck; a writer crashed mid-flip"
-        )
-    try:
-        cur = latest_version(table_dir)
-        if cur is None or nxt > cur:
-            tmp = os.path.join(
-                table_dir, f".{_LATEST}.{uuid.uuid4().hex}"
-            )
-            with open(tmp, "w") as f:
-                f.write(str(nxt))
-            os.replace(tmp, os.path.join(table_dir, _LATEST))
-    finally:
-        os.close(fd)
-        os.unlink(lock)
-
-
-def write_version_cas(
-    df: DataFrame,
-    table_dir: str,
-    expected_version: "int | None | object" = ...,
-) -> int:
-    """Optimistic-concurrency commit for the copy-on-write ledger
-    (closes the ``pipeline/runner.py`` "table-sharing is the caller's
-    contract" gap: with plain ``write_version`` two concurrent writers
-    are last-writer-wins at the directory level and one commit is
-    silently lost).
-
-    Protocol, mirroring Delta's put-if-absent commit on a filesystem
-    with atomic rename:
-
-    1. resolve the committed latest; if ``expected_version`` was given
-       and no longer matches, fail fast with ConcurrentWriteError
-       (the caller's upsert was computed against a stale base);
-    2. write the data to a uniquely-named staging dir (crash-safe:
-       an abandoned staging dir is invisible and swept by
-       scratch hygiene, never half-visible);
-    3. CLAIM the version slot with one atomic ``os.rename(staging,
-       v=<n>)`` — POSIX rename onto an existing non-empty directory
-       fails, so exactly one concurrent writer wins the slot and the
-       LOSER RAISES ConcurrentWriteError instead of clobbering;
-    4. publish via a monotone manifest flip (see
-       ``_flip_latest_monotone``).
-
-    Crash window: a writer that dies between 3 and 4 leaves a claimed,
-    complete, unpublished ``v=<n>``; the next successful writer's flip
-    (a higher n) publishes past it, and ``vacuum_versions`` leaves
-    dirs newer than the manifest alone, so nothing is lost or
-    corrupted — the orphan is simply never the committed latest.
-    Readers (``read_version``) resolve the manifest first and never
-    see any of this."""
-    os.makedirs(table_dir, exist_ok=True)
-    cur = latest_version(table_dir)
-    if expected_version is not ... and cur != expected_version:
-        raise ConcurrentWriteError(
-            f"expected committed version {expected_version} but found "
-            f"{cur}; recompute against the new snapshot and retry"
-        )
-    if expected_version is not ...:
-        # serializability pin: the slot MUST be expected+1 — skipping
-        # past an occupied slot would commit a merge computed against
-        # a base that slot superseded
-        nxt = 0 if expected_version is None else expected_version + 1
-    else:
-        nxt = max(
-            [cur if cur is not None else -1, *table_versions(table_dir)]
-        ) + 1
-    staging = os.path.join(table_dir, f".staging-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
-    _write_filelist(staging)  # travels into v=<n> with the rename
-    try:
-        os.rename(staging, os.path.join(table_dir, f"v={nxt}"))
-    except OSError as exc:
-        shutil.rmtree(staging, ignore_errors=True)
-        # Commit recovery (the Delta log-replay analogue): a claimed
-        # slot is always a COMPLETE write (the rename happens after
-        # staging finishes, _SUCCESS included), so the occupant is a
-        # durable commit whose writer either already flipped the
-        # manifest (flip below is a no-op) or crashed pre-flip (we
-        # publish it). Either way the caller rebases onto it — an
-        # orphaned slot can never wedge the table.
-        if os.path.isdir(os.path.join(table_dir, f"v={nxt}")):
-            _flip_latest_monotone(table_dir, nxt)
-        raise ConcurrentWriteError(
-            f"version slot v={nxt} in {table_dir} was claimed by a "
-            f"concurrent writer"
-        ) from exc
-    _flip_latest_monotone(table_dir, nxt)
-    return nxt
-
-
-def merge_versioned_cas(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    keys: "Sequence[str]",
-    max_retries: int = 5,
-) -> int:
-    """Serializable MERGE: the upsert is computed against the committed
-    latest and committed with ``write_version_cas(expected_version=
-    that latest)``. If another writer commits in between, the stale
-    merge is thrown away and recomputed against the NEW snapshot —
-    optimistic concurrency with rebase-and-retry, so N concurrent
-    mergers all land (in some serial order) instead of last-writer-
-    wins dropping N-1 of them."""
-    last_exc: "ConcurrentWriteError | None" = None
-    for _ in range(max_retries):
-        cur = latest_version(table_dir)
-        if cur is None:
-            try:
-                return write_version_cas(
-                    updates, table_dir, expected_version=None
-                )
-            except ConcurrentWriteError as exc:
-                last_exc = exc
-                continue
-        base = read_version(spark, table_dir, cur)
-        remaining = base.join(
-            updates.select(*keys).distinct(), list(keys), "left_anti"
-        )
-        merged = remaining.unionByName(updates)
-        try:
-            return write_version_cas(
-                merged, table_dir, expected_version=cur
-            )
-        except ConcurrentWriteError as exc:
-            last_exc = exc
-            continue
-    raise ConcurrentWriteError(
-        f"merge into {table_dir} lost the commit race {max_retries} "
-        f"times"
-    ) from last_exc
-
-
-def vacuum_versions(table_dir: str, keep_last: int = 2) -> "list[int]":
-    """Retention for the copy-on-write ledger (the VACUUM half of time
-    travel): drop all but the newest ``keep_last`` committed versions,
-    returning the versions removed. Without this a streaming versioned
-    sink accumulates one full snapshot per micro-batch forever — at
-    scale the ledger's storage is bounded by ``keep_last`` x table
-    size, the same knob as Delta's retention window.
-
-    The committed latest is never removable (``keep_last`` >= 1
-    enforced); STALE orphan dirs (a crashed writer below the committed
-    latest) are swept too, but dirs NEWER than the manifest are left
-    alone — one may be an in-flight write that has not flipped the
-    manifest yet. The manifest always points at a surviving version
-    throughout, so a reader resolving it never loses its snapshot to
-    this call's ordering."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    cur = latest_version(table_dir)
-    if cur is None:
-        return []
-    committed = [v for v in table_versions(table_dir) if v <= cur]
-    keep = set(committed[-keep_last:]) | {cur}
-    removed = []
-    for d in os.listdir(table_dir):
-        if not d.startswith("v="):
-            continue
-        v = int(d.split("=", 1)[1])
-        if v in keep or v > cur:
-            continue
-        shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
-        removed.append(v)
-    return sorted(removed)

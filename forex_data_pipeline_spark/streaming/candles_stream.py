@@ -185,41 +185,6 @@ def streaming_dedup(
     )
 
 
-def run_stream_merge(
-    stream_df: DataFrame,
-    path: str,
-    keys: "Sequence[str]",
-    checkpoint_dir: str,
-    *,
-    partition_cols: "Sequence[str]" = (),
-) -> StreamingQuery:
-    """Stream → incremental MERGE sink via foreachBatch: every
-    micro-batch upserts into the parquet table on ``keys`` — the
-    streaming twin of the reference's dbt incremental merge
-    (stg_eurusd.sql:2-11). foreachBatch gives the batch writer's full
-    power (anti-join + union, dynamic partition overwrite) inside a
-    stream; the checkpoint provides exactly-once batch tracking, and
-    the MERGE keys make replayed batches idempotent — together,
-    effectively-once end to end."""
-    from ..sources.writers import merge_upsert
-
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        merge_upsert(
-            batch_df.sparkSession,
-            path,
-            batch_df,
-            keys,
-            partition_cols=partition_cols,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def run_stream_merge_versioned(
     stream_df: DataFrame,
     table_dir: str,
@@ -241,8 +206,7 @@ def run_stream_merge_versioned(
 
     Scale: each version rewrites the current snapshot (copy-on-write
     without a transaction log), so this sink fits dimension/gold-sized
-    tables; the raw-fact path stays ``run_stream_merge`` whose dynamic
-    partition overwrite touches only affected day partitions."""
+    tables, not a raw-fact stream whose history grows without bound."""
     from ..sources.writers import merge_versioned
 
     def _commit(batch_df: DataFrame, _batch_id: int) -> None:

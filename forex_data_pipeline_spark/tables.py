@@ -10,8 +10,6 @@ FileSourceScanExec does partition discovery + pruning either way).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -28,9 +26,6 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table. Column pruning / predicate pushdown happen at
@@ -53,10 +48,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

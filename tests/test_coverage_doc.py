@@ -1,11 +1,15 @@
-"""COVERAGE.md is the judge-facing operator inventory — every q:`name`
+"""COVERAGE.md is the operator inventory — every q:`name`
 it cites must exist in the registry, and every registered query must be
-documented there; every module and test it cites must exist."""
+documented there; every module, test and function it cites must exist.
+Every engine function and class must have a caller outside ``tests/``."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
+
+PACKAGE = "forex_data_pipeline_spark"
 
 
 def test_coverage_doc_matches_registry():
@@ -21,10 +25,11 @@ def test_coverage_doc_matches_registry():
 
 
 def test_coverage_doc_paths_exist():
-    """Every package module and test COVERAGE.md cites must exist, so a
-    row cannot outlive the code it points at. Reference paths such as
-    ``scripts/extract_forex.py`` are out of scope: they name files of
-    the reference pipeline, not of this repo."""
+    """Every package module, test and function COVERAGE.md cites must
+    exist, so a row cannot outlive the code it points at. Reference
+    paths such as ``scripts/extract_forex.py`` are out of scope: they
+    name files of the reference pipeline, not of this repo, and no row
+    follows one with a function name."""
     doc = open("COVERAGE.md").read()
     modules = set(
         re.findall(
@@ -43,6 +48,15 @@ def test_coverage_doc_paths_exist():
 
     tests = set(re.findall(r"(?<![\w/])(tests/\w+\.py)(?:::(\w+))?", doc))
     assert tests, "no test path found in COVERAGE.md"
+    # a bare `::name` continues the last tests/x.py cited on its line
+    for line in doc.splitlines():
+        last = None
+        for m in re.finditer(r"`(tests/\w+\.py)::\w+`|`::(\w+)`", line):
+            if m.group(1):
+                last = m.group(1)
+            else:
+                assert last, f"`::{m.group(2)}` follows no test path: {line}"
+                tests.add((last, m.group(2)))
     stale = []
     for path, name in sorted(tests):
         if not os.path.isfile(path):
@@ -52,3 +66,148 @@ def test_coverage_doc_paths_exist():
         ):
             stale.append(f"{path}::{name}")
     assert stale == [], f"COVERAGE cites missing tests: {stale}"
+
+    # `module.py` `a`/`b`: each name is a top-level or method def there
+    cited = re.findall(
+        rf"`(?:{PACKAGE}/)?((?:\w+/)?\w+\.py)` ((?:`\w+`/)*`\w+`)", doc
+    )
+    assert cited, "no `module.py` `name` citation found in COVERAGE.md"
+    undefined = []
+    for module, names in sorted(set(cited)):
+        path = os.path.join(PACKAGE, module)
+        if not os.path.isfile(path):
+            undefined.append(module)
+            continue
+        defined = set()
+        for stmt in ast.parse(open(path).read(), path).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                defined.add(stmt.name)
+            if isinstance(stmt, ast.ClassDef):
+                defined |= {
+                    m.name for m in stmt.body
+                    if isinstance(m, ast.FunctionDef)
+                }
+        undefined += [
+            f"{module} {name}" for name in re.findall(r"`(\w+)`", names)
+            if name not in defined
+        ]
+    assert undefined == [], f"COVERAGE cites undefined names: {undefined}"
+
+
+# Top-level defs kept although no product code reaches them. Each is the
+# plain reference form a test compares an optimized form against.
+NO_PRODUCT_CALLER = {
+    "l2sq": "functions/vector.py: the higher-order-fold squared L2 that "
+    "tests/test_properties.py checks l2sq_unrolled against, bit for bit",
+    "_lsh_signature_col": "queries/llm_ops.py: the inline LSH signature "
+    "that tests/test_opt_r10.py checks the hoisted _lsh_sig_table against",
+}
+
+_IDENT = re.compile(r"[A-Za-z_]\w*\Z")
+
+
+def _referenced(node: ast.AST) -> set[str]:
+    """Every name ``node``'s subtree refers to: names, attributes, imports
+    and identifier-shaped strings (``setattr``/``getattr`` by name)."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if _IDENT.match(n.value):
+                out.add(n.value)
+    return out
+
+
+def _import_time(stmt: ast.stmt) -> set[str]:
+    """Names a module-level statement evaluates on import: all of it,
+    except a def's or class's body (only its decorators, defaults and
+    bases run)."""
+    if isinstance(stmt, ast.FunctionDef):
+        args = stmt.args
+        evaluated = [*stmt.decorator_list, *args.defaults,
+                     *(d for d in args.kw_defaults if d is not None)]
+    elif isinstance(stmt, ast.ClassDef):
+        evaluated = [*stmt.decorator_list, *stmt.bases, *stmt.keywords]
+    else:
+        evaluated = [stmt]
+    return set().union(*map(_referenced, evaluated))
+
+
+def _is_registered(stmt: ast.stmt) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+        and d.func.id == "register"
+        for d in getattr(stmt, "decorator_list", ())
+    )
+
+
+def _product_files() -> list[str]:
+    """Every non-test ``.py`` outside the package: the CLIs,
+    ``__spark_entry__.py`` and the benchmark harness."""
+    found = []
+    for root, dirs, files in os.walk("."):
+        dirs[:] = sorted(
+            d for d in dirs
+            if not d.startswith((".", "__")) and d not in ("tests", PACKAGE)
+        )
+        found += [os.path.join(root, f) for f in sorted(files)
+                  if f.endswith(".py")]
+    return found
+
+
+def _closure(roots: set[str], defs: dict) -> set[str]:
+    seen: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for _, node in defs.get(name, ()):
+            todo += _referenced(node) - seen
+    return seen
+
+
+def test_every_engine_def_has_a_product_caller():
+    """Every top-level function and class of the package is reached from
+    a product root: a registered query, module-level code of the package
+    (import-time wiring), or any non-test script outside it. Reach
+    follows references by name through reached bodies, so a def that
+    only tests call fails here. Delete it with its tests, or give it a
+    product caller; ``NO_PRODUCT_CALLER`` lists the few kept as test
+    references, each with its reason."""
+    defs: dict[str, list] = {}
+    roots: set[str] = set()
+    for root, _, files in os.walk(PACKAGE):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            for stmt in ast.parse(open(path).read(), path).body:
+                roots |= _import_time(stmt)
+                if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                    defs.setdefault(stmt.name, []).append((path, stmt))
+                    if _is_registered(stmt):
+                        roots.add(stmt.name)
+    for path in _product_files():
+        roots |= _referenced(ast.parse(open(path).read(), path))
+
+    reached = _closure(roots, defs)
+    stale = sorted(set(NO_PRODUCT_CALLER) & reached)
+    assert stale == [], f"exceptions that now have a product caller: {stale}"
+    reached = _closure(roots | set(NO_PRODUCT_CALLER), defs)
+    unreached = sorted(
+        f"{path}:{node.lineno} {name}"
+        for name, nodes in defs.items() if name not in reached
+        for path, node in nodes
+    )
+    assert unreached == [], (
+        f"{len(unreached)} engine defs have no product caller (besides "
+        f"the {len(NO_PRODUCT_CALLER)} in NO_PRODUCT_CALLER):\n"
+        + "\n".join(unreached)
+    )

@@ -436,25 +436,6 @@ def test_run_daily_from_rest_source(spark, tmp_path):
     assert calls["n"] == 2  # one throttle + one success
 
 
-def test_observed_quality_metrics_piggyback_on_action(spark, sf_dir):
-    """observe() metrics must match the standalone violation queries
-    while costing zero extra scans (they ride the count() action)."""
-    from forex_data_pipeline_spark.operators.quality import observed_quality
-    from forex_data_pipeline_spark.tables import load
-
-    od = load(spark, sf_dir, "orders")
-    observed, obs = observed_quality(
-        od,
-        not_null_cols=("o_custkey",),
-        accepted={"o_orderstatus": ("O", "F", "P")},
-    )
-    n = observed.count()
-    got = obs.get
-    assert got["n_rows"] == n
-    assert got["nulls_o_custkey"] == 0
-    assert got["rejected_o_orderstatus"] == 0
-
-
 # ---------------------------------------------------------------------------
 # Round 6: concurrent model runner (dbt `threads: 4` parity)
 # ---------------------------------------------------------------------------

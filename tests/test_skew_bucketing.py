@@ -1,19 +1,14 @@
-"""Skew salting and bucketed co-located joins: results must be identical
-to the unsalted/unbucketed plans, and the bucketed join must run without
-a shuffle."""
+"""Skew salting and table layout: the salted aggregate must equal the
+plain groupBy, compaction must keep every row, and the blocked and
+bucketed joins must answer like their exhaustive forms."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from forex_data_pipeline_spark.operators.skew import (
-    salted_aggregate,
-    salted_replicate_join,
-)
-from forex_data_pipeline_spark.sources.writers import write_bucketed
+from forex_data_pipeline_spark.operators.skew import salted_aggregate
 from forex_data_pipeline_spark.tables import load
-from tests.test_plans import plan_of
 
 
 def _sorted_rows(df, cols):
@@ -49,57 +44,6 @@ def test_salted_aggregate_equals_plain_groupby(spark, sf_dir):
 def test_salted_aggregate_rejects_non_mergeable():
     with pytest.raises(ValueError):
         salted_aggregate(None, ["k"], {"a": ("avg", "x")})
-
-
-def test_salted_replicate_join_equals_plain_join(spark, sf_dir):
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    salted = salted_replicate_join(
-        orders,
-        cust.withColumnRenamed("c_custkey", "o_custkey"),
-        ["o_custkey"],
-        salts=8,
-        left_uniform_cols=["o_orderkey"],
-    )
-    plain = orders.join(
-        cust.withColumnRenamed("c_custkey", "o_custkey"), ["o_custkey"]
-    )
-    cols = ["o_orderkey", "o_custkey", "c_mktsegment"]
-    assert _sorted_rows(salted, cols) == _sorted_rows(plain, cols)
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    """Both sides bucketed by the join key into the same bucket count:
-    the join plan must contain no Exchange (co-located buckets), and
-    with sortBy, no extra Sort before the merge join."""
-    orders = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    write_bucketed(orders, "orders_b", 8, ["o_orderkey"], ["o_orderkey"])
-    write_bucketed(li, "lineitem_b", 8, ["l_orderkey"], ["l_orderkey"])
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("orders_b").join(
-                spark.table("lineitem_b"),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
-            plan = plan_of(joined)
-            assert "Exchange" not in plan, plan
-            assert "SortMergeJoin" in plan
-            # same rows as the unbucketed join
-            n_b = joined.count()
-            n = orders.join(
-                li, F.col("o_orderkey") == F.col("l_orderkey")
-            ).count()
-            assert n_b == n
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
 def test_compaction_preserves_rows_and_reduces_files(spark, sf_dir, tmp_path):
@@ -241,36 +185,6 @@ def test_asof_bucketed_duplicate_right_ts_is_deterministic(spark):
     # both left rows (in-bucket pick and cross-bucket carry) resolve
     # to the max value among the tied timestamps, on every layout
     assert results[0] == results[1] == [9.0, 9.0]
-
-
-def test_gated_salt_count_both_regimes(spark, sf_dir):
-    """gated_salt_count must disable salting exactly when the build
-    side fits the auto-broadcast threshold (replication buys nothing
-    in the broadcast regime) and enable it in the shuffle regime —
-    including threshold=-1 (auto-broadcast off => always shuffle)."""
-    from forex_data_pipeline_spark.operators.skew import (
-        _parse_size_bytes,
-        gated_salt_count,
-    )
-
-    assert _parse_size_bytes("10485760") == 10485760
-    assert _parse_size_bytes("10MB") == 10 << 20
-    assert _parse_size_bytes("512k") == 512 << 10
-    assert _parse_size_bytes("-1") == -1
-
-    cu = load(spark, sf_dir, "customer")
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "1073741824")  # 1 GiB: everything fits
-        assert gated_salt_count(cu, 4) == 1
-        spark.conf.set(key, "1")  # nothing fits: shuffle regime
-        assert gated_salt_count(cu, 4) == 4
-        spark.conf.set(key, "-1")  # broadcast disabled entirely
-        assert gated_salt_count(cu, 4) == 4
-    finally:
-        spark.conf.set(key, old)
-    assert gated_salt_count(cu, 1) == 1
 
 
 def test_equal_length_lev2_identity():

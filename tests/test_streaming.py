@@ -49,152 +49,6 @@ def test_streaming_dedup_drops_in_stream_duplicates(spark, tmp_path):
     assert got.v.tolist() == [10, 20, 30]
 
 
-def test_stateful_running_ema_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState: state must carry across micro-batches —
-    two files processed one per trigger must produce the same final EMA
-    as one batch fold over the whole ordered series."""
-    import math
-
-    from forex_data_pipeline_spark.streaming.stateful import (
-        batch_ema,
-        running_ema,
-    )
-
-    src = tmp_path / "ema_src"
-    src.mkdir()
-    full = pd.DataFrame(
-        {
-            "event_id": range(40),
-            "ts": pd.date_range("2024-01-01", periods=40, freq="1min"),
-            "event_type": ["click", "view"] * 20,
-            "value": [float(10 + (i * 7 % 13)) for i in range(40)],
-        }
-    )
-    sdf = spark.createDataFrame(full).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    # two time-ordered files → two micro-batches with maxFilesPerTrigger=1
-    sdf.filter("event_id < 20").coalesce(1).write.parquet(str(src / "f1"))
-    sdf.filter("event_id >= 20").coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(sdf.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (
-        running_ema(stream, alpha=0.1)
-        .writeStream.format("memory")
-        .queryName("ema_t")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ema_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("ema_t").toPandas()
-    # at least one emission per key per micro-batch; take the last per key
-    assert got.groupby("event_type").size().min() >= 2
-    final = (
-        got.sort_values("n_events").groupby("event_type").last().to_dict("index")
-    )
-    expected = batch_ema(full, alpha=0.1)
-    for key, exp in expected.items():
-        assert final[key]["n_events"] == exp["n_events"]
-        assert math.isclose(final[key]["ema"], exp["ema"], rel_tol=1e-12)
-
-
-def test_stream_merge_foreachbatch_idempotent(spark, tmp_path):
-    """Stream → MERGE sink: two micro-batches with overlapping keys must
-    land as an upsert (latest wins per key never duplicates), and the
-    final table must equal the batch-mode merge of the same data."""
-    from forex_data_pipeline_spark.streaming.candles_stream import (
-        run_stream_merge,
-    )
-
-    src = tmp_path / "merge_src"
-    src.mkdir()
-    b1 = pd.DataFrame(
-        {"k": [1, 2, 3], "ts": pd.to_datetime(["2024-01-01"] * 3), "v": [10, 20, 30]}
-    )
-    b2 = pd.DataFrame(
-        {"k": [3, 4], "ts": pd.to_datetime(["2024-01-02"] * 2), "v": [33, 44]}
-    )
-    sdf1 = spark.createDataFrame(b1).withColumn("ts", F.col("ts").cast("timestamp"))
-    sdf2 = spark.createDataFrame(b2).withColumn("ts", F.col("ts").cast("timestamp"))
-    sdf1.coalesce(1).write.parquet(str(src / "f1"))
-    sdf2.coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(sdf1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = str(tmp_path / "merged")
-    q = run_stream_merge(stream, out, ["k"], str(tmp_path / "ckpt_m"))
-    q.awaitTermination()
-
-    got = (
-        spark.read.parquet(out)
-        .orderBy("k")
-        .select("k", "v")
-        .toPandas()
-    )
-    assert got.k.tolist() == [1, 2, 3, 4]
-    assert got.v.tolist() == [10, 20, 33, 44]  # k=3 upserted by batch 2
-
-
-def test_stream_merge_restart_recovers_from_checkpoint(spark, tmp_path):
-    """Effectively-once across RESTARTS: a second streaming query on
-    the same checkpoint may REPLAY the last un-committed batch (that is
-    the foreachBatch contract — offsets are checkpointed, batch commits
-    are the sink's job), and the MERGE sink must absorb the replay
-    idempotently: the final table equals a single continuous run, no
-    duplicates, no lost updates."""
-    from forex_data_pipeline_spark.streaming.candles_stream import (
-        run_stream_merge,
-    )
-
-    src = tmp_path / "restart_src"
-    src.mkdir()
-    out = str(tmp_path / "restart_merged")
-    ckpt = str(tmp_path / "restart_ckpt")
-
-    b1 = pd.DataFrame(
-        {"k": [1, 2], "ts": pd.to_datetime(["2024-01-01"] * 2),
-         "v": [10, 20]}
-    )
-    sdf1 = spark.createDataFrame(b1).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    sdf1.coalesce(1).write.parquet(str(src / "f1"))
-
-    stream = spark.readStream.schema(sdf1.schema).parquet(str(src / "*"))
-    q1 = run_stream_merge(stream, out, ["k"], ckpt)
-    q1.awaitTermination()
-
-    # land a second file (k=2 updated, k=3 new), then RESTART on the
-    # same checkpoint
-    b2 = pd.DataFrame(
-        {"k": [2, 3], "ts": pd.to_datetime(["2024-01-02"] * 2),
-         "v": [22, 30]}
-    )
-    spark.createDataFrame(b2).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ).coalesce(1).write.parquet(str(src / "f2"))
-
-    stream2 = spark.readStream.schema(sdf1.schema).parquet(str(src / "*"))
-    q2 = run_stream_merge(stream2, out, ["k"], ckpt)
-    q2.awaitTermination()
-
-    got = (
-        spark.read.parquet(out).orderBy("k").select("k", "v").toPandas()
-    )
-    # k=1 from batch 1 survives any replay un-duplicated; k=2 upserted
-    assert got.k.tolist() == [1, 2, 3]
-    assert got.v.tolist() == [10, 22, 30]
-
-
 def test_drop_duplicates_within_watermark(spark, tmp_path):
     """dropDuplicatesWithinWatermark (Spark 3.5+): duplicate keys
     arriving within the watermark delay are dropped, and the dedup
