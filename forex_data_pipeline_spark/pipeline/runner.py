@@ -28,11 +28,6 @@ Spark-side concurrency notes (why this is safe and what it buys):
   they'd be the same model). ``validate`` enforces declared-edge
   acyclicity, and ``run_batch_concurrent`` refuses symbols that share
   a ``base_dir``.
-- No model may start or drain a stream while another model runs in the
-  same session: ``streaming.candles_stream.stream_shuffle_partitions``
-  sets ``spark.sql.shuffle.partitions`` session-wide for the stream's
-  duration, so a concurrent batch model would plan with the stream's
-  partition count. Run stream models alone, or on a separate session.
 
 Results record per-model wall-clock (started/finished monotonic
 stamps), which is how tests prove two independent models actually
@@ -45,7 +40,7 @@ import threading
 import time
 from collections.abc import Callable, Sequence
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 

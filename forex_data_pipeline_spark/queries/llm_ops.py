@@ -22,7 +22,6 @@ from pyspark.sql.window import Window
 from ..catalog import register
 from ..functions.text import (
     BPE_RE,
-    EN_STOPWORDS,
     LANG_MARKERS,
     minhash_value,
     minhash_value_sql,
@@ -4574,7 +4573,8 @@ def incremental_covariance_update(spark: SparkSession, sf_dir: str) -> DataFrame
 def streaming_covariance_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import uuid
+
+    from ..sources.writers import replace_table
 
     emb_path = f"{sf_dir}/embeddings.parquet"
     schema = spark.read.parquet(emb_path).schema
@@ -4596,23 +4596,14 @@ def streaming_covariance_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
         # explicit first-batch check: a bare except here would turn a
         # corrupt/partially-written state read into a silent state
         # reset (wrong totals); genuine read errors must propagate
-        has_state = os.path.isdir(state)
-        if has_state:
+        if os.path.isdir(state):
             prev = sp.read.parquet(state)
             cells = (
                 prev.unionByName(cells)
                 .groupBy("i", "j")
                 .agg(F.sum("s_ij").alias("s_ij"), F.sum("n").alias("n"))
             )
-        tmp = f"{state}__tmp_{uuid.uuid4().hex[:8]}"
-        cells.coalesce(1).write.parquet(tmp)
-        if has_state:
-            old = f"{state}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(state, old)
-            os.rename(tmp, state)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(tmp, state)
+        replace_table(cells.coalesce(1), state)
 
     stream = (
         spark.readStream.schema(schema)

@@ -1527,7 +1527,8 @@ def _retrieval_stats_state(batch: DataFrame) -> DataFrame:
 def streaming_retrieval_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import uuid
+
+    from ..sources.writers import replace_table
 
     docs_path = f"{sf_dir}/documents.parquet"
     schema = spark.read.parquet(docs_path).schema
@@ -1549,8 +1550,7 @@ def streaming_retrieval_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # explicit first-batch check: a bare except would turn a
         # corrupt/partial state read into a silent reset to
         # current-batch-only stats; real read errors must propagate
-        has_state = os.path.isdir(state)
-        if has_state:
+        if os.path.isdir(state):
             prev = sp.read.parquet(state)
             cells = prev.unionByName(cells).agg(
                 F.sum("n").cast("bigint").alias("n"),
@@ -1560,15 +1560,7 @@ def streaming_retrieval_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for i in range(len(_BM25_TERMS))
                 ],
             )
-        tmp = f"{state}__tmp_{uuid.uuid4().hex[:8]}"
-        cells.coalesce(1).write.parquet(tmp)
-        if has_state:
-            old = f"{state}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(state, old)
-            os.rename(tmp, state)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(tmp, state)
+        replace_table(cells.coalesce(1), state)
 
     stream = (
         spark.readStream.schema(schema)

@@ -8,20 +8,18 @@ batch/streaming semantic parity on identical input.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..scratch import scratch_dir
 from ..catalog import register
+from ..operators.candles import ohlc_window
+from ..scratch import scratch_dir
 from ..streaming.candles_stream import (
-    read_tick_stream,
     run_available_now_to_table,
-    state_partitions_for,
-    stream_shuffle_partitions,
-    streaming_candles,
+    run_stream_merge_versioned,
+    stage_tick_stream,
 )
 from ..tables import load
 from .timeseries import _OHLC_AGG_SQL, _bucket_sql
@@ -43,28 +41,13 @@ from .timeseries import _OHLC_AGG_SQL, _bucket_sql
     tags=("streaming", "timeseries"),
 )
 def streaming_candles_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Stage the single events.parquet into a stream source directory.
-    src = scratch_dir("fx_stream_src_")
-    os.symlink(
-        f"{sf_dir}/events.parquet", f"{src}/events.parquet"
-    )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.typeName() == "long"
-
-    ticks = read_tick_stream(
-        spark, src, raw_schema, ts_is_nanos_long=ts_is_long
-    )
-    candles = streaming_candles(
-        ticks, "ts", "value", ["event_type"], duration="5 minutes"
+    ticks = stage_tick_stream(spark, sf_dir)
+    candles = ohlc_window(
+        ticks.withWatermark("ts", "10 minutes"), "ts", "value", ["event_type"]
     )
     table = f"stream_candles_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("fx_stream_ckpt_")
-    run_available_now_to_table(
-        candles, table, ckpt,
-        shuffle_partitions=state_partitions_for(spark, src),
-    )
-    return spark.table(table).select(
+    run_available_now_to_table(candles, table, scratch_dir("fx_stream_ckpt_"))
+    return ticks.sparkSession.table(table).select(
         "candle_start", "event_type", "open_value", "high_value",
         "low_value", "close_value", "n_ticks",
     )
@@ -134,15 +117,7 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "timeseries"),
 )
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = scratch_dir("fx_slide_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.typeName() == "long"
-
-    ticks = read_tick_stream(
-        spark, src, raw_schema, ts_is_nanos_long=ts_is_long
-    )
+    ticks = stage_tick_stream(spark, sf_dir)
     win = F.window("ts", "15 minutes", "5 minutes").alias("w")
     agg = (
         ticks.withWatermark("ts", "10 minutes")
@@ -157,12 +132,8 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     table = f"stream_slide_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("fx_slide_ckpt_")
-    run_available_now_to_table(
-        agg, table, ckpt,
-        shuffle_partitions=state_partitions_for(spark, src),
-    )
-    return spark.table(table)
+    run_available_now_to_table(agg, table, scratch_dir("fx_slide_ckpt_"))
+    return ticks.sparkSession.table(table)
 
 
 @register(
@@ -185,18 +156,11 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join"),
 )
 def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = scratch_dir("fx_ssj_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.typeName() == "long"
+    ticks = stage_tick_stream(spark, sf_dir)
 
     def side(event_type: str, ts_alias: str) -> DataFrame:
         return (
-            read_tick_stream(
-                spark, src, raw_schema, ts_is_nanos_long=ts_is_long
-            )
-            .filter(F.col("event_type") == event_type)
+            ticks.filter(F.col("event_type") == event_type)
             .withWatermark("ts", "10 minutes")
             .select(
                 F.col("user_id").alias(f"{ts_alias[0]}_user_id"),
@@ -213,25 +177,15 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).select(F.col("v_user_id").alias("user_id"), "view_ts", "purchase_ts")
 
-    table = f"stream_join_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("fx_ssj_ckpt_")
     # stream-stream join state stores are the heaviest per-partition
     # fixture (4 stores per partition: left/right keyToNumValues +
-    # keyWithIndexToValue) — size the partition count to the staged
-    # input, not the session default
-    with stream_shuffle_partitions(
-        spark, state_partitions_for(spark, src)
-    ):
-        (
-            joined.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(table)
+    # keyWithIndexToValue) — the staged session sizes their count to
+    # the input, not the session default
+    table = f"stream_join_{uuid.uuid4().hex[:8]}"
+    run_available_now_to_table(
+        joined, table, scratch_dir("fx_ssj_ckpt_"), output_mode="append"
+    )
+    return ticks.sparkSession.table(table)
 
 
 @register(
@@ -250,34 +204,19 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup"),
 )
 def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from ..streaming.candles_stream import (
-        read_tick_stream,
-        run_available_now_to_table,
-        streaming_dedup,
-    )
-
-    src = scratch_dir("fx_dedup_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src}/events_a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src}/events_b.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.typeName() == "long"
-    ticks = read_tick_stream(spark, src, raw_schema, ts_is_nanos_long=ts_is_long)
+    ticks = stage_tick_stream(spark, sf_dir, copies=2)
     # delay wider than the dataset's span: every duplicate (same
     # event_id) must be caught regardless of arrival batch
-    deduped = streaming_dedup(ticks, ["event_id"], "ts", delay="90 days")
+    deduped = (
+        ticks.withWatermark("ts", "90 days")
+        .dropDuplicatesWithinWatermark(["event_id"])
+    )
     counted = deduped.groupBy("event_type").count().withColumnRenamed(
         "count", "n_events"
     )
     table = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("fx_dedup_ckpt_")
-    run_available_now_to_table(
-        counted, table, ckpt, output_mode="complete",
-        shuffle_partitions=state_partitions_for(spark, src),
-    )
-    return spark.table(table).select(
+    run_available_now_to_table(counted, table, scratch_dir("fx_dedup_ckpt_"))
+    return ticks.sparkSession.table(table).select(
         "event_type", F.col("n_events").cast("bigint").alias("n_events")
     )
 
@@ -305,16 +244,8 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "aggregation"),
 )
 def streaming_dim_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = scratch_dir("fx_stream_dim_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.typeName() == "long"
-
-    ticks = read_tick_stream(
-        spark, src, raw_schema, ts_is_nanos_long=ts_is_long
-    )
-    dim = load(spark, sf_dir, "customer").select(
+    ticks = stage_tick_stream(spark, sf_dir)
+    dim = load(ticks.sparkSession, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     enriched = ticks.join(F.broadcast(dim), "user_id").groupBy(
@@ -326,12 +257,10 @@ def streaming_dim_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("value_micro"),
     )
     table = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("fx_stream_dim_ckpt_")
     run_available_now_to_table(
-        enriched, table, ckpt,
-        shuffle_partitions=state_partitions_for(spark, src),
+        enriched, table, scratch_dir("fx_stream_dim_ckpt_")
     )
-    return spark.table(table).select(
+    return ticks.sparkSession.table(table).select(
         "c_mktsegment", "event_type", "n_events", "value_micro"
     )
 
@@ -378,17 +307,11 @@ def stream_merge_version_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_version,
         table_versions,
     )
-    from ..streaming.candles_stream import run_stream_merge_versioned
 
-    src = scratch_dir("fx_vmerge_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.typeName() == "long"
     table_dir = scratch_dir("fx_vmerge_tbl_") + "/t"
 
     # v0: drain the stream into the versioned sink
-    ticks = read_tick_stream(spark, src, raw_schema, ts_is_nanos_long=ts_is_long)
+    ticks = stage_tick_stream(spark, sf_dir)
     run_stream_merge_versioned(
         ticks, table_dir, ["event_id"],
         scratch_dir("fx_vmerge_ck1_"),
@@ -396,9 +319,8 @@ def stream_merge_version_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # v1: replay the whole source with a FRESH checkpoint — the
     # idempotent re-run; merge on event_id must reproduce v0's content
-    ticks2 = read_tick_stream(spark, src, raw_schema, ts_is_nanos_long=ts_is_long)
     run_stream_merge_versioned(
-        ticks2, table_dir, ["event_id"],
+        ticks, table_dir, ["event_id"],
         scratch_dir("fx_vmerge_ck2_"),
     ).awaitTermination()
 

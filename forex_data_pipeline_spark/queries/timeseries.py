@@ -417,8 +417,6 @@ def batch_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minmax_norm_pdf(pdf):
-    import pandas as _pd
-
     lo, hi = pdf["value"].min(), pdf["value"].max()
     span = hi - lo
     out = pdf[["event_id", "event_type"]].copy()

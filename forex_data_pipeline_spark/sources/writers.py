@@ -85,11 +85,13 @@ def replace_table(
     sort_within: Sequence[str] = (),
 ) -> None:
     """Replace the table at ``path`` with ``df`` — which may read ``path``
-    itself — by writing a sibling temp dir and swapping it in."""
+    itself — by writing a sibling temp dir and swapping it in. A missing
+    ``path`` simply receives the temp dir."""
     tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
     write_partitioned(df, tmp, partition_cols, sort_within=sort_within)
     old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
+    if os.path.exists(path):
+        os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
 

@@ -8,8 +8,9 @@ semantics. Spark-native mapping:
 - ingestion trigger  → file-source stream + ``Trigger.AvailableNow``
   (process everything present, then stop — the cron-batch equivalent,
   with exactly-once file tracking via the checkpoint instead of the
-  hand-rolled watermark);
-- tumbling candles   → ``F.window(ts, dur)`` groupBy aggregation;
+  hand-rolled watermark): ``run_available_now_to_table``;
+- tumbling candles   → ``operators.candles.ohlc_window`` over
+  ``ticks.withWatermark(...)``, the batch operator unchanged;
 - late data          → ``withWatermark`` bounds state; late rows beyond
   the delay are dropped (the reference's watermark filter drops ALL
   out-of-order rows — ours is strictly more tolerant);
@@ -19,6 +20,12 @@ semantics. Spark-native mapping:
   exactly the reference's recompute-the-tail design (fct:25-29), see
   ``pipeline.medallion.gold_run``.
 
+Every bounded stream of the catalog is staged by ``stage_tick_stream``
+and read on a child session of the caller's: the stream's state-store
+width and its result view live on that child, so nothing here sets a
+conf on the caller's session and batch models may run beside a drain
+(``pipeline.runner``).
+
 Scale: streaming state is keyed by (series, window); with watermarking,
 state size ∝ active windows × series, independent of history length.
 """
@@ -27,14 +34,13 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.candles import _ohlc_aggs
+from ..scratch import scratch_dir
 
 #: Target bytes of staged input per state-store partition. A stateful
 #: streaming operator creates one state store (files, maintenance
@@ -75,27 +81,36 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
     return max(1, min(cap, -(-total // _STATE_PARTITION_BYTES)))
 
 
-@contextmanager
-def stream_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Set spark.sql.shuffle.partitions around a streaming start/drain
-    (the value a stateful query freezes into its checkpoint), restoring
-    the session default afterwards so batch queries are untouched.
+def stage_tick_stream(
+    spark: SparkSession, sf_dir: str, copies: int = 1
+) -> DataFrame:
+    """Stage ``sf_dir``'s ``events.parquet`` ``copies`` times (symlinks)
+    into a fresh stream source directory and return the tick stream over
+    it, read on a child session of ``spark``.
 
-    Restriction: the conf is session-global, not per thread. A batch
-    model running concurrently in the same session (``pipeline.runner``
-    runs independent models on a thread pool) would plan its shuffles
-    with ``n`` partitions while the block is open, and two overlapping
-    blocks can restore each other's value. So no batch model may run
-    concurrently with a stream start or drain in the same session."""
-    if n is None:
-        yield
-        return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    The child is ``spark.newSession()`` with every runtime-modifiable
+    setting of ``spark`` copied in (a bare new session starts from the
+    static defaults and would lose e.g. ``adaptive.enabled=false``). It
+    shares the SparkContext but owns its SQL conf and temp views, so the
+    state-store width set here (``state_partitions_for`` the staged
+    input) and the memory sink's result view stay on the stream's
+    session: batch work running beside the drain on ``spark`` keeps its
+    own ``spark.sql.shuffle.partitions``. Reach the child, to read the
+    drained result or load what the stream joins, as
+    ``ticks.sparkSession``."""
+    src = scratch_dir("fx_stream_src_")
+    for i in range(copies):
+        os.symlink(f"{sf_dir}/events.parquet", f"{src}/events_{i}.parquet")
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    child.conf.set(
+        "spark.sql.shuffle.partitions", str(state_partitions_for(spark, src))
+    )
+    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = child.read.parquet(f"{sf_dir}/events.parquet").schema
+    return read_tick_stream(child, src, schema)
 
 
 def read_tick_stream(
@@ -103,20 +118,21 @@ def read_tick_stream(
     source_dir: str,
     schema: T.StructType,
     *,
-    ts_is_nanos_long: bool = False,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over a directory of tick parquet files."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """File-source stream over a directory of tick parquet files. A
+    ``long`` ``ts`` in ``schema`` is TIMESTAMP(NANOS) read with
+    ``nanosAsLong``, which ``spark`` must then have set."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     df = reader.parquet(source_dir)
-    if ts_is_nanos_long:
+    ts_type = schema["ts"].dataType.typeName()
+    if ts_type == "long":
         # Watermarks require TimestampType (not NTZ); identical wall
         # clock under the pinned UTC session.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif "ts" in df.columns and df.schema["ts"].dataType.typeName() == "timestamp_ntz":
+    elif ts_type == "timestamp_ntz":
         # Parquet µs timestamps with isAdjustedToUTC=false arrive as
         # TIMESTAMP_NTZ; watermarks need TIMESTAMP. Under the pinned
         # UTC session the cast is wall-clock preserving.
@@ -124,71 +140,34 @@ def read_tick_stream(
     return df
 
 
-def streaming_candles(
-    ticks: DataFrame,
-    ts_col: str,
-    value_col: str,
-    series_cols: Sequence[str] = (),
-    *,
-    duration: str = "5 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Tumbling-window OHLC aggregation on a stream. In append mode a
-    window emits once the watermark passes its end — exactly-once candle
-    emission; ``watermark_delay`` is the late-data tolerance."""
-    w = F.window(F.col(ts_col), duration).alias("w")
-    out = (
-        ticks.withWatermark(ts_col, watermark_delay)
-        .groupBy(*series_cols, w)
-        .agg(*_ohlc_aggs(ts_col, value_col))
-    )
-    return out.select(
-        *series_cols,
-        F.col("w.start").cast("timestamp_ntz").alias("candle_start"),
-        "open_value", "high_value", "low_value", "close_value", "n_ticks",
-    )
-
-
 def run_available_now_to_table(
     result: DataFrame, table_name: str, checkpoint_dir: str,
     output_mode: str = "complete",
-    shuffle_partitions: int | None = None,
 ) -> StreamingQuery:
     """Drain everything currently in the source (the daily-cron
-    equivalent) into an in-memory table, then stop. ``complete`` mode
-    emits every window including still-open ones, matching a batch
-    recompute; production continuous mode would use append+watermark
-    into a parquet/Delta sink instead. ``shuffle_partitions`` (from
-    ``state_partitions_for``) sizes the state-store partition count to
-    the staged input — AQE cannot coalesce state-store partitions."""
-    spark = result.sparkSession
-    with stream_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            result.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return q
-
-
-def streaming_dedup(
-    ticks: DataFrame, keys: Sequence[str], ts_col: str, delay: str = "10 minutes"
-) -> DataFrame:
-    """Exactly-once keyed dedup in-stream: state bounded by the
-    watermark (the streaming form of D1/D2)."""
-    return ticks.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
-        list(keys)
+    equivalent) into an in-memory table of ``result``'s session, then
+    stop. ``complete`` mode emits every window including still-open
+    ones, matching a batch recompute; production continuous mode would
+    use append+watermark into a parquet/Delta sink instead. A stateful
+    query freezes its session's ``spark.sql.shuffle.partitions`` into
+    the checkpoint as its state-store width, which
+    ``stage_tick_stream`` sizes to the staged input."""
+    q = (
+        result.writeStream.format("memory")
+        .queryName(table_name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
+    return q
 
 
 def run_stream_merge_versioned(
     stream_df: DataFrame,
     table_dir: str,
-    keys: "Sequence[str]",
+    keys: Sequence[str],
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """Stream → VERSIONED MERGE sink: every micro-batch commits through

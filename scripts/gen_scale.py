@@ -50,7 +50,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import sys
 
 import numpy as np
 import pyarrow as pa

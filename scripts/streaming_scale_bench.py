@@ -38,11 +38,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from forex_data_pipeline_spark.operators.candles import ohlc_window  # noqa: E402
 from forex_data_pipeline_spark.session import get_spark  # noqa: E402
 from forex_data_pipeline_spark.streaming.candles_stream import (  # noqa: E402
     read_tick_stream,
     run_available_now_to_table,
-    streaming_candles,
 )
 from forex_data_pipeline_spark.tables import load  # noqa: E402
 
@@ -81,8 +81,9 @@ def main() -> None:
         ticks = read_tick_stream(
             spark, src, schema, max_files_per_trigger=1
         )
-        candles = streaming_candles(
-            ticks, "ts", "value", ["event_type"], duration="5 minutes"
+        candles = ohlc_window(
+            ticks.withWatermark("ts", "10 minutes"), "ts", "value",
+            ["event_type"],
         )
         q = run_available_now_to_table(candles, "bench_candles", ckpt)
         wall = time.perf_counter() - t0

@@ -211,3 +211,65 @@ def test_every_engine_def_has_a_product_caller():
         f"the {len(NO_PRODUCT_CALLER)} in NO_PRODUCT_CALLER):\n"
         + "\n".join(unreached)
     )
+
+
+def _scope_names(node: ast.AST) -> set[str]:
+    """Every name ``node``'s subtree loads, including those inside string
+    annotations such as ``"Sequence[str]"``."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            try:
+                out |= _scope_names(ast.parse(n.value, mode="eval"))
+            except SyntaxError:
+                pass
+    return out
+
+
+def _unused_imports(path: str) -> list[str]:
+    """``path:line name`` for each name an import binds that its scope
+    (the enclosing function, else the module) never loads. An import
+    whose first line carries ``# noqa: F401`` is exempt."""
+    src = open(path).read()
+    lines = src.splitlines()
+    tree = ast.parse(src, path)
+    scopes = [tree] + [
+        n for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    unused = []
+    for scope in scopes:
+        used = _scope_names(scope)
+        body = list(ast.iter_child_nodes(scope))
+        while body:
+            n = body.pop()
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue  # its own scope
+            body += ast.iter_child_nodes(n)
+            if not isinstance(n, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(n, "module", None) == "__future__":
+                continue
+            if re.search(r"#\s*noqa:[^#]*\bF401\b", lines[n.lineno - 1]):
+                continue
+            for a in n.names:
+                name = a.asname or a.name.split(".")[0]
+                if name != "*" and name not in used:
+                    unused.append((n.lineno, name))
+    return [f"{path}:{line} {name}" for line, name in sorted(unused)]
+
+
+def test_no_unused_imports():
+    """No import in the package, ``tests/``, ``scripts/``, ``bench.py`` or
+    ``__spark_entry__.py`` binds a name its scope never uses."""
+    paths = ["bench.py", "__spark_entry__.py"]
+    for top in (PACKAGE, "tests", "scripts"):
+        for root, _, files in os.walk(top):
+            paths += [os.path.join(root, f) for f in sorted(files)
+                      if f.endswith(".py")]
+    unused = [u for p in sorted(paths) for u in _unused_imports(p)]
+    assert unused == [], (
+        f"{len(unused)} unused imports:\n" + "\n".join(unused)
+    )

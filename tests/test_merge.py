@@ -8,6 +8,7 @@ import pytest
 from forex_data_pipeline_spark.sources.writers import (
     high_watermark,
     merge_upsert,
+    replace_table,
     write_partitioned,
 )
 
@@ -35,6 +36,11 @@ def test_merge_rewrite_upserts(spark, tmp_path):
     exp = pd.DataFrame(
         {"k": [1, 2, 3, 4], "s": ["a", "B", "c", "d"], "v": [10, 99, 30, 40]}
     )
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    # the swap onto a path that holds no table yet moves it into place
+    replace_table(batch, f"{tmp_path}/fresh")
+    got = _rows(spark, f"{tmp_path}/fresh")
+    exp = pd.DataFrame({"k": [2, 4], "s": ["B", "d"], "v": [99, 40]})
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 

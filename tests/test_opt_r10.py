@@ -11,7 +11,6 @@ localized to the rewritten kernel, not the composed query.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from forex_data_pipeline_spark.functions.vector import cosine, dot, norm
 

@@ -2,19 +2,27 @@
 
 Pin the r11 streaming state-store partition override to its contract:
 data-derived (grows with input size), capped at the session default,
-never tuned to a core count, restored after the drain, and actually
-honored by a drained stateful query's checkpoint. The r11 window-form
-rewrites of the shingle-pair family need no focused test here — their
-DuckDB oracles ARE the join formulation, so the strict tri-scale
-oracle runs compare the two forms directly.
+never tuned to a core count, honored by a drained stateful query's
+checkpoint, and set on the stream's own child session, never on the
+caller's. The r11 window-form rewrites of the shingle-pair family need
+no focused test here — their DuckDB oracles ARE the join formulation,
+so the strict tri-scale oracle runs compare the two forms directly.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 
-import pyspark.sql.functions as F
-import pytest
+from forex_data_pipeline_spark.operators.candles import ohlc_window
+from forex_data_pipeline_spark.scratch import scratch_dir
+from forex_data_pipeline_spark.streaming.candles_stream import (
+    _STATE_PARTITION_BYTES,
+    run_available_now_to_table,
+    stage_tick_stream,
+    state_partitions_for,
+)
 
 
 def test_state_partitions_grow_with_input_and_cap_at_default(
@@ -23,11 +31,6 @@ def test_state_partitions_grow_with_input_and_cap_at_default(
     """One state partition per ~32 MB of staged input, floor 1, cap at
     the session's configured shuffle parallelism — the override must be
     keyed to DATA SIZE, not cores."""
-    from forex_data_pipeline_spark.streaming.candles_stream import (
-        _STATE_PARTITION_BYTES,
-        state_partitions_for,
-    )
-
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def staged(n_bytes: int, name: str) -> str:
@@ -55,26 +58,8 @@ def test_state_partitions_unresolvable_path_gets_the_cap(spark):
     """A path os.path cannot see (a remote URI) sizes to 0 bytes; it must
     get the session's width, not one state store frozen into the
     checkpoint."""
-    from forex_data_pipeline_spark.streaming.candles_stream import (
-        state_partitions_for,
-    )
-
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert state_partitions_for(spark, "s3a://bucket/ticks/") == cap
-
-
-def test_stream_shuffle_partitions_restores_session_conf(spark):
-    from forex_data_pipeline_spark.streaming.candles_stream import (
-        stream_shuffle_partitions,
-    )
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with stream_shuffle_partitions(spark, 2):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # None = no-op
-    with stream_shuffle_partitions(spark, None):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_streaming_candles_state_store_width_matches_override(
@@ -83,33 +68,70 @@ def test_streaming_candles_state_store_width_matches_override(
     """End-to-end: a drained stateful stream must create exactly the
     derived number of state-store partitions (visible as state/0/<p>
     dirs in the checkpoint), not the session default."""
-    import uuid
-
-    from forex_data_pipeline_spark.scratch import scratch_dir
-    from forex_data_pipeline_spark.streaming.candles_stream import (
-        read_tick_stream,
-        run_available_now_to_table,
-        state_partitions_for,
-        streaming_candles,
-    )
-
-    src = scratch_dir("fx_test_sswidth_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.typeName() == "long"
-    ticks = read_tick_stream(
-        spark, src, raw_schema, ts_is_nanos_long=ts_is_long
-    )
-    candles = streaming_candles(
-        ticks, "ts", "value", ["event_type"], duration="5 minutes"
-    )
-    n = state_partitions_for(spark, src)
+    n = state_partitions_for(spark, f"{sf_dir}/events.parquet")
     assert n < int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ckpt = scratch_dir("fx_test_sswidth_ck_")
-    run_available_now_to_table(
-        candles, f"t_{uuid.uuid4().hex[:8]}", ckpt, shuffle_partitions=n
+    ticks = stage_tick_stream(spark, sf_dir)
+    candles = ohlc_window(
+        ticks.withWatermark("ts", "10 minutes"), "ts", "value", ["event_type"]
     )
+    ckpt = scratch_dir("fx_test_sswidth_ck_")
+    run_available_now_to_table(candles, f"t_{uuid.uuid4().hex[:8]}", ckpt)
     state_root = os.path.join(ckpt, "state", "0")
     parts = [d for d in os.listdir(state_root) if d.isdigit()]
     assert len(parts) == n
+
+
+def test_stream_drain_leaves_caller_shuffle_partitions_alone(spark, sf_dir):
+    """While a stream with a derived width of 1-3 state partitions
+    drains in one thread, another thread reading the caller's
+    spark.sql.shuffle.partitions always sees the caller's own value, so
+    a batch model may plan its shuffles beside the drain."""
+    from forex_data_pipeline_spark.queries.streaming_q import (
+        streaming_candles_5m,
+    )
+
+    own = spark.conf.get("spark.sql.shuffle.partitions")
+    assert 1 <= state_partitions_for(spark, f"{sf_dir}/events.parquet") <= 3
+    seen = set()
+    with ThreadPoolExecutor(1) as pool:
+        drain = pool.submit(streaming_candles_5m, spark, sf_dir)
+        while not drain.done():
+            seen.add(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert drain.result().count() > 0
+    assert seen == {own}
+
+
+def test_stream_session_inherits_caller_runtime_conf(spark, sf_dir):
+    """The stream's session is a child of the caller's that carries the
+    caller's runtime-only settings plus its own state-store width."""
+    before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        child = stage_tick_stream(spark, sf_dir).sparkSession
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+    assert child is not spark
+    assert child.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert child.conf.get("spark.sql.shuffle.partitions") == str(
+        state_partitions_for(spark, f"{sf_dir}/events.parquet")
+    )
+
+
+def test_streaming_queries_leave_no_temp_view_in_caller(spark, sf_dir):
+    """A drained query's memory-sink view belongs to the stream's own
+    session; the caller's session gains no temp view."""
+    from forex_data_pipeline_spark.queries import streaming_q
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    for query in (
+        streaming_q.streaming_candles_5m,
+        streaming_q.streaming_sliding_counts,
+        streaming_q.streaming_stream_join,
+        streaming_q.streaming_dedup_counts,
+        streaming_q.streaming_dim_enrich,
+    ):
+        assert query(spark, sf_dir).count() > 0
+    assert views() == before

@@ -5,7 +5,6 @@ stg_eurusd.sql:18-21 / fct:25-29 exist to guarantee."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pandas as pd
 import pytest

@@ -10,8 +10,6 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-import pytest
-
 from forex_data_pipeline_spark import catalog
 from forex_data_pipeline_spark.tables import load
 

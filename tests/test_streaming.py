@@ -9,10 +9,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from forex_data_pipeline_spark.streaming.candles_stream import (
-    streaming_dedup,
-)
-
 
 def test_streaming_dedup_drops_in_stream_duplicates(spark, tmp_path):
     src = tmp_path / "src"
@@ -34,7 +30,10 @@ def test_streaming_dedup_drops_in_stream_duplicates(spark, tmp_path):
     sdf.write.parquet(str(src / "batch"))
 
     stream = spark.readStream.schema(sdf.schema).parquet(str(src / "batch"))
-    deduped = streaming_dedup(stream, ["k"], "ts")
+    deduped = (
+        stream.withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["k"])
+    )
     q = (
         deduped.writeStream.format("memory")
         .queryName("dedup_t")
