@@ -70,6 +70,44 @@ def _series_window() -> Window:
     return Window.partitionBy("event_type").orderBy("candle_start")
 
 
+def _gain_loss_14(base: DataFrame) -> DataFrame:
+    """(event_type, candle_start, g, lo): the 14-row sums of the up and
+    the down close-to-close moves, exact bigint micro-units."""
+    w14 = _series_window().rowsBetween(-13, 0)
+    d = base.select(
+        "event_type", "candle_start",
+        (F.col("c") - F.lag("c").over(_series_window())).alias("diff"),
+    )
+    return d.select(
+        "event_type", "candle_start",
+        F.sum(F.when(F.col("diff") > 0, F.col("diff")).otherwise(0))
+        .over(w14)
+        .alias("g"),
+        F.sum(F.when(F.col("diff") < 0, -F.col("diff")).otherwise(0))
+        .over(w14)
+        .alias("lo"),
+    )
+
+
+def _true_range(base: DataFrame) -> DataFrame:
+    """(event_type, candle_start, h, l, t): true range max(H−L, |H−prevC|,
+    |L−prevC|) in exact integer micro-units, pinned to H−L where there
+    is no previous close (greatest() NULL handling differs across
+    engines)."""
+    pc = base.select(
+        "event_type", "candle_start", "h", "l",
+        F.lag("c").over(_series_window()).alias("pc"),
+    )
+    t = F.when(F.col("pc").isNull(), F.col("h") - F.col("l")).otherwise(
+        F.greatest(
+            F.col("h") - F.col("l"),
+            F.abs(F.col("h") - F.col("pc")),
+            F.abs(F.col("l") - F.col("pc")),
+        )
+    )
+    return pc.select("event_type", "candle_start", "h", "l", t.alias("t"))
+
+
 # ---------------------------------------------------------------- queries
 
 @register(
@@ -104,18 +142,7 @@ def _series_window() -> Window:
     tags=("timeseries", "window", "indicator"),
 )
 def rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _hourly_micro(spark, sf_dir)
-    w1 = _series_window()
-    w14 = _series_window().rowsBetween(-13, 0)
-    d = base.select(
-        "event_type", "candle_start",
-        (F.col("c") - F.lag("c").over(w1)).alias("diff"),
-    )
-    gl = d.select(
-        "event_type", "candle_start",
-        F.sum(F.when(F.col("diff") > 0, F.col("diff")).otherwise(0)).over(w14).alias("g"),
-        F.sum(F.when(F.col("diff") < 0, -F.col("diff")).otherwise(0)).over(w14).alias("lo"),
-    )
+    gl = _gain_loss_14(_hourly_micro(spark, sf_dir))
     return gl.select(
         "event_type", "candle_start",
         F.when(
@@ -157,21 +184,8 @@ def rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "window", "indicator"),
 )
 def atr_14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _hourly_micro(spark, sf_dir)
-    w1 = _series_window()
     w14 = _series_window().rowsBetween(-13, 0)
-    pc = base.select(
-        "event_type", "candle_start", "h", "l",
-        F.lag("c").over(w1).alias("pc"),
-    )
-    t = F.when(F.col("pc").isNull(), F.col("h") - F.col("l")).otherwise(
-        F.greatest(
-            F.col("h") - F.col("l"),
-            F.abs(F.col("h") - F.col("pc")),
-            F.abs(F.col("l") - F.col("pc")),
-        )
-    )
-    tr = pc.select("event_type", "candle_start", t.alias("t"))
+    tr = _true_range(_hourly_micro(spark, sf_dir))
     sums = tr.select(
         "event_type", "candle_start",
         F.sum("t").over(w14).alias("s"),
@@ -1798,22 +1812,8 @@ def cross_sectional_momentum_rank(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("timeseries", "window", "indicator"),
 )
 def stochastic_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _hourly_micro(spark, sf_dir)
-    w1 = _series_window()
     w14 = _series_window().rowsBetween(-13, 0)
-    d = base.select(
-        "event_type", "candle_start",
-        (F.col("c") - F.lag("c").over(w1)).alias("diff"),
-    )
-    gl = d.select(
-        "event_type", "candle_start",
-        F.sum(F.when(F.col("diff") > 0, F.col("diff")).otherwise(0))
-        .over(w14)
-        .alias("g"),
-        F.sum(F.when(F.col("diff") < 0, -F.col("diff")).otherwise(0))
-        .over(w14)
-        .alias("lo"),
-    )
+    gl = _gain_loss_14(_hourly_micro(spark, sf_dir))
     rsi = gl.select(
         "event_type", "candle_start",
         F.expr(
@@ -1872,21 +1872,8 @@ def stochastic_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "window", "indicator"),
 )
 def chandelier_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _hourly_micro(spark, sf_dir)
-    w1 = _series_window()
     w22 = _series_window().rowsBetween(-21, 0)
-    pc = base.select(
-        "event_type", "candle_start", "h", "l",
-        F.lag("c").over(w1).alias("pc"),
-    )
-    t = F.when(F.col("pc").isNull(), F.col("h") - F.col("l")).otherwise(
-        F.greatest(
-            F.col("h") - F.col("l"),
-            F.abs(F.col("h") - F.col("pc")),
-            F.abs(F.col("l") - F.col("pc")),
-        )
-    )
-    tr = pc.select("event_type", "candle_start", "h", "l", t.alias("t"))
+    tr = _true_range(_hourly_micro(spark, sf_dir))
     atr = F.sum("t").over(w22).cast("double") / (
         F.lit(1000000.0) * F.count(F.lit(1)).over(w22)
     )

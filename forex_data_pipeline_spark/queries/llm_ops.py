@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -35,7 +37,9 @@ from ..functions.text import (
     tokens,
     tokens_sql,
 )
-from ..functions.vector import cosine, cosine_sql, dot, dot_sql, norm
+from ..functions.vector import (
+    cosine, cosine_sql, dot, dot_sql, l2sq_unrolled, norm,
+)
 from ..scratch import scratch_dir, stage_hash_chunks
 from ..tables import load
 
@@ -698,6 +702,54 @@ def _ivf_assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
+def _centroid_means(
+    assigned: DataFrame, keys: list[str], vec: str, out: str
+) -> DataFrame:
+    """One Lloyd step: each centroid (one per ``keys`` value) becomes the
+    mean of the ``vec`` arrays assigned to it, as float array ``out``.
+    (keys, dim)-keyed partial agg via posexplode; the output is bounded
+    at centroids·dim rows, and it is checkpointed eagerly because
+    assignment and search both reuse it."""
+    return (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg(F.avg("v").alias("m"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s"))
+        .select(
+            *keys, F.transform("s", lambda x: x.m.cast("float")).alias(out)
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def _ivf_centroids(emb: DataFrame) -> DataFrame:
+    """(cell_id, c_emb): _IVF_K coarse centroids. Seeds are the k
+    vectors with the smallest xxhash64(vec_id) — deterministic, one
+    TakeOrderedAndProject (per-partition k-heap + one reduce), O(n) —
+    refined by one Lloyd step."""
+    seeds = (
+        emb.select(
+            F.col("vec_id").alias("cell_id"),
+            F.col("embedding").alias("c_emb"),
+        )
+        .orderBy(F.xxhash64(F.col("cell_id")), "cell_id")
+        .limit(_IVF_K)
+    )
+    return _centroid_means(
+        emb.join(_ivf_assign(emb, seeds), "vec_id"),
+        ["cell_id"], "embedding", "c_emb",
+    )
+
+
+def _query_vecs(emb: DataFrame) -> DataFrame:
+    """(query_id, q_emb): the 10 vectors (vec_id < 10) the ANN queries
+    search neighbours for."""
+    return emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+
+
 @register(
     "ann_ivf_topk",
     # No oracle: multi-stage approximate algorithm; recall vs the exact
@@ -717,34 +769,7 @@ def _ivf_assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    # deterministic fixed-k seed pick: k smallest xxhash64(vec_id) —
-    # TakeOrderedAndProject (per-partition k-heap + one reduce), O(n)
-    seeds = (
-        emb.select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("embedding").alias("c_emb"),
-        )
-        .orderBy(F.xxhash64(F.col("cell_id")), "cell_id")
-        .limit(_IVF_K)
-    )
-    # one Lloyd refinement: centroid <- mean of its assigned vectors.
-    # (cell, dim)-keyed partial agg; output is k*dim rows — bounded.
-    seed_assign = _ivf_assign(emb, seeds)
-    cent = (
-        emb.join(seed_assign, "vec_id")
-        .select("cell_id", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("cell_id", "pos")
-        .agg(F.avg("v").alias("m"))
-        .groupBy("cell_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s")
-        )
-        .select(
-            "cell_id",
-            F.transform("s", lambda x: x.m.cast("float")).alias("c_emb"),
-        )
-        .localCheckpoint(eager=True)  # k rows; probing reuses it
-    )
+    cent = _ivf_centroids(emb)
     assign = _ivf_assign(emb, cent)
     assigned = (
         emb.join(assign, "vec_id")
@@ -3246,8 +3271,6 @@ def _pq_assign(sub: DataFrame, books: DataFrame) -> DataFrame:
     m·k codebook, score map-side, argmin via min_by partial agg —
     subvectors never ride a shuffle. The subspace distance is unrolled
     over the constant subdim so it stays in whole-stage codegen."""
-    from ..functions.vector import l2sq_unrolled
-
     return (
         sub.join(F.broadcast(books), "sub_idx")
         .select(
@@ -3263,6 +3286,100 @@ def _pq_assign(sub: DataFrame, books: DataFrame) -> DataFrame:
             F.min_by(
                 "code_id", F.struct(F.col("d2"), F.col("code_id"))
             ).alias("code_id")
+        )
+    )
+
+
+def _pq_codebooks(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sub, books): the checkpointed subvector table and the
+    (sub_idx, code_id, c_sub) codebooks, _PQ_CODES entries per subspace.
+    Seeds are the k vectors with the smallest xxhash64(vec_id), shared
+    across subspaces; one Lloyd step per subspace refines them.
+
+    ``sub`` has three consumers here (seed assignment, the Lloyd step,
+    the caller's encode), so it is materialized once instead of each
+    branch re-scanning and re-exploding the source. The seed codebook
+    is sliced straight from the k surviving FULL vectors (identical
+    F.slice values) instead of broadcast-joining the ids back against
+    the corpus-sized subvector table — r11: one fewer full pass over
+    ``sub`` per call."""
+    sub = _pq_subvectors(emb).localCheckpoint(eager=True)
+    seed_vecs = (
+        emb.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
+        .limit(_PQ_CODES)
+        .withColumn(
+            "code_id",
+            (F.row_number().over(
+                Window.orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
+            ) - 1).cast("int"),
+        )
+    )
+    seed_books = _pq_subvectors(seed_vecs, id_cols=("code_id",)).select(
+        "sub_idx", "code_id", F.col("subvec").alias("c_sub")
+    )
+    books = _centroid_means(
+        sub.join(_pq_assign(sub, seed_books), ["vec_id", "sub_idx"]),
+        ["sub_idx", "code_id"], "subvec", "c_sub",
+    )
+    return sub, books
+
+
+def _pq_dtable(emb: DataFrame, books: DataFrame) -> DataFrame:
+    """ADC distance table (query_id, sub_idx, code_id, d2): each query
+    subvector against every codebook cell — 10 queries × m·k cells,
+    broadcastable by construction."""
+    q_sub = _pq_subvectors(
+        emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
+    ).select(
+        F.col("vec_id").alias("query_id"), "sub_idx",
+        F.col("subvec").alias("q_sub"),
+    )
+    return q_sub.join(F.broadcast(books), "sub_idx").select(
+        "query_id", "sub_idx", "code_id",
+        l2sq_unrolled(F.col("q_sub"), F.col("c_sub"), _PQ_SUBDIM).alias("d2"),
+    )
+
+
+def _rerank_top5(emb: DataFrame, scored: DataFrame) -> DataFrame:
+    """Top 5 neighbours per query by EXACT L2 over a 50-deep shortlist
+    of ``scored``'s (query_id, neighbor_id, approx_dist2) ADC ranking —
+    the production PQ pattern: full-precision distances are computed
+    for 50 vectors per query instead of the corpus."""
+    shortlist = (
+        scored.withColumn(
+            "srank",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    "approx_dist2", "neighbor_id"
+                )
+            ),
+        )
+        .filter(F.col("srank") <= 50)
+        .select("query_id", "neighbor_id", "approx_dist2")
+    )
+    reranked = (
+        shortlist.join(
+            emb.select(
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("n_emb"),
+            ),
+            "neighbor_id",
+        )
+        .join(F.broadcast(_query_vecs(emb)), "query_id")
+        .select(
+            "query_id", "neighbor_id", "approx_dist2",
+            l2sq_unrolled(
+                F.col("q_emb"), F.col("n_emb"), _PQ_M * _PQ_SUBDIM
+            ).alias("exact_dist2"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy("exact_dist2", "neighbor_id")
+    return (
+        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= 5)
+        .select(
+            "query_id", "neighbor_id", "approx_dist2", "exact_dist2", "rank"
         )
     )
 
@@ -3290,122 +3407,16 @@ def _pq_assign(sub: DataFrame, books: DataFrame) -> DataFrame:
     tags=("llm", "similarity", "topk"),
 )
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vector import l2sq_unrolled
-
     emb = load(spark, sf_dir, "embeddings")
-    # three consumers below (seed_assign, books, codes) — materialize
-    # once or each branch re-scans + re-explodes the source
-    sub = _pq_subvectors(emb).localCheckpoint(eager=True)
-    # Deterministic seed rows (shared across subspaces): the k vectors
-    # with smallest xxhash64(vec_id) — TakeOrderedAndProject, O(n).
-    # The seed codebook is sliced straight from the k surviving FULL
-    # vectors (identical F.slice values) instead of broadcast-joining
-    # the ids back against the corpus-sized subvector table — r11:
-    # one fewer full pass over `sub` per call.
-    seed_vecs = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
-        .limit(_PQ_CODES)
-        .withColumn(
-            "code_id",
-            (F.row_number().over(
-                Window.orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
-            ) - 1).cast("int"),
-        )
-    )
-    seed_books = _pq_subvectors(seed_vecs, id_cols=("code_id",)).select(
-        "sub_idx", "code_id", F.col("subvec").alias("c_sub")
-    )
-    # One Lloyd refinement per subspace: code centroid <- mean of its
-    # assigned subvectors; (sub, code, dim)-keyed partial agg, output
-    # bounded at m·k·subdim rows.
-    seed_assign = _pq_assign(sub, seed_books)
-    books = (
-        sub.join(seed_assign, ["vec_id", "sub_idx"])
-        .select(
-            "sub_idx", "code_id", F.posexplode("subvec").alias("pos", "v")
-        )
-        .groupBy("sub_idx", "code_id", "pos")
-        .agg(F.avg("v").alias("m"))
-        .groupBy("sub_idx", "code_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s"))
-        .select(
-            "sub_idx",
-            "code_id",
-            F.transform("s", lambda x: x.m.cast("float")).alias("c_sub"),
-        )
-        .localCheckpoint(eager=True)  # m·k rows; reused by encode + ADC
-    )
+    sub, books = _pq_codebooks(emb)
     codes = _pq_assign(sub, books)
-
-    # ADC: per-query distance table against every codebook cell —
-    # 10 queries × m·k cells, broadcastable by construction.
-    queries = _pq_subvectors(
-        emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
-    ).select(
-        F.col("vec_id").alias("query_id"), "sub_idx",
-        F.col("subvec").alias("q_sub"),
-    )
-    dtable = (
-        queries.join(F.broadcast(books), "sub_idx")
-        .select(
-            "query_id",
-            "sub_idx",
-            "code_id",
-            l2sq_unrolled(
-                F.col("q_sub"), F.col("c_sub"), _PQ_SUBDIM
-            ).alias("d2"),
-        )
-    )
     scored = (
-        codes.join(F.broadcast(dtable), ["sub_idx", "code_id"])
+        codes.join(F.broadcast(_pq_dtable(emb, books)), ["sub_idx", "code_id"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d2").alias("approx_dist2"))
     )
-    # shortlist by ADC, then EXACT re-rank of only the shortlist — the
-    # production PQ pattern: full-precision distances are computed for
-    # 50 vectors/query instead of the corpus.
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist2"), "neighbor_id"
-    )
-    shortlist = (
-        scored.withColumn("srank", F.row_number().over(w_short))
-        .filter(F.col("srank") <= 50)
-        .select("query_id", "neighbor_id", "approx_dist2")
-    )
-    q_full = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    reranked = (
-        shortlist.join(
-            emb.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("n_emb"),
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(q_full), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_dist2",
-            l2sq_unrolled(
-                F.col("q_emb"), F.col("n_emb"), _PQ_M * _PQ_SUBDIM
-            ).alias("exact_dist2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("exact_dist2"), "neighbor_id"
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id", "neighbor_id", "approx_dist2", "exact_dist2", "rank"
-        )
-    )
+    return _rerank_top5(emb, scored)
 
 
 @register(
@@ -3807,10 +3818,6 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity", "topk"),
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..functions.vector import l2sq_unrolled
-
     emb = load(spark, sf_dir, "embeddings")
 
     # The IVF coarse stage and the PQ codebook stage read only `emb`
@@ -3821,99 +3828,22 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scheduler back-fills the tail of one chain with the other's
     # stages (guide-standard overlap of independent jobs); each chain
     # is internally unchanged and deterministic, so results are
-    # identical.
+    # identical. Each thread runs under the caller's job group and tags.
     def _build_ivf():
-        # fixed-k hash-picked seeds + 1 Lloyd pass
-        seeds = (
-            emb.select(
-                F.col("vec_id").alias("cell_id"),
-                F.col("embedding").alias("c_emb"),
-            )
-            .orderBy(F.xxhash64(F.col("cell_id")), "cell_id")
-            .limit(_IVF_K)
-        )
-        seed_assign = _ivf_assign(emb, seeds)
-        cent = (
-            emb.join(seed_assign, "vec_id")
-            .select("cell_id", F.posexplode("embedding").alias("pos", "v"))
-            .groupBy("cell_id", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("cell_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias(
-                    "s"
-                )
-            )
-            .select(
-                "cell_id",
-                F.transform("s", lambda x: x.m.cast("float")).alias(
-                    "c_emb"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
+        cent = _ivf_centroids(emb)
         return cent, _ivf_assign(emb, cent).localCheckpoint(eager=True)
 
-    def _build_pq():
-        # codebooks; four consumers of `sub` (seed_books, seed assign,
-        # books, codes) — materialize once or each branch re-scans +
-        # re-explodes the source
-        sub = _pq_subvectors(emb).localCheckpoint(eager=True)
-        # seed codebook sliced straight from the k surviving FULL
-        # vectors (identical F.slice values) instead of broadcast-
-        # joining the ids back against the corpus-sized subvector
-        # table — r11, same fusion as ann_pq_topk
-        pq_seed_vecs = (
-            emb.select("vec_id", "embedding")
-            .orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
-            .limit(_PQ_CODES)
-            .withColumn(
-                "code_id",
-                (F.row_number().over(
-                    Window.orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
-                ) - 1).cast("int"),
-            )
-        )
-        seed_books = _pq_subvectors(
-            pq_seed_vecs, id_cols=("code_id",)
-        ).select("sub_idx", "code_id", F.col("subvec").alias("c_sub"))
-        books = (
-            sub.join(_pq_assign(sub, seed_books), ["vec_id", "sub_idx"])
-            .select(
-                "sub_idx", "code_id",
-                F.posexplode("subvec").alias("pos", "v"),
-            )
-            .groupBy("sub_idx", "code_id", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("sub_idx", "code_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias(
-                    "s"
-                )
-            )
-            .select(
-                "sub_idx", "code_id",
-                F.transform("s", lambda x: x.m.cast("float")).alias(
-                    "c_sub"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        return sub, books
-
+    in_group = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        ivf_f = pool.submit(_build_ivf)
-        pq_f = pool.submit(_build_pq)
+        ivf_f = pool.submit(in_group(_build_ivf))
+        pq_f = pool.submit(in_group(_pq_codebooks), emb)
         cent, assign = ivf_f.result()
         sub, books = pq_f.result()
     codes = _pq_assign(sub, books).join(assign, "vec_id")
 
     # ---- search: probe 2 cells, ADC against candidates, re-rank 50
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
     q_cells = (
-        queries.crossJoin(F.broadcast(cent))
+        _query_vecs(emb).crossJoin(F.broadcast(cent))
         .select(
             "query_id",
             "cell_id",
@@ -3930,60 +3860,18 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 2)
         .select("query_id", "cell_id")
     )
-    q_sub = _pq_subvectors(
-        emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
-    ).select(
-        F.col("vec_id").alias("query_id"), "sub_idx",
-        F.col("subvec").alias("q_sub"),
-    )
-    dtable = q_sub.join(F.broadcast(books), "sub_idx").select(
-        "query_id", "sub_idx", "code_id",
-        l2sq_unrolled(F.col("q_sub"), F.col("c_sub"), _PQ_SUBDIM).alias("d2"),
-    )
     cand_codes = codes.join(F.broadcast(q_cells), "cell_id").filter(
         F.col("vec_id") != F.col("query_id")
     )
     scored = (
-        cand_codes.join(F.broadcast(dtable), ["query_id", "sub_idx", "code_id"])
+        cand_codes.join(
+            F.broadcast(_pq_dtable(emb, books)),
+            ["query_id", "sub_idx", "code_id"],
+        )
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d2").alias("approx_dist2"))
     )
-    shortlist = (
-        scored.withColumn(
-            "srank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    "approx_dist2", "neighbor_id"
-                )
-            ),
-        )
-        .filter(F.col("srank") <= 50)
-        .select("query_id", "neighbor_id", "approx_dist2")
-    )
-    reranked = (
-        shortlist.join(
-            emb.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("n_emb"),
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id", "neighbor_id", "approx_dist2",
-            l2sq_unrolled(
-                F.col("q_emb"), F.col("n_emb"), _PQ_M * _PQ_SUBDIM
-            ).alias("exact_dist2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("exact_dist2", "neighbor_id")
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id", "neighbor_id", "approx_dist2", "exact_dist2", "rank"
-        )
-    )
+    return _rerank_top5(emb, scored)
 
 
 _INC_EST_SQL = (
@@ -6231,9 +6119,8 @@ def collocation_pmi_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count tables are data-independent, so their eager checkpoints are
     # submitted from a 2-thread pool (§2.6 overlap, the ann_ivfpq
     # pattern) — built inline they would serialize the two tokenize
-    # passes that previously overlapped inside one job.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # passes that previously overlapped inside one job. Both threads run
+    # under the caller's job group and tags.
     def _build_uni() -> DataFrame:
         return (
             base.select(F.explode(F.col("toks")).alias("term"))
@@ -6262,9 +6149,10 @@ def collocation_pmi_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
+    in_group = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        uni_f = pool.submit(_build_uni)
-        bi_f = pool.submit(_build_bi)
+        uni_f = pool.submit(in_group(_build_uni))
+        bi_f = pool.submit(in_group(_build_bi))
         uni, bi = uni_f.result(), bi_f.result()
 
     nu = uni.agg(F.sum("n_t").cast("bigint").alias("n_uni"))

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from ..scratch import scratch_dir
 from ..catalog import register
+from ..session import child_session
 from ..tables import load
 
 _AGG_ORACLE = """
@@ -201,37 +202,25 @@ def csv_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_plans.py). At 100 TB this is the difference between "
     "a row-count taking milliseconds and a full scan: the table "
     "profile every pipeline health-check opens with. The V2-reader "
-    "confs are scoped to this query (set, evaluated eagerly, "
-    "restored) because the session-global default stays on the "
+    "confs are scoped to this query (read on a child session of the "
+    "caller's) because the session-global default stays on the "
     "battle-tested V1 path.",
     tags=("source", "aggregation", "pushdown"),
 )
 def parquet_stats_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.sources.useV1SourceList",
-            "spark.sql.parquet.aggregatePushdown",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.sources.useV1SourceList", "")
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").agg(
-            F.count(F.lit(1)).alias("n_lineitem"),
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.max("l_partkey").alias("max_partkey"),
-        ).collect()[0]
-        od = spark.read.parquet(f"{sf_dir}/orders.parquet").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.max("o_custkey").alias("max_custkey"),
-        ).collect()[0]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    v2 = child_session(spark, {
+        "spark.sql.sources.useV1SourceList": "",
+        "spark.sql.parquet.aggregatePushdown": "true",
+    })
+    li = v2.read.parquet(f"{sf_dir}/lineitem.parquet").agg(
+        F.count(F.lit(1)).alias("n_lineitem"),
+        F.min("l_orderkey").alias("min_orderkey"),
+        F.max("l_partkey").alias("max_partkey"),
+    ).collect()[0]
+    od = v2.read.parquet(f"{sf_dir}/orders.parquet").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.max("o_custkey").alias("max_custkey"),
+    ).collect()[0]
     return spark.createDataFrame(
         [
             (

@@ -43,6 +43,26 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def child_session(
+    spark: SparkSession, overrides: dict[str, str]
+) -> SparkSession:
+    """``spark.newSession()`` with every runtime-modifiable setting of
+    ``spark`` copied in, then ``overrides`` applied on top.
+
+    A bare new session starts from the static defaults and would lose
+    e.g. ``adaptive.enabled=false``. The child shares the SparkContext
+    but owns its SQL conf and temp views, so settings scoped to one
+    query or stream stay on the child: work running beside it on
+    ``spark`` never sees them, and ``spark``'s conf is never written."""
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    for key, value in overrides.items():
+        child.conf.set(key, value)
+    return child
+
+
 def get_spark(app_name: str = "forex-data-pipeline-spark") -> SparkSession:
     """Build (or reuse) a local session with the engine's tuning applied."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..scratch import scratch_dir
+from ..session import child_session
 
 #: Target bytes of staged input per state-store partition. A stateful
 #: streaming operator creates one state store (files, maintenance
@@ -86,13 +87,9 @@ def stage_tick_stream(
 ) -> DataFrame:
     """Stage ``sf_dir``'s ``events.parquet`` ``copies`` times (symlinks)
     into a fresh stream source directory and return the tick stream over
-    it, read on a child session of ``spark``.
+    it, read on a ``session.child_session`` of ``spark``.
 
-    The child is ``spark.newSession()`` with every runtime-modifiable
-    setting of ``spark`` copied in (a bare new session starts from the
-    static defaults and would lose e.g. ``adaptive.enabled=false``). It
-    shares the SparkContext but owns its SQL conf and temp views, so the
-    state-store width set here (``state_partitions_for`` the staged
+    The state-store width set there (``state_partitions_for`` the staged
     input) and the memory sink's result view stay on the stream's
     session: batch work running beside the drain on ``spark`` keeps its
     own ``spark.sql.shuffle.partitions``. Reach the child, to read the
@@ -101,14 +98,10 @@ def stage_tick_stream(
     src = scratch_dir("fx_stream_src_")
     for i in range(copies):
         os.symlink(f"{sf_dir}/events.parquet", f"{src}/events_{i}.parquet")
-    child = spark.newSession()
-    for key, value in spark.conf.getAll.items():
-        if spark.conf.isModifiable(key):
-            child.conf.set(key, value)
-    child.conf.set(
-        "spark.sql.shuffle.partitions", str(state_partitions_for(spark, src))
-    )
-    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    child = child_session(spark, {
+        "spark.sql.shuffle.partitions": str(state_partitions_for(spark, src)),
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    })
     schema = child.read.parquet(f"{sf_dir}/events.parquet").schema
     return read_tick_stream(child, src, schema)
 

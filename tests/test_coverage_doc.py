@@ -1,7 +1,8 @@
 """COVERAGE.md is the operator inventory — every q:`name`
 it cites must exist in the registry, and every registered query must be
 documented there; every module, test and function it cites must exist.
-Every engine function and class must have a caller outside ``tests/``."""
+Every engine function and class must have a caller outside ``tests/``,
+and no query writes its session's conf."""
 
 from __future__ import annotations
 
@@ -273,3 +274,23 @@ def test_no_unused_imports():
     assert unused == [], (
         f"{len(unused)} unused imports:\n" + "\n".join(unused)
     )
+
+
+def test_queries_never_write_session_conf():
+    """No query module calls ``.conf.set`` or ``.conf.unset``: a query
+    runs on its caller's session, which a batch model may share, so a
+    query-scoped setting belongs on ``session.child_session``."""
+    writes = []
+    for root, _, files in os.walk(os.path.join(PACKAGE, "queries")):
+        for path in sorted(os.path.join(root, f) for f in files):
+            if not path.endswith(".py"):
+                continue
+            writes += [
+                f"{path}:{n.lineno} .conf.{n.attr}"
+                for n in ast.walk(ast.parse(open(path).read(), path))
+                if isinstance(n, ast.Attribute)
+                and n.attr in ("set", "unset")
+                and isinstance(n.value, ast.Attribute)
+                and n.value.attr == "conf"
+            ]
+    assert writes == [], "\n".join(writes)

@@ -133,6 +133,54 @@ def test_ivfpq_recall_and_rank_contract(spark, sf_dir):
     assert recall >= 0.2, f"IVF-PQ recall {recall:.2f}"
 
 
+#: Spark jobs per call + collect, across every thread. The budgets equal
+#: today's counts at sf0.001; re-pin only downward.
+POOL_QUERY_JOB_BUDGET = {
+    "ann_ivf_topk": 16,
+    "ann_pq_topk": 17,
+    "ann_ivfpq_topk": 33,
+    "collocation_pmi_top20": 13,
+}
+
+
+def test_query_jobs_stay_in_caller_job_group(spark, sf_dir):
+    """Every job a query starts, including those its 2-thread training
+    pool submits, carries the caller's job group, so per-query
+    attribution by group counts all of them. Jobs are counted between
+    two marker jobs, whatever their group."""
+    sc = spark.sparkContext
+
+    def in_group(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            return action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def marker(tag):
+        in_group(tag, lambda: sc.parallelize([1], 1).count())
+        return sc.statusTracker().getJobIdsForGroup(tag)[0]
+
+    jobs = {}
+    for name in POOL_QUERY_JOB_BUDGET:
+        tag = f"{name}:{sf_dir}"
+        first = marker(f"before:{tag}")
+        in_group(
+            f"q:{tag}",
+            lambda: catalog.REGISTRY[name].fn(spark, sf_dir).collect(),
+        )
+        total = marker(f"after:{tag}") - first - 1
+        grouped = len(sc.statusTracker().getJobIdsForGroup(f"q:{tag}"))
+        jobs[name] = (grouped, total)
+    escaped = {n: t - g for n, (g, t) in jobs.items() if g != t}
+    assert escaped == {}, f"jobs outside the caller's group: {escaped}"
+    over = {
+        n: t for n, (_, t) in jobs.items() if t > POOL_QUERY_JOB_BUDGET[n]
+    }
+    assert over == {}, f"over budget {POOL_QUERY_JOB_BUDGET}: {over}"
+
+
 def test_near_dup_tau_sits_in_continuous_mass(spark, sf_dir):
     """Empirical basis for embedding_near_dup_pairs being EXACT all-pairs
     (r2 verdict finding #3 resolution): on this corpus the pairwise

@@ -101,6 +101,29 @@ def test_stream_drain_leaves_caller_shuffle_partitions_alone(spark, sf_dir):
     assert seen == {own}
 
 
+def test_parquet_stats_pushdown_never_writes_caller_conf(
+    spark, sf_dir, monkeypatch
+):
+    """parquet_stats_pushdown reads through the V2 reader on a child
+    session: the caller's conf is never set or unset, so a batch model
+    sharing the caller's session keeps reading through V1. The only
+    writes are the registry's ``tune``: the engine's fixed settings,
+    the same on every query call."""
+    from forex_data_pipeline_spark.queries.sources_q import (
+        parquet_stats_pushdown,
+    )
+    from forex_data_pipeline_spark.session import RUNTIME_CONFS
+
+    calls = []
+    for name in ("set", "unset"):
+        monkeypatch.setattr(
+            spark.conf, name, lambda *a, _n=name: calls.append((_n, a))
+        )
+    assert parquet_stats_pushdown(spark, sf_dir).count() == 1
+    tune = [("set", kv) for kv in RUNTIME_CONFS.items()]
+    assert calls == tune
+
+
 def test_stream_session_inherits_caller_runtime_conf(spark, sf_dir):
     """The stream's session is a child of the caller's that carries the
     caller's runtime-only settings plus its own state-store width."""

@@ -11,6 +11,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from forex_data_pipeline_spark import catalog
+from forex_data_pipeline_spark.session import child_session
 from forex_data_pipeline_spark.tables import load
 
 catalog._ensure_loaded()
@@ -284,23 +285,16 @@ def test_skipgram_has_no_positional_self_join(spark, sf_dir):
 def test_parquet_aggregate_pushdown_reaches_footer(spark, sf_dir):
     """COUNT/MIN/MAX must be answered by the reader (PushedAggregation
     in the scan node), not by scanning data pages."""
-    saved = spark.conf.get("spark.sql.sources.useV1SourceList", None)
-    try:
-        spark.conf.set("spark.sql.sources.useV1SourceList", "")
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        import pyspark.sql.functions as F
+    import pyspark.sql.functions as F
 
-        agg = spark.read.parquet(f"{sf_dir}/lineitem.parquet").agg(
-            F.count(F.lit(1)), F.min("l_orderkey"), F.max("l_partkey")
-        )
-        plan = plan_of(agg)
-        assert "PushedAggregation: [COUNT(*)" in plan
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
-        if saved is None:
-            spark.conf.unset("spark.sql.sources.useV1SourceList")
-        else:
-            spark.conf.set("spark.sql.sources.useV1SourceList", saved)
+    v2 = child_session(spark, {
+        "spark.sql.sources.useV1SourceList": "",
+        "spark.sql.parquet.aggregatePushdown": "true",
+    })
+    agg = v2.read.parquet(f"{sf_dir}/lineitem.parquet").agg(
+        F.count(F.lit(1)), F.min("l_orderkey"), F.max("l_partkey")
+    )
+    assert "PushedAggregation: [COUNT(*)" in plan_of(agg)
 
 
 def test_incremental_dedup_band_join_is_shuffle(spark, sf_dir):

@@ -10,66 +10,40 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_streaming_dedup_drops_in_stream_duplicates(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    ticks = pd.DataFrame(
-        {
-            "k": [1, 1, 2, 3, 3, 3],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00:00"] * 2
-                + ["2024-01-01 00:01:00"]
-                + ["2024-01-01 00:02:00"] * 3
-            ),
-            "v": [10, 10, 20, 30, 30, 30],
-        }
-    )
-    sdf = spark.createDataFrame(ticks).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    sdf.write.parquet(str(src / "batch"))
-
-    stream = spark.readStream.schema(sdf.schema).parquet(str(src / "batch"))
-    deduped = (
-        stream.withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["k"])
-    )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("dedup_t").toPandas().sort_values("k").reset_index(drop=True)
-    assert got.k.tolist() == [1, 2, 3]
-    assert got.v.tolist() == [10, 20, 30]
-
-
-def test_drop_duplicates_within_watermark(spark, tmp_path):
+@pytest.mark.parametrize(
+    "k,ts,v",
+    [
+        pytest.param(
+            [1, 1, 2, 2, 3],
+            [
+                "2024-01-01 00:00:00",
+                "2024-01-01 00:00:30",  # dup of k=1, 30s later
+                "2024-01-01 00:01:00",
+                "2024-01-01 00:01:20",  # dup of k=2
+                "2024-01-01 00:02:00",
+            ],
+            [10, 11, 20, 21, 30],
+            id="later_dups",
+        ),
+        pytest.param(
+            [1, 1, 2, 3, 3, 3],
+            ["2024-01-01 00:00:00"] * 2
+            + ["2024-01-01 00:01:00"]
+            + ["2024-01-01 00:02:00"] * 3,
+            [10, 10, 20, 30, 30, 30],
+            id="same_ts_dups",
+        ),
+    ],
+)
+def test_drop_duplicates_within_watermark(spark, tmp_path, k, ts, v):
     """dropDuplicatesWithinWatermark (Spark 3.5+): duplicate keys
-    arriving within the watermark delay are dropped, and the dedup
-    state is EXPIRABLE (bounded by the watermark) — unlike plain
-    streaming dropDuplicates whose state grows forever."""
+    arriving within the watermark delay are dropped, whether they come
+    later or at the same timestamp, and the dedup state is EXPIRABLE
+    (bounded by the watermark) — unlike plain streaming dropDuplicates
+    whose state grows forever."""
     src = tmp_path / "ddw_src"
     src.mkdir()
-    ticks = pd.DataFrame(
-        {
-            "k": [1, 1, 2, 2, 3],
-            "ts": pd.to_datetime(
-                [
-                    "2024-01-01 00:00:00",
-                    "2024-01-01 00:00:30",  # dup of k=1, 30s later
-                    "2024-01-01 00:01:00",
-                    "2024-01-01 00:01:20",  # dup of k=2
-                    "2024-01-01 00:02:00",
-                ]
-            ),
-            "v": [10, 11, 20, 21, 30],
-        }
-    )
+    ticks = pd.DataFrame({"k": k, "ts": pd.to_datetime(ts), "v": v})
     sdf = spark.createDataFrame(ticks).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
