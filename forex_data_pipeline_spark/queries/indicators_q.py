@@ -26,7 +26,7 @@ from pyspark.sql.window import Window
 from ..catalog import register
 from ..operators.candles import ohlc_window
 from ..tables import load
-from .timeseries import _bucket_sql
+from .timeseries import _bucket_sql, _hourly_click_view
 
 # ------------------------------------------------------------ shared base
 
@@ -52,6 +52,15 @@ _HOURLY_MICRO_SQL = f"""
         FROM candles
     )
 """
+
+
+def _hourly_close(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, candle_start, v): the hourly close per event_type,
+    input of the sequential-recurrence kernels."""
+    ev = load(spark, sf_dir, "events")
+    return ohlc_window(
+        ev, "ts", "value", ["event_type"], duration="1 hour"
+    ).select("event_type", "candle_start", F.col("close_value").alias("v"))
 
 
 def _hourly_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,11 +522,7 @@ def ewma_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    ev = load(spark, sf_dir, "events")
-    candles = (
-        ohlc_window(ev, "ts", "value", ["event_type"], duration="1 hour")
-        .select("event_type", "candle_start", F.col("close_value").alias("v"))
-    )
+    candles = _hourly_close(spark, sf_dir)
 
     schema = T.StructType([
         T.StructField("event_type", T.StringType()),
@@ -783,23 +788,7 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "window", "stats"),
 )
 def rolling_correlation_30(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import bucket
-
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "view")
-    )
-    candles = ev.groupBy(
-        bucket(F.col("ts"), 3600).alias("candle_start"), "event_type"
-    ).agg(
-        F.round(F.max_by("value", "ts") * 1000000).cast("bigint").alias("cm")
-    )
-    a = candles.filter(F.col("event_type") == "click").select(
-        "candle_start", F.col("cm").alias("x")
-    )
-    b = candles.filter(F.col("event_type") == "view").select(
-        "candle_start", F.col("cm").alias("y")
-    )
-    paired = a.join(b, "candle_start")
+    paired = _hourly_click_view(spark, sf_dir)
     w = Window.orderBy("candle_start").rowsBetween(-29, 0)
     m = paired.select(
         "candle_start",
@@ -1986,12 +1975,7 @@ def holt_winters_des(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    ev = load(spark, sf_dir, "events")
-    candles = (
-        ohlc_window(ev, "ts", "value", ["event_type"], duration="1 hour")
-        .select("event_type", "candle_start",
-                F.col("close_value").alias("v"))
-    )
+    candles = _hourly_close(spark, sf_dir)
 
     schema = T.StructType([
         T.StructField("event_type", T.StringType()),

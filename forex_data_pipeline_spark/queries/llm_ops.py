@@ -17,7 +17,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -40,7 +40,8 @@ from ..functions.text import (
 from ..functions.vector import (
     cosine, cosine_sql, dot, dot_sql, l2sq_unrolled, norm,
 )
-from ..scratch import scratch_dir, stage_hash_chunks
+from ..session import shuffle_width
+from ..streaming.candles_stream import run_stream_fold
 from ..tables import load
 
 MINHASH_K = 8          # signature length
@@ -74,11 +75,7 @@ def _spread(df: DataFrame) -> DataFrame:
     local[32]; on a real cluster with many input splits this stage is
     effectively a no-op, and it is keyed, not round-robin, to stay
     deterministic."""
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, "doc_id")
+    return df.repartition(shuffle_width(df.sparkSession), "doc_id")
 
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,6 +188,22 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _top20_by_occurrences(items: DataFrame, key: str) -> DataFrame:
+    """The 20 most frequent ``key`` values of (doc_id, ``key``) rows,
+    ties broken by ``key``, with their document and occurrence
+    counts."""
+    agg = items.groupBy(key).agg(
+        F.count_distinct("doc_id").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_occurrences"),
+    )
+    w = Window.orderBy(F.col("n_occurrences").desc(), key)
+    return (
+        agg.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 20)
+        .select(key, "n_docs", "n_occurrences")
+    )
+
+
 @register(
     "vocab_top20",
     oracle=f"""
@@ -211,16 +224,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vocab_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
-    agg = tok.groupBy("token").agg(
-        F.count_distinct("doc_id").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_occurrences"),
-    )
-    w = Window.orderBy(F.col("n_occurrences").desc(), "token")
-    return (
-        agg.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select("token", "n_docs", "n_occurrences")
-    )
+    return _top20_by_occurrences(tok, "token")
 
 
 # ------------------------------------------------------------------ dedup
@@ -331,6 +335,67 @@ def _band_hash_cols() -> list[tuple[str, list[str]]]:
     ]
 
 
+def _lsh_candidates(
+    sig: DataFrame,
+    bands: int = LSH_BANDS,
+    rows: int = LSH_ROWS,
+    cut: DataFrame | None = None,
+) -> tuple[DataFrame, Column]:
+    """Candidate pairs ``a_id < b_id`` of the wide signature table
+    ``sig`` under a ``bands`` × ``rows`` banding, and their signature
+    agreement (matching ``m{i}`` count, 0..K). One equi-join on
+    (band, band hash) with both signatures riding through it — no
+    per-band join + union + distinct, no join back onto ``sig``; a pair
+    colliding in several bands is kept only from its FIRST shared band
+    (map-side array compare), so it appears exactly once. ``cut``, a
+    1-row frame, limits the b side to ``b_id >= cutoff`` (broadcast)."""
+    bhs = F.array(
+        *[
+            F.md5(
+                F.concat_ws("|", *[f"m{i * rows + j}" for j in range(rows)])
+            )
+            for i in range(bands)
+        ]
+    )
+    e = sig.select(
+        "doc_id",
+        *[f"m{i}" for i in range(MINHASH_K)],
+        bhs.alias("bhs"),
+        F.posexplode(bhs).alias("bk", "h"),
+    )
+
+    def side(p: str) -> DataFrame:
+        return e.select(
+            F.col("doc_id").alias(f"{p}_id"),
+            *[F.col(f"m{i}").alias(f"{p}_m{i}") for i in range(MINHASH_K)],
+            F.col("bhs").alias(f"{p}_bhs"),
+            "bk",
+            "h",
+        )
+
+    b = side("b")
+    if cut is not None:
+        b = (
+            b.join(F.broadcast(cut), F.col("b_id") >= F.col("cutoff"))
+            .drop("cutoff")
+        )
+    first_band = F.lit(True)
+    for j in range(bands - 1):
+        earlier_hit = (F.col("bk") > j) & (
+            F.col("a_bhs")[j] == F.col("b_bhs")[j]
+        )
+        first_band = first_band & ~earlier_hit
+    agreement = sum(
+        F.when(F.col(f"a_m{i}") == F.col(f"b_m{i}"), 1).otherwise(0)
+        for i in range(MINHASH_K)
+    )
+    pairs = (
+        side("a").join(b, ["bk", "h"])
+        .filter((F.col("a_id") < F.col("b_id")) & first_band)
+    )
+    return pairs, agreement
+
+
 _LSH_PAIRS_ORACLE = f"""
     WITH sig AS ({_SIG_WIDE_CTE}),
     bands AS (
@@ -369,49 +434,48 @@ _LSH_PAIRS_ORACLE = f"""
     shard_key="a_id",
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One materialization of the signature table (docs × K longs); the
-    # signature columns RIDE THROUGH the band join, so there is exactly
-    # ONE join in the whole plan — no per-band join + union + distinct,
-    # and no joining signatures back onto candidate pairs afterwards.
+    # One materialization of the signature table (docs × K longs),
+    # then exactly ONE join in the whole plan (_lsh_candidates).
     sig = _sig_wide(spark, sf_dir).localCheckpoint(eager=True)
-    band_hashes = F.array(
-        *[F.md5(F.concat_ws("|", *ms)) for _, ms in _band_hash_cols()]
-    )
-    e = sig.select(
-        "doc_id",
-        *[f"m{i}" for i in range(MINHASH_K)],
-        band_hashes.alias("bhs"),
-        F.posexplode(band_hashes).alias("bk", "h"),
-    )
-
-    def side(p: str) -> DataFrame:
-        return e.select(
-            F.col("doc_id").alias(f"{p}_id"),
-            *[F.col(f"m{i}").alias(f"{p}_m{i}") for i in range(MINHASH_K)],
-            F.col("bhs").alias(f"{p}_bhs"),
-            "bk",
-            "h",
-        )
-
-    # a pair colliding in several bands is emitted only from its FIRST
-    # shared band (map-side array compare) — exactly-once without a
-    # distinct over the candidate×bands blow-up
-    first_band = F.lit(True)
-    for j in range(LSH_BANDS - 1):
-        earlier_hit = (F.col("bk") > j) & (
-            F.col("a_bhs")[j] == F.col("b_bhs")[j]
-        )
-        first_band = first_band & ~earlier_hit
-    agreement = sum(
-        F.when(F.col(f"a_m{i}") == F.col(f"b_m{i}"), 1).otherwise(0)
-        for i in range(MINHASH_K)
-    )
+    pairs, agreement = _lsh_candidates(sig)
     est = agreement.cast("double") / MINHASH_K
     return (
-        side("a").join(side("b"), ["bk", "h"])
-        .filter((F.col("a_id") < F.col("b_id")) & first_band)
-        .select("a_id", "b_id", est.alias("est_jaccard"))
+        pairs.select("a_id", "b_id", est.alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= 0.5)
+    )
+
+
+def _shingle_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(a_id, b_id, n_common, na, nb) for every document pair a < b
+    sharing at least one distinct 5-gram shingle: the shared-shingle
+    blocking self-join, then the pair's common-shingle count and each
+    side's shingle-set size. The size rides WITH each shingle row (a
+    window count over the doc_id partitioning ``_spread`` already
+    established — no extra exchange) instead of living in a separate
+    counts aggregate, which would be a third execution of the
+    tokenize+distinct subtree plus two broadcast joins to re-attach
+    sizes after the pair aggregation (r11: scans 4 → 2 in the plan
+    audit). min(na)/min(nb) recover the group-constant sizes exactly —
+    integer min, order-independent."""
+    sh = _doc_shingles(spark, sf_dir)
+    shn = sh.withColumn(
+        "n", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+    )
+    return (
+        shn.alias("a")
+        .join(
+            shn.alias("b"),
+            (F.col("a.sh") == F.col("b.sh"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_common"),
+            F.min(F.col("a.n")).alias("na"),
+            F.min(F.col("b.n")).alias("nb"),
+        )
     )
 
 
@@ -439,32 +503,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "join"),
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same shape as containment_pairs (r11): the shingle-set size rides
-    # with each row via a window count over the doc_id partitioning
-    # _spread already established — the separate counts aggregate (the
-    # checkpoint's third consumer) and both size broadcast joins
-    # disappear; min(na)/min(nb) recover the group-constant sizes
-    # exactly.
-    sh = _doc_shingles(spark, sf_dir)
-    shn = sh.withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-    )
-    common = (
-        shn.alias("a")
-        .join(
-            shn.alias("b"),
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.min(F.col("a.n")).alias("na"),
-            F.min(F.col("b.n")).alias("nb"),
-        )
-    )
+    common = _shingle_pair_counts(spark, sf_dir)
     j = F.col("n_common").cast("double") / (
         F.col("na") + F.col("nb") - F.col("n_common")
     )
@@ -504,6 +543,20 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------ similarity search
+
+def _top5_by_cosine(scored: DataFrame) -> DataFrame:
+    """Each query's 5 nearest neighbors of (query_id, neighbor_id,
+    cos_sim) rows, ranked by similarity with neighbor_id as the
+    tie-break."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), "neighbor_id"
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= 5)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    )
+
 
 @register(
     "embedding_cosine_topk",
@@ -550,14 +603,7 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top5_by_cosine(scored)
 
 
 _NEAR_DUP_TAU = 0.45
@@ -802,16 +848,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") != F.col("query_id")
     )
     sim = F.round(cosine(F.col("q_emb"), F.col("embedding")), 6)
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
-    )
-    return (
+    return _top5_by_cosine(
         cand.select(
             "query_id", F.col("vec_id").alias("neighbor_id"),
             sim.alias("cos_sim"),
         )
-        .withColumn("rank", F.row_number().over(w_rank).cast("bigint"))
-        .filter(F.col("rank") <= 5)
     )
 
 
@@ -1238,10 +1279,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         e0 = fp.select(
             "doc_id", "simhash", F.posexplode(bands).alias("bk", "bv")
         )
-        try:
-            width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            width = spark.sparkContext.defaultParallelism
+        width = shuffle_width(spark)
         # probe side pre-widened: the fingerprint aggregate's output is
         # tiny, so AQE would coalesce the probe of the runtime-broadcast
         # join down to 1-3 tasks that must then produce the quadratic
@@ -1763,14 +1801,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top5_by_cosine(scored)
 
 
 @register(
@@ -2194,16 +2225,7 @@ def ngram_lm_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(shingles(tokens(F.col("text")), 3)).alias("gram"),
     )
-    agg = grams.groupBy("gram").agg(
-        F.count_distinct("doc_id").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_occurrences"),
-    )
-    w = Window.orderBy(F.col("n_occurrences").desc(), "gram")
-    return (
-        agg.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select("gram", "n_docs", "n_occurrences")
-    )
+    return _top20_by_occurrences(grams, "gram")
 
 
 @register(
@@ -2234,14 +2256,7 @@ def ngram_lm_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def array_higher_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = load(spark, sf_dir, "embeddings")
-    # the element is float32: BOTH engines must promote to double
-    # BEFORE the x1000 — DuckDB otherwise multiplies in float where
-    # 0.3195f*1000 is exactly 319.5f (rounds 320) while double math
-    # gives 319.4999... (rounds 319); one sf0.1 vector hits this
-    milli = F.transform(
-        F.col("embedding"),
-        lambda e: F.round(e.cast("double") * 1000).cast("bigint"),
-    )
+    milli = _milli_vec()
     return em.select(
         "vec_id",
         F.size("embedding").cast("bigint").alias("dim"),
@@ -2623,37 +2638,7 @@ def token_prefix_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "join"),
 )
 def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The doc's shingle-set size rides WITH each shingle row (window
-    # count over the doc_id partitioning _spread already established —
-    # no extra exchange) instead of living in a separate counts
-    # aggregate: that drops the third execution of the tokenize+
-    # distinct subtree AND both vocabulary broadcast joins the old
-    # shape needed to re-attach sizes after the pair aggregation
-    # (r11: scans 4 → 2 in the plan audit, both size broadcasts gone;
-    # solo probe 1.69 → 1.51 s, warm reruns ~1.0 s at sf0.1).
-    # min(na)/min(nb) recover the group-constant sizes exactly —
-    # integer min, order-independent.
-    sh = _doc_shingles(spark, sf_dir)
-    shn = sh.withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-    )
-    common = (
-        shn.alias("a")
-        .join(
-            shn.alias("b"),
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"),
-            F.col("b.doc_id").alias("b_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.min(F.col("a.n")).alias("na"),
-            F.min(F.col("b.n")).alias("nb"),
-        )
-    )
+    common = _shingle_pair_counts(spark, sf_dir)
     containment = F.col("n_common").cast("double") / F.least(
         F.col("na"), F.col("nb")
     )
@@ -3934,45 +3919,10 @@ _INC_EST_SQL = (
 def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _sig_wide(spark, sf_dir).localCheckpoint(eager=True)
     cut = sig.agg(F.expr("(max(doc_id) * 9) div 10").alias("cutoff"))
-    band_hashes = F.array(
-        *[F.md5(F.concat_ws("|", *ms)) for _, ms in _band_hash_cols()]
-    )
-    e = sig.select(
-        "doc_id",
-        *[f"m{i}" for i in range(MINHASH_K)],
-        band_hashes.alias("bhs"),
-        F.posexplode(band_hashes).alias("bk", "h"),
-    )
-
-    def side(p: str) -> DataFrame:
-        return e.select(
-            F.col("doc_id").alias(f"{p}_id"),
-            *[F.col(f"m{i}").alias(f"{p}_m{i}") for i in range(MINHASH_K)],
-            F.col("bhs").alias(f"{p}_bhs"),
-            "bk",
-            "h",
-        )
-
-    delta = (
-        side("b")
-        .join(F.broadcast(cut), F.col("b_id") >= F.col("cutoff"))
-        .drop("cutoff")
-    )
-    first_band = F.lit(True)
-    for j in range(LSH_BANDS - 1):
-        earlier_hit = (F.col("bk") > j) & (
-            F.col("a_bhs")[j] == F.col("b_bhs")[j]
-        )
-        first_band = first_band & ~earlier_hit
-    agreement = sum(
-        F.when(F.col(f"a_m{i}") == F.col(f"b_m{i}"), 1).otherwise(0)
-        for i in range(MINHASH_K)
-    )
+    pairs, agreement = _lsh_candidates(sig, cut=cut)
     est = agreement.cast("double") / MINHASH_K
     return (
-        side("a").join(delta, ["bk", "h"])
-        .filter((F.col("a_id") < F.col("b_id")) & first_band)
-        .select(
+        pairs.select(
             F.col("a_id").alias("older_id"),
             F.col("b_id").alias("newer_id"),
             est.alias("est_jaccard"),
@@ -4115,33 +4065,8 @@ def boilerplate_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_covariance_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    milli = F.transform(
-        "embedding",
-        lambda e: F.round(e.cast("double") * 1000).cast("bigint"),
-    )
-    # spread before the dim(dim+1)/2-per-vector expansion (r11): the
-    # single-file source otherwise runs the 2080× explode on one core
-    mv = _spread_vecs(emb).select(milli.alias("m"))
-    # upper-triangle outer product, map-side per vector
-    cells = F.flatten(
-        F.transform(
-            "m",
-            lambda x, i: F.transform(
-                F.slice(F.col("m"), i + F.lit(1), F.size("m")),
-                lambda y, j: F.struct(
-                    i.cast("bigint").alias("i"),
-                    (i + j).cast("bigint").alias("j"),
-                    (x * y).alias("p"),
-                ),
-            ),
-        )
-    )
-    cr = (
-        mv.select(F.explode(cells).alias("c"))
-        .groupBy(F.col("c.i").alias("i"), F.col("c.j").alias("j"))
-        .agg(F.sum("c.p").alias("s_ij"))
-    )
-    el = emb.select(F.posexplode(milli).alias("idx", "m"))
+    cr = _moment_cells(emb).select("i", "j", "s_ij")
+    el = emb.select(F.posexplode(_milli_vec()).alias("idx", "m"))
     s = el.groupBy(F.col("idx").cast("bigint").alias("idx")).agg(
         F.sum("m").alias("sm")
     )
@@ -4318,16 +4243,25 @@ def embedding_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stacked.select("r.check_name", "r.n_violations")
 
 
+def _milli_vec() -> Column:
+    """``embedding`` in exact integer milli units. The element is
+    float32: BOTH engines must promote to double BEFORE the x1000 —
+    DuckDB otherwise multiplies in float where 0.3195f*1000 is exactly
+    319.5f (rounds 320) while double math gives 319.4999... (rounds
+    319); one sf0.1 vector hits this."""
+    return F.transform(
+        "embedding",
+        lambda e: F.round(e.cast("double") * 1000).cast("bigint"),
+    )
+
+
 def _spread_vecs(df: DataFrame) -> DataFrame:
     """Spread an embedding frame across the session parallelism, keyed
     by vec_id — the embeddings twin of ``_spread`` (single parquet file
     → one input partition, so a dim²-amplifying explode would run on
     one core). Gated on the actual partition count so an already-wide
     input (a real cluster scan) pays NO extra shuffle."""
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = df.sparkSession.sparkContext.defaultParallelism
+    n = shuffle_width(df.sparkSession)
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, "vec_id")
@@ -4342,12 +4276,7 @@ def _moment_cells(df: DataFrame) -> DataFrame:
     streaming covariance paths rely on. The input is spread first
     (r11): the dim(dim+1)/2-per-vector expansion is the hot loop and a
     single-file source would otherwise run it on one core."""
-    df = _spread_vecs(df)
-    milli = F.transform(
-        "embedding",
-        lambda e: F.round(e.cast("double") * 1000).cast("bigint"),
-    )
-    mv = df.select(milli.alias("m"))
+    mv = _spread_vecs(df).select(_milli_vec().alias("m"))
     cells = F.flatten(
         F.transform(
             "m",
@@ -4459,58 +4388,15 @@ def incremental_covariance_update(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "llm", "vector", "aggregation", "incremental"),
 )
 def streaming_covariance_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from ..sources.writers import replace_table
-
-    emb_path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(emb_path).schema
-    src = scratch_dir("fx_cov_src_")
-    # stage three deterministic hash-chunks as separate stream files in
-    # ONE corpus pass instead of three filtered scans (r11). Row order
-    # within a chunk is the write's, which the moment-cell fold is
-    # insensitive to (commutative exact-integer monoid).
-    emb = load(spark, sf_dir, "embeddings")
-    stage_hash_chunks(emb, "vec_id", src)
-
-    state = scratch_dir("fx_cov_state_") + "/cells"
-
-    def fold(batch_df: DataFrame, _bid: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sp = batch_df.sparkSession
-        cells = _moment_cells(batch_df)
-        # explicit first-batch check: a bare except here would turn a
-        # corrupt/partially-written state read into a silent state
-        # reset (wrong totals); genuine read errors must propagate
-        if os.path.isdir(state):
-            prev = sp.read.parquet(state)
-            cells = (
-                prev.unionByName(cells)
-                .groupBy("i", "j")
-                .agg(F.sum("s_ij").alias("s_ij"), F.sum("n").alias("n"))
-            )
-        replace_table(cells.coalesce(1), state)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    state = run_stream_fold(
+        load(spark, sf_dir, "embeddings"),
+        "vec_id",
+        _moment_cells,
+        lambda cells: cells.groupBy("i", "j").agg(
+            F.sum("s_ij").alias("s_ij"), F.sum("n").alias("n")
+        ),
     )
-    ckpt = scratch_dir("fx_cov_ck_")
-    (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    # the returned DataFrame only needs the state dir; drop the staged
-    # corpus copy + checkpoint eagerly (atexit sweeps the rest)
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(state).select("i", "j", "s_ij", "n")
+    return state.select("i", "j", "s_ij", "n")
 
 
 @register(
@@ -4990,6 +4876,45 @@ def alpha_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QC_BIAS, _QC_W_SW, _QC_W_MTL, _QC_W_DR, _QC_W_LEN = 0.2, 8.0, -0.4, 2.0, 1.5
 
 
+def _qc_features(docs: DataFrame, *cols: str | Column) -> DataFrame:
+    """``cols`` of each document, then the linearized quality
+    classifier's features: stopword ratio, mean token length,
+    distinct-token ratio and length capped at 400 tokens, each an
+    int/int division (correctly rounded, bit-identical across
+    engines). ``quality_classifier_logit`` and the ``classifier_*``
+    evaluations in ``ml_q`` score the same model."""
+    toks = tokens(F.col("text"))
+    n = F.size(toks)
+    return docs.select(
+        *cols,
+        (stopword_hits(toks).cast("double") / n).alias("sw_ratio"),
+        (
+            F.length(F.translate(F.col("text"), " ", "")).cast("double") / n
+        ).alias("mean_tok_len"),
+        (F.size(F.array_distinct(toks)).cast("double") / n).alias(
+            "distinct_ratio"
+        ),
+        (F.least(n, F.lit(400)).cast("double") / F.lit(400.0)).alias(
+            "len_norm"
+        ),
+    )
+
+
+def _qc_logit() -> Column:
+    """The classifier's logit over ``_qc_features``' columns: a
+    FIXED-association multiply/add chain, the one the oracles spell."""
+    return (
+        (
+            (
+                (F.lit(_QC_BIAS) + F.lit(_QC_W_SW) * F.col("sw_ratio"))
+                + F.lit(_QC_W_MTL) * F.col("mean_tok_len")
+            )
+            + F.lit(_QC_W_DR) * F.col("distinct_ratio")
+        )
+        + F.lit(_QC_W_LEN) * F.col("len_norm")
+    )
+
+
 @register(
     "quality_classifier_logit",
     oracle=f"""
@@ -5033,32 +4958,8 @@ _QC_BIAS, _QC_W_SW, _QC_W_MTL, _QC_W_DR, _QC_W_LEN = 0.2, 8.0, -0.4, 2.0, 1.5
     tags=("llm", "text", "quality"),
 )
 def quality_classifier_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n = F.size(toks)
-    feats = docs.select(
-        "doc_id",
-        (stopword_hits(toks).cast("double") / n).alias("sw_ratio"),
-        (
-            F.length(F.translate(F.col("text"), " ", "")).cast("double") / n
-        ).alias("mean_tok_len"),
-        (F.size(F.array_distinct(toks)).cast("double") / n).alias(
-            "distinct_ratio"
-        ),
-        (F.least(n, F.lit(400)).cast("double") / F.lit(400.0)).alias(
-            "len_norm"
-        ),
-    )
-    logit = (
-        (
-            (
-                (F.lit(_QC_BIAS) + F.lit(_QC_W_SW) * F.col("sw_ratio"))
-                + F.lit(_QC_W_MTL) * F.col("mean_tok_len")
-            )
-            + F.lit(_QC_W_DR) * F.col("distinct_ratio")
-        )
-        + F.lit(_QC_W_LEN) * F.col("len_norm")
-    )
+    feats = _qc_features(load(spark, sf_dir, "documents"), "doc_id")
+    logit = _qc_logit()
     return feats.select(
         "doc_id",
         "sw_ratio",
@@ -5858,49 +5759,9 @@ def lsh_band_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _sig_wide(spark, sf_dir).localCheckpoint(eager=True)
     outs = []
     for b, r in _BAND_SENS_CONFIGS:
-        bhs = F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|", *[f"m{i * r + j}" for j in range(r)]
-                    )
-                )
-                for i in range(b)
-            ]
-        )
-        e = sig.select(
-            "doc_id",
-            *[f"m{i}" for i in range(MINHASH_K)],
-            bhs.alias("bhs"),
-            F.posexplode(bhs).alias("bk", "h"),
-        )
-
-        def side(p: str) -> DataFrame:
-            return e.select(
-                F.col("doc_id").alias(f"{p}_id"),
-                *[
-                    F.col(f"m{i}").alias(f"{p}_m{i}")
-                    for i in range(MINHASH_K)
-                ],
-                F.col("bhs").alias(f"{p}_bhs"),
-                "bk",
-                "h",
-            )
-
-        first_band = F.lit(True)
-        for j in range(b - 1):
-            first_band = first_band & ~(
-                (F.col("bk") > j) & (F.col("a_bhs")[j] == F.col("b_bhs")[j])
-            )
-        agreement = sum(
-            F.when(F.col(f"a_m{i}") == F.col(f"b_m{i}"), 1).otherwise(0)
-            for i in range(MINHASH_K)
-        )
+        pairs, agreement = _lsh_candidates(sig, b, r)
         stats = (
-            side("a")
-            .join(side("b"), ["bk", "h"])
-            .filter((F.col("a_id") < F.col("b_id")) & first_band)
-            .agg(
+            pairs.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_candidate_pairs"),
                 F.coalesce(
                     F.sum(

@@ -26,20 +26,24 @@ chains over bit-identical inputs, round(6) only on transcendental
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import register
-from ..functions.text import (
-    stopword_hits,
-    stopword_hits_sql,
-    tokens,
-    tokens_sql,
-)
+from ..functions.text import stopword_hits_sql, tokens, tokens_sql
 from ..functions.vector import cosine, cosine_sql, dot, norm
-from ..scratch import scratch_dir, stage_hash_chunks
+from ..streaming.candles_stream import run_stream_fold
 from ..tables import load
+from .llm_ops import (
+    _QC_BIAS,
+    _QC_W_DR,
+    _QC_W_LEN,
+    _QC_W_MTL,
+    _QC_W_SW,
+    _qc_features,
+    _qc_logit,
+)
 
 # ---------------------------------------------------------------------------
 # BM25 retrieval
@@ -128,6 +132,49 @@ def _per_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
 
+def _bm25_scored(
+    per_doc: DataFrame, *extra_stats: Column
+) -> tuple[DataFrame, Column]:
+    """The BM25-scorable documents of ``per_doc`` (any query term
+    present), each carrying the 1-row collection statistics — N, Σdl,
+    df0..df3, then ``extra_stats`` — as a scalar broadcast plus avgdl;
+    and the rounded BM25 score over those columns."""
+    stats = per_doc.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("dl").alias("sdl"),
+        *[
+            F.sum((F.col(f"tf{i}") > 0).cast("int")).cast("bigint").alias(
+                f"df{i}"
+            )
+            for i in range(len(_BM25_TERMS))
+        ],
+        *extra_stats,
+    )
+    j = per_doc.crossJoin(F.broadcast(stats)).withColumn(
+        "avgdl", F.col("sdl").cast("double") / F.col("n").cast("double")
+    )
+    score = F.round(
+        (
+            ((_bm25_contrib(0) + _bm25_contrib(1)) + _bm25_contrib(2))
+            + _bm25_contrib(3)
+        ),
+        6,
+    )
+    tf_any = sum(F.col(f"tf{i}") for i in range(len(_BM25_TERMS)))
+    return j.filter(tf_any > 0), score
+
+
+def _ranked_topk(scored: DataFrame, score: str) -> DataFrame:
+    """The ``_BM25_TOPK`` highest-``score`` documents of (doc_id,
+    ``score``) rows, doc_id as the unique tie-break, with their rank:
+    a TakeOrderedAndProject, then a row_number over its k rows."""
+    top = scored.orderBy(F.col(score).desc(), "doc_id").limit(_BM25_TOPK)
+    w = Window.orderBy(F.col(score).desc(), "doc_id")
+    return top.withColumn(
+        "rank", F.row_number().over(w).cast("bigint")
+    ).select("doc_id", score, "rank")
+
+
 @register(
     "bm25_topk",
     oracle=f"""
@@ -171,38 +218,8 @@ def _per_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "retrieval", "topk"),
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_doc = _per_doc_stats(spark, sf_dir)
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dl").alias("sdl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("int")).cast("bigint").alias(
-                f"df{i}"
-            )
-            for i in range(len(_BM25_TERMS))
-        ],
-    )
-    j = per_doc.crossJoin(F.broadcast(stats)).withColumn(
-        "avgdl", F.col("sdl").cast("double") / F.col("n").cast("double")
-    )
-    score = F.round(
-        (
-            ((_bm25_contrib(0) + _bm25_contrib(1)) + _bm25_contrib(2))
-            + _bm25_contrib(3)
-        ),
-        6,
-    )
-    tf_any = sum(F.col(f"tf{i}") for i in range(len(_BM25_TERMS)))
-    scored = (
-        j.filter(tf_any > 0)
-        .select("doc_id", score.alias("bm25"))
-        .orderBy(F.col("bm25").desc(), "doc_id")
-        .limit(_BM25_TOPK)
-    )
-    w = Window.orderBy(F.col("bm25").desc(), "doc_id")
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).select("doc_id", "bm25", "rank")
+    hits, score = _bm25_scored(_per_doc_stats(spark, sf_dir))
+    return _ranked_topk(hits.select("doc_id", score.alias("bm25")), "bm25")
 
 
 # ---------------------------------------------------------------------------
@@ -304,11 +321,6 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Exact AUC of the quality classifier via the Mann–Whitney rank statistic
 # ---------------------------------------------------------------------------
-
-# the linearized quality-classifier weights — shared with
-# queries/llm_ops.py::quality_classifier_logit (same model surface)
-_QC_BIAS, _QC_W_SW, _QC_W_MTL, _QC_W_DR, _QC_W_LEN = 0.2, 8.0, -0.4, 2.0, 1.5
-
 
 @register(
     "classifier_auc_exact",
@@ -887,34 +899,12 @@ def _qc_scored(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
     the shared Spark-side scoring pass behind classifier_auc_exact /
     classifier_auc_by_source / classifier_calibration_bins (each
     oracle repeats the same CTE chain textually)."""
-    docs = load(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n = F.size(toks)
-    feats = docs.select(
+    feats = _qc_features(
+        load(spark, sf_dir, "documents"),
         *keys,
         (F.col("lang") == "en").cast("int").alias("pos"),
-        (stopword_hits(toks).cast("double") / n).alias("sw_ratio"),
-        (
-            F.length(F.translate(F.col("text"), " ", "")).cast("double") / n
-        ).alias("mean_tok_len"),
-        (F.size(F.array_distinct(toks)).cast("double") / n).alias(
-            "distinct_ratio"
-        ),
-        (F.least(n, F.lit(400)).cast("double") / F.lit(400.0)).alias(
-            "len_norm"
-        ),
     )
-    score = (
-        (
-            (
-                (F.lit(_QC_BIAS) + F.lit(_QC_W_SW) * F.col("sw_ratio"))
-                + F.lit(_QC_W_MTL) * F.col("mean_tok_len")
-            )
-            + F.lit(_QC_W_DR) * F.col("distinct_ratio")
-        )
-        + F.lit(_QC_W_LEN) * F.col("len_norm")
-    )
-    return feats.select(*keys, "pos", score.alias("score"))
+    return feats.select(*keys, "pos", _qc_logit().alias("score"))
 
 
 @register(
@@ -1100,15 +1090,9 @@ def query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
          + _ql_contrib(3)),
         6,
     )
-    scored = (
-        j.select("doc_id", score.alias("ql_logprob"))
-        .orderBy(F.col("ql_logprob").desc(), "doc_id")
-        .limit(_BM25_TOPK)
+    return _ranked_topk(
+        j.select("doc_id", score.alias("ql_logprob")), "ql_logprob"
     )
-    w = Window.orderBy(F.col("ql_logprob").desc(), "doc_id")
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).select("doc_id", "ql_logprob", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -1302,39 +1286,20 @@ def prf_expansion_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "retrieval", "eval"),
 )
 def ranker_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_doc = _per_doc_stats(spark, sf_dir)
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dl").alias("sdl"),
+    hits, bm25 = _bm25_scored(
+        _per_doc_stats(spark, sf_dir),
         F.sum("dl").cast("bigint").alias("total_tokens"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("int")).cast("bigint").alias(
-                f"df{i}"
-            )
-            for i in range(len(_BM25_TERMS))
-        ],
         *[
             F.sum(f"tf{i}").cast("bigint").alias(f"cf{i}")
             for i in range(len(_BM25_TERMS))
         ],
-    )
-    j = per_doc.crossJoin(F.broadcast(stats)).withColumn(
-        "avgdl", F.col("sdl").cast("double") / F.col("n").cast("double")
-    )
-    bm25 = F.round(
-        (((_bm25_contrib(0) + _bm25_contrib(1)) + _bm25_contrib(2))
-         + _bm25_contrib(3)),
-        6,
     )
     ql = F.round(
         (((_ql_contrib(0) + _ql_contrib(1)) + _ql_contrib(2))
          + _ql_contrib(3)),
         6,
     )
-    tf_any = sum(F.col(f"tf{i}") for i in range(len(_BM25_TERMS)))
-    scored = j.filter(tf_any > 0).select(
-        "doc_id", bm25.alias("bm25"), ql.alias("ql")
-    )
+    scored = hits.select("doc_id", bm25.alias("bm25"), ql.alias("ql"))
     ranked = scored.select(
         F.row_number()
         .over(Window.orderBy(F.col("bm25").desc(), "doc_id"))
@@ -1525,61 +1490,20 @@ def _retrieval_stats_state(batch: DataFrame) -> DataFrame:
     tags=("streaming", "llm", "retrieval", "incremental"),
 )
 def streaming_retrieval_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from ..sources.writers import replace_table
-
-    docs_path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(docs_path).schema
-    src = scratch_dir("fx_rstat_src_")
-    docs = load(spark, sf_dir, "documents")
-    # Stage all three hash-chunks in ONE corpus pass instead of three
-    # filtered scans (r11). Row order within a chunk file is the
-    # write's, which the folded state is insensitive to by construction
-    # (commutative exact-integer monoid).
-    stage_hash_chunks(docs, "doc_id", src)
-
-    state = scratch_dir("fx_rstat_state_") + "/stats"
-
-    def fold(batch_df: DataFrame, _bid: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sp = batch_df.sparkSession
-        cells = _retrieval_stats_state(batch_df)
-        # explicit first-batch check: a bare except would turn a
-        # corrupt/partial state read into a silent reset to
-        # current-batch-only stats; real read errors must propagate
-        if os.path.isdir(state):
-            prev = sp.read.parquet(state)
-            cells = prev.unionByName(cells).agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("sdl").cast("bigint").alias("sdl"),
-                *[
-                    F.sum(f"df{i}").cast("bigint").alias(f"df{i}")
-                    for i in range(len(_BM25_TERMS))
-                ],
-            )
-        replace_table(cells.coalesce(1), state)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    state = run_stream_fold(
+        load(spark, sf_dir, "documents"),
+        "doc_id",
+        _retrieval_stats_state,
+        lambda cells: cells.agg(
+            F.sum("n").cast("bigint").alias("n"),
+            F.sum("sdl").cast("bigint").alias("sdl"),
+            *[
+                F.sum(f"df{i}").cast("bigint").alias(f"df{i}")
+                for i in range(len(_BM25_TERMS))
+            ],
+        ),
     )
-    ckpt = scratch_dir("fx_rstat_ck_")
-    (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    # the returned DataFrame only needs the state dir; drop the staged
-    # corpus copy + checkpoint eagerly (atexit sweeps the rest)
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(state).select(
+    return state.select(
         F.col("n").alias("n_docs"),
         F.col("sdl").alias("total_tokens"),
         *[f"df{i}" for i in range(len(_BM25_TERMS))],
@@ -1769,31 +1693,10 @@ def ndcg_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(len(_BM25_TERMS))
     )
     rels = per_doc.select("doc_id", rel.alias("rel"))
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dl").alias("sdl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("int")).cast("bigint").alias(
-                f"df{i}"
-            )
-            for i in range(len(_BM25_TERMS))
-        ],
-    )
-    j = per_doc.crossJoin(F.broadcast(stats)).withColumn(
-        "avgdl", F.col("sdl").cast("double") / F.col("n").cast("double")
-    )
-    score = F.round(
-        (
-            ((_bm25_contrib(0) + _bm25_contrib(1)) + _bm25_contrib(2))
-            + _bm25_contrib(3)
-        ),
-        6,
-    )
-    tf_any = sum(F.col(f"tf{i}") for i in range(len(_BM25_TERMS)))
+    hits, score = _bm25_scored(per_doc)
     w = Window.orderBy(F.col("score").desc(), "doc_id")
     ranked = (
-        j.filter(tf_any > 0)
-        .select("doc_id", rel.alias("rel"), score.alias("score"))
+        hits.select("doc_id", rel.alias("rel"), score.alias("score"))
         .withColumn("rn", F.row_number().over(w))
         .select("doc_id", "rel", "rn")
     )

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import register
 from ..operators.joins import asof_join, range_join
+from ..session import shuffle_width
 from ..tables import load
 
 
@@ -4371,11 +4372,9 @@ def triangle_count_part_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0][0]
         or 0
     )
-    try:
-        base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        base = spark.sparkContext.defaultParallelism
-    width = max(base, min(4096, wedge_elems * 16 // (64 << 20) + 1))
+    width = max(
+        shuffle_width(spark), min(4096, wedge_elems * 16 // (64 << 20) + 1)
+    )
     adj_u = adj.select(F.col("node").alias("u"), F.col("nbrs").alias("nu"))
     adj_v = adj.select(F.col("node").alias("v"), F.col("nbrs").alias("nv"))
     # edge (u,v): common out-neighbors close one triangle each; the

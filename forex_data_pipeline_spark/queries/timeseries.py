@@ -1413,6 +1413,32 @@ def log_returns_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hourly_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(candle_start, x, y): the hourly closes of the click (x) and view
+    (y) series in integer micro-units, paired on candle_start — hours
+    where only one series ticked drop out."""
+    from ..operators.candles import bucket
+
+    ev = load(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "view")
+    )
+    candles = ev.groupBy(
+        bucket(F.col("ts"), 3600).alias("candle_start"),
+        "event_type",
+    ).agg(
+        F.round(F.max_by("value", "ts") * 1000000)
+        .cast("bigint")
+        .alias("close_micro")
+    )
+    a = candles.filter(F.col("event_type") == "click").select(
+        "candle_start", F.col("close_micro").alias("x")
+    )
+    b = candles.filter(F.col("event_type") == "view").select(
+        "candle_start", F.col("close_micro").alias("y")
+    )
+    return a.join(b, "candle_start")
+
+
 @register(
     "series_correlation",
     oracle=f"""
@@ -1457,27 +1483,8 @@ def log_returns_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "join", "stats"),
 )
 def series_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import bucket
-
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "view")
-    )
-    candles = ev.groupBy(
-        bucket(F.col("ts"), 3600).alias("candle_start"),
-        "event_type",
-    ).agg(
-        F.round(F.max_by("value", "ts") * 1000000)
-        .cast("bigint")
-        .alias("close_micro")
-    )
-    a = candles.filter(F.col("event_type") == "click").select(
-        "candle_start", F.col("close_micro").alias("x")
-    )
-    b = candles.filter(F.col("event_type") == "view").select(
-        "candle_start", F.col("close_micro").alias("y")
-    )
     x, y = F.col("x"), F.col("y")
-    s = a.join(b, "candle_start").agg(
+    s = _hourly_click_view(spark, sf_dir).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(x).alias("sx"),
         F.sum(y).alias("sy"),

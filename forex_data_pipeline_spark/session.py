@@ -11,6 +11,7 @@ locale (reference gotcha: BigQuery DATETIME is tz-less — see
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -30,17 +31,39 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     # Window group limit pushdown (Spark 3.5+) accelerates top-k patterns.
     "spark.sql.window.group.limit.threshold": "1000",
+    # events.parquet has been written as TIMESTAMP(NANOS), which the
+    # reader rejects unless read as long (tables.load converts to µs).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+#: Sessions that already carry ``RUNTIME_CONFS``: ``get_spark``'s, and
+#: each session ``tune`` has seen once.
+_TUNED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an externally-provided session."""
+    """Apply ``RUNTIME_CONFS`` to a session we did not build, once: the
+    first call on a session sets them (a caller may hand over an untuned
+    session, and the determinism contract needs UTC); later calls leave
+    the session's conf as its owner set it."""
+    if spark in _TUNED:
+        return spark
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - static conf on odd builds
             pass
+    _TUNED.add(spark)
     return spark
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions``, or the context's
+    default parallelism when that does not read as an integer."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
 
 
 def child_session(
@@ -86,4 +109,6 @@ def get_spark(app_name: str = "forex-data-pipeline-spark") -> SparkSession:
         builder = builder.config("spark.driver.extraJavaOptions", jopts)
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    return tune(builder.getOrCreate())
+    spark = builder.getOrCreate()
+    _TUNED.add(spark)
+    return spark

@@ -20,11 +20,13 @@ semantics. Spark-native mapping:
   exactly the reference's recompute-the-tail design (fct:25-29), see
   ``pipeline.medallion.gold_run``.
 
-Every bounded stream of the catalog is staged by ``stage_tick_stream``
-and read on a child session of the caller's: the stream's state-store
-width and its result view live on that child, so nothing here sets a
-conf on the caller's session and batch models may run beside a drain
-(``pipeline.runner``).
+Every bounded tick stream of the catalog is staged by
+``stage_tick_stream`` and read on a child session of the caller's: the
+stream's state-store width and its result view live on that child, so
+nothing here sets a conf on the caller's session and batch models may
+run beside a drain (``pipeline.runner``). ``run_stream_fold`` drains a
+staged batch frame through a stateless ``foreachBatch`` fold, which
+needs no state-store width.
 
 Scale: streaming state is keyed by (series, window); with watermarking,
 state size ∝ active windows × series, independent of history length.
@@ -33,15 +35,16 @@ state size ∝ active windows × series, independent of history length.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+import shutil
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..scratch import scratch_dir
-from ..session import child_session
+from ..scratch import scratch_dir, stage_hash_chunks
+from ..session import child_session, shuffle_width
 
 #: Target bytes of staged input per state-store partition. A stateful
 #: streaming operator creates one state store (files, maintenance
@@ -73,10 +76,7 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
                 )
         elif os.path.exists(p):
             total += os.path.getsize(p)
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        cap = spark.sparkContext.defaultParallelism
+    cap = shuffle_width(spark)
     if total == 0:
         return cap
     return max(1, min(cap, -(-total // _STATE_PARTITION_BYTES)))
@@ -100,7 +100,6 @@ def stage_tick_stream(
         os.symlink(f"{sf_dir}/events.parquet", f"{src}/events_{i}.parquet")
     child = child_session(spark, {
         "spark.sql.shuffle.partitions": str(state_partitions_for(spark, src)),
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
     })
     schema = child.read.parquet(f"{sf_dir}/events.parquet").schema
     return read_tick_stream(child, src, schema)
@@ -195,3 +194,55 @@ def run_stream_merge_versioned(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def run_stream_fold(
+    df: DataFrame,
+    key: str,
+    state: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Maintain a mergeable state over ``df`` as a real bounded stream
+    and return the final state table. ``df`` is staged as three
+    hash-chunks of ``key`` (``stage_hash_chunks``, one pass) and drained
+    one chunk per micro-batch (``maxFilesPerTrigger=1``, availableNow);
+    each batch's ``state(batch)`` folds into the persisted state as
+    ``merge(previous ∪ state(batch))``, written through
+    ``replace_table``. When ``state`` is a commutative monoid under
+    ``merge``, batch arrival order cannot change the result, so the
+    stream is strict-oracle-checkable against a one-shot aggregate."""
+    from ..sources.writers import replace_table
+
+    spark = df.sparkSession
+    src = scratch_dir("fx_fold_src_")
+    stage_hash_chunks(df, key, src)
+    table = scratch_dir("fx_fold_state_") + "/state"
+
+    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        cells = state(batch_df)
+        # explicit first-batch check: a bare except here would turn a
+        # corrupt/partially-written state read into a silent state
+        # reset (wrong totals); genuine read errors must propagate
+        if os.path.isdir(table):
+            prev = batch_df.sparkSession.read.parquet(table)
+            cells = merge(prev.unionByName(cells))
+        replace_table(cells.coalesce(1), table)
+
+    ckpt = scratch_dir("fx_fold_ck_")
+    (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(_fold)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    # the returned DataFrame only needs the state dir; drop the staged
+    # copy + checkpoint eagerly (atexit sweeps the rest)
+    shutil.rmtree(src, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.read.parquet(table)

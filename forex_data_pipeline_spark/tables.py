@@ -35,11 +35,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     rejects by default (the reference hit the mirror problem: BigQuery
     rejects TIMESTAMP_NANOS, so it downcasts ns→µs before writing —
     /root/reference/scripts/extract_forex.py:173-179). We read nanos as
-    long and truncate to µs exactly like DuckDB's TIMESTAMP_NS→TIMESTAMP
-    cast, keeping the oracle bit-identical.
+    long (``session.RUNTIME_CONFS``, set by ``get_spark`` and by a
+    registered query's first call on a session) and truncate to µs
+    exactly like DuckDB's TIMESTAMP_NS→TIMESTAMP cast, keeping the
+    oracle bit-identical.
     """
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn(

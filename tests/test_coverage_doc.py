@@ -2,7 +2,8 @@
 it cites must exist in the registry, and every registered query must be
 documented there; every module, test and function it cites must exist.
 Every engine function and class must have a caller outside ``tests/``,
-and no query writes its session's conf."""
+only ``session.py`` writes session conf, and no stage is copied across
+functions."""
 
 from __future__ import annotations
 
@@ -276,14 +277,18 @@ def test_no_unused_imports():
     )
 
 
-def test_queries_never_write_session_conf():
-    """No query module calls ``.conf.set`` or ``.conf.unset``: a query
-    runs on its caller's session, which a batch model may share, so a
-    query-scoped setting belongs on ``session.child_session``."""
+def test_only_session_module_writes_session_conf():
+    """No package module but ``session.py`` calls ``.conf.set`` or
+    ``.conf.unset``: a query or loader runs on its caller's session,
+    which a batch model may share, so an engine-wide setting belongs in
+    ``session.RUNTIME_CONFS`` and a query-scoped one on
+    ``session.child_session``."""
     writes = []
-    for root, _, files in os.walk(os.path.join(PACKAGE, "queries")):
+    for root, _, files in os.walk(PACKAGE):
         for path in sorted(os.path.join(root, f) for f in files):
-            if not path.endswith(".py"):
+            if not path.endswith(".py") or path == os.path.join(
+                PACKAGE, "session.py"
+            ):
                 continue
             writes += [
                 f"{path}:{n.lineno} .conf.{n.attr}"
@@ -294,3 +299,152 @@ def test_queries_never_write_session_conf():
                 and n.value.attr == "conf"
             ]
     assert writes == [], "\n".join(writes)
+
+
+# Cross-function windows that are alike in shape only: the clone guard
+# below skips each pair of functions listed here, for the reason given.
+ALIKE_IN_SHAPE = {
+    ("ks_drift_exact", "psi_drift_bins"): "two-sided counts then their "
+    "per-series totals, over different keys (value vs bin) and names",
+    ("udtf_chunk_documents", "udtf_user_session_stats"): "register the "
+    "views, register a UDTF, run one SQL text: the UDTF surface itself",
+}
+
+_CLONE_MIN_LINES = 8
+
+
+def _shape(node, memo: dict) -> int:
+    """A hash of ``node``'s AST with names, arguments, def names and
+    constant values blanked out (constant types kept), so renamed
+    copies hash alike. Memoized per node and list of the parsed tree,
+    which outlive the scan, so each subtree hashes once."""
+    if not isinstance(node, (ast.AST, list)):
+        return hash(repr(node))
+    key = id(node)
+    if key not in memo:
+        if isinstance(node, list):
+            memo[key] = hash(tuple(_shape(v, memo) for v in node))
+        else:
+            parts = [type(node).__name__]
+            for field, value in ast.iter_fields(node):
+                if field in ("ctx", "type_comment"):
+                    continue
+                if (
+                    (field == "id" and isinstance(node, ast.Name))
+                    or (field == "arg" and isinstance(node, ast.arg))
+                    or (field == "name" and isinstance(node, ast.FunctionDef))
+                ):
+                    value = "_"
+                elif field == "value" and isinstance(node, ast.Constant):
+                    value = type(value).__name__
+                parts.append(_shape(value, memo))
+            memo[key] = hash(tuple(parts))
+    return memo[key]
+
+
+def _blocks(fn: ast.FunctionDef):
+    """Every statement list inside ``fn`` but outside its nested defs,
+    minus a leading docstring (prose, not code)."""
+    todo = [fn]
+    while todo:
+        node = todo.pop()
+        blocks = [getattr(node, f, None) for f in ("body", "orelse",
+                                                   "finalbody")]
+        blocks += [h.body for h in getattr(node, "handlers", ())]
+        for block in blocks:
+            if not (isinstance(block, list) and block
+                    and isinstance(block[0], ast.stmt)):
+                continue
+            todo += [s for s in block
+                     if not isinstance(s, (ast.FunctionDef, ast.ClassDef))]
+            first = block[0]
+            if isinstance(first, ast.Expr) and isinstance(
+                getattr(first, "value", None), ast.Constant
+            ) and isinstance(first.value.value, str):
+                block = block[1:]
+            yield block
+
+
+def _clones(sources: dict[str, str]) -> list[str]:
+    """Windows of 2+ consecutive statements, spanning at least
+    ``_CLONE_MIN_LINES`` lines on both sides, whose shapes repeat in
+    another function. Statement PAIRS are hashed first, so only pairs
+    that recur anywhere are extended into maximal windows."""
+    blocks = []  # (path, function, statements, shapes)
+    for path, src in sources.items():
+        memo: dict = {}
+        for fn in ast.walk(ast.parse(src, path)):
+            if isinstance(fn, ast.FunctionDef):
+                for block in _blocks(fn):
+                    blocks.append(
+                        (path, fn, block, [_shape(s, memo) for s in block])
+                    )
+    starts: dict[tuple, list] = {}
+    for b, (_, _, _, shapes) in enumerate(blocks):
+        for i in range(len(shapes) - 1):
+            starts.setdefault((shapes[i], shapes[i + 1]), []).append((b, i))
+    found = set()
+    for occ in starts.values():
+        for x, (b1, i1) in enumerate(occ):
+            for b2, i2 in occ[x + 1:]:
+                p1, f1, s1, h1 = blocks[b1]
+                p2, f2, s2, h2 = blocks[b2]
+                if f1 is f2 or (i1 and i2 and h1[i1 - 1] == h2[i2 - 1]):
+                    continue  # same function, or not a maximal window
+                if tuple(sorted((f1.name, f2.name))) in ALIKE_IN_SHAPE:
+                    continue
+                n = 2
+                while (i1 + n < len(h1) and i2 + n < len(h2)
+                       and h1[i1 + n] == h2[i2 + n]):
+                    n += 1
+                a = (p1, s1[i1].lineno, s1[i1 + n - 1].end_lineno)
+                b = (p2, s2[i2].lineno, s2[i2 + n - 1].end_lineno)
+                if min(a[2] - a[1], b[2] - b[1]) + 1 < _CLONE_MIN_LINES:
+                    continue
+                if a[0] == b[0] and a[1] <= b[2] and b[1] <= a[2]:
+                    continue  # a nested def against its enclosing lines
+                found.add(
+                    f"{a[0]}:{a[1]}-{a[2]} {f1.name} ~ "
+                    f"{b[0]}:{b[1]}-{b[2]} {f2.name} ({n} statements)"
+                )
+    return sorted(found)
+
+
+def _package_sources() -> dict[str, str]:
+    sources = {}
+    for root, _, files in os.walk(PACKAGE):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                sources[path] = open(path).read()
+    return sources
+
+
+def test_no_cloned_stage_across_functions():
+    """No two functions of the package share a run of statements that
+    differ only in names and constants and span 8 or more lines: a stage
+    used twice lives in one helper. ``ALIKE_IN_SHAPE`` lists the pairs
+    that match in shape only, each with its reason."""
+    clones = _clones(_package_sources())
+    assert clones == [], (
+        f"{len(clones)} cloned windows; fold each into one helper, or "
+        "list a shape-only match in ALIKE_IN_SHAPE:\n" + "\n".join(clones)
+    )
+
+
+def test_clone_guard_flags_a_copied_stage():
+    """A renamed copy of a folded stage, pasted into a new function, is
+    reported against the helper it copies."""
+    path = os.path.join(PACKAGE, "queries", "llm_ops.py")
+    src = open(path).read()
+    helper = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef) and n.name == "_shingle_pair_counts"
+    )
+    body = "\n".join(
+        src.splitlines()[helper.body[1].lineno - 1:helper.end_lineno]
+    ).replace("shn", "rows")
+    injected = "def pairs_again(spark, sf_dir):\n" + body + "\n"
+    clones = _clones({path: src, "injected.py": injected})
+    assert [c for c in clones if "_shingle_pair_counts" in c
+            and "injected.py" in c and "pairs_again" in c], clones

@@ -187,7 +187,10 @@ def test_merkle_fingerprint_partitioning_invariant(spark, tmp_path):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        alt = dataset_merkle_fingerprint(spark, alt_dir).toPandas()
+        alt = dataset_merkle_fingerprint(spark, alt_dir)
+        # the query call must not reset the width this half runs at
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        alt = alt.toPandas()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     alt = alt.sort_values("bucket").reset_index(drop=True)

@@ -106,13 +106,12 @@ def test_parquet_stats_pushdown_never_writes_caller_conf(
 ):
     """parquet_stats_pushdown reads through the V2 reader on a child
     session: the caller's conf is never set or unset, so a batch model
-    sharing the caller's session keeps reading through V1. The only
-    writes are the registry's ``tune``: the engine's fixed settings,
-    the same on every query call."""
+    sharing the caller's session keeps reading through V1. The
+    registry's ``tune`` does not write either: ``get_spark``'s session
+    already carries the engine's settings."""
     from forex_data_pipeline_spark.queries.sources_q import (
         parquet_stats_pushdown,
     )
-    from forex_data_pipeline_spark.session import RUNTIME_CONFS
 
     calls = []
     for name in ("set", "unset"):
@@ -120,8 +119,27 @@ def test_parquet_stats_pushdown_never_writes_caller_conf(
             spark.conf, name, lambda *a, _n=name: calls.append((_n, a))
         )
     assert parquet_stats_pushdown(spark, sf_dir).count() == 1
-    tune = [("set", kv) for kv in RUNTIME_CONFS.items()]
-    assert calls == tune
+    assert calls == []
+
+
+def test_query_tunes_a_session_once(spark, sf_dir):
+    """A session the engine did not build gets ``RUNTIME_CONFS`` on its
+    first query call (UTC above all, which the determinism contract
+    needs); a setting its owner makes afterwards survives later query
+    calls."""
+    from forex_data_pipeline_spark import catalog
+    from forex_data_pipeline_spark.session import RUNTIME_CONFS
+
+    catalog._ensure_loaded()
+    query = catalog.REGISTRY["null_semantics"].fn
+    fresh = spark.newSession()
+    fresh.conf.set("spark.sql.session.timeZone", "America/New_York")
+    query(fresh, sf_dir)
+    assert {k: fresh.conf.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS
+    fresh.conf.set("spark.sql.shuffle.partitions", "3")
+    query(fresh, sf_dir)
+    assert fresh.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert fresh.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
 def test_stream_session_inherits_caller_runtime_conf(spark, sf_dir):
