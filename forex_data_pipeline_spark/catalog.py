@@ -47,10 +47,6 @@ class QuerySpec:
     oracle: str | None = None
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
-    # a 0-row oracle proves nothing about the operator (both sides
-    # vacuously hash-equal), so the harness FAILS empty oracles unless
-    # the query is a violation detector where 0 rows IS the pass state
-    empty_ok: bool = False
     # output column whose md5-bucket partitions the RESULT SET for the
     # sharded per-bucket checksum fallback (scripts/driver_sim.py): at
     # rehearsal SFs DuckDB can exceed container disk materializing a
@@ -94,7 +90,6 @@ def register(
     oracle: str | None = None,
     doc: str = "",
     tags: tuple[str, ...] = (),
-    empty_ok: bool = False,
     shard_key: str | None = None,
     oracle_sharded: str | None = None,
     oracle_shard_setup: str | None = None,
@@ -110,7 +105,7 @@ def register(
         wrapped.__doc__ = fn.__doc__
         REGISTRY[name] = QuerySpec(
             name, wrapped, oracle, doc or (fn.__doc__ or ""), tags,
-            empty_ok, shard_key, oracle_sharded, oracle_shard_setup,
+            shard_key, oracle_sharded, oracle_shard_setup,
         )
         return wrapped
 

@@ -29,7 +29,8 @@ from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 
-from .pipeline.medallion import PipelineConfig, run_daily
+from .pipeline.medallion import PipelineConfig
+from .pipeline.runner import run_batch_concurrent
 from .session import get_spark
 from .sources.rest import TimeSeriesRestSource
 
@@ -101,15 +102,15 @@ def make_parser() -> argparse.ArgumentParser:
         "--symbol",
         default="EUR/USD",
         help="one symbol, or comma-separated symbols (e.g. "
-        "'EUR/USD,GBP/USD') — multiple symbols run their medallion "
-        "DAGs CONCURRENTLY via the dbt-style threaded model runner, "
+        "'EUR/USD,GBP/USD'); every symbol's medallion DAG runs through "
+        "the dbt-style threaded model runner, several CONCURRENTLY, "
         "each under <warehouse>/<symbol>/",
     )
     p.add_argument(
         "--threads",
         type=int,
         default=4,  # profiles.yml threads: 4 (reference README:147)
-        help="max concurrent models for multi-symbol runs",
+        help="max concurrent models",
     )
     p.add_argument("--interval", default="5min")
     p.add_argument(
@@ -145,29 +146,12 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("forex-cli")
     symbols = [s.strip() for s in args.symbol.split(",") if s.strip()]
-    rc = 0
-    if len(symbols) == 1:
-        source = TimeSeriesRestSource(
-            transport=transport, symbol=symbols[0], interval=args.interval
-        )
-        cfg = PipelineConfig(base_dir=args.warehouse, symbol=symbols[0])
-        for back in range(args.lookback_days - 1, -1, -1):
-            day = (end_day - timedelta(days=back)).isoformat()
-            result = run_daily(spark, cfg, source, day)
-            if result is None:
-                print(f"{day}: no data returned — aborting (exit 1)")
-                rc = 1
-                break
-            print(f"{day}: ok quality={result}")
-        return rc
-
-    # multi-symbol: per-day, extract every symbol then run the
-    # independent medallion chains concurrently (dbt threads parity)
-    from .pipeline.runner import run_batch_concurrent
-
+    # one symbol owns the warehouse root; several get one root each, as
+    # concurrent symbols must not share a base_dir
     cfgs = {
         sym: PipelineConfig(
-            base_dir=f"{args.warehouse}/{sym.replace('/', '_').lower()}",
+            base_dir=args.warehouse if len(symbols) == 1
+            else f"{args.warehouse}/{sym.replace('/', '_').lower()}",
             symbol=sym,
         )
         for sym in symbols
@@ -178,6 +162,8 @@ def main(argv: list[str] | None = None) -> int:
         )
         for sym in symbols
     }
+    # per day: extract every symbol, then run the independent medallion
+    # chains concurrently (dbt threads parity)
     for back in range(args.lookback_days - 1, -1, -1):
         day = (end_day - timedelta(days=back)).isoformat()
         batch = []
@@ -196,8 +182,11 @@ def main(argv: list[str] | None = None) -> int:
         timings = {
             n: round(r.elapsed, 2) for n, r in res.items() if r.elapsed
         }
-        print(f"{day}: ok models={timings}")
-    return rc
+        quality = {
+            n: r.value for n, r in res.items() if n.startswith("checks_")
+        }
+        print(f"{day}: ok quality={quality} models={timings}")
+    return 0
 
 
 if __name__ == "__main__":

@@ -68,17 +68,15 @@ def bucket_epoch(
     ).cast("long")
 
 
-def bucket(ts: Column, seconds: int | Column, shift_seconds: int | Column = 0) -> Column:
-    """Tumbling-bucket start for ``ts`` as a timestamp.
+def bucket(ts: Column, seconds: int | Column) -> Column:
+    """Unshifted tumbling-bucket start for ``ts`` as a timestamp.
 
-    Equivalent to the reference's datetime_add/datetime_trunc/div dance
-    (fct:42-52) and to ``F.window(ts, dur, startTime=-shift).start``;
-    written as epoch arithmetic so the bucket width can be a *column*
-    (needed for the exploded multi-timeframe form).
+    Equivalent to ``F.window(ts, dur).start``; written as epoch
+    arithmetic so the bucket width can be a *column*. A shifted clock
+    (the reference's datetime_add/datetime_trunc/div dance, fct:42-52)
+    goes through :func:`bucket_epoch`.
     """
-    return F.timestamp_seconds(
-        bucket_epoch(ts, seconds, shift_seconds)
-    ).cast("timestamp_ntz")
+    return F.timestamp_seconds(bucket_epoch(ts, seconds)).cast("timestamp_ntz")
 
 
 def multi_timeframe_ohlc(
@@ -195,7 +193,7 @@ def ohlc_window(
     df: DataFrame,
     ts_col: str,
     value_col: str,
-    series_cols: Sequence[str] = (),
+    series_cols: Sequence[str],
     *,
     duration: str = "5 minutes",
 ) -> DataFrame:

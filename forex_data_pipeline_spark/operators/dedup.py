@@ -1,13 +1,15 @@
-"""Deduplication operators (SURVEY §2.3 D1/D2 + north-star variants).
+"""Keyed deduplication (SURVEY §2.3 D2 + north-star variants).
 
-- ``exact``      — full-row dedup (reference: pandas drop_duplicates,
-                   /root/reference/scripts/extract_forex.py:127-131).
 - ``keyed_latest`` — QUALIFY-style keep-one-per-key
                    (/root/reference/models/staging/stg_eurusd.sql:36-39);
                    Spark has no QUALIFY, so row_number + filter. A
                    deterministic tie-break order is REQUIRED for
                    oracle-matching (the reference orders by the partition
                    key itself, an arbitrary tie-break — we do better).
+
+Full-row dedup (D1, the reference's pandas drop_duplicates,
+/root/reference/scripts/extract_forex.py:127-131) is Spark's own
+``dropDuplicates()``; ``queries/timeseries.py`` ``dedup_exact`` calls it.
 
 Scale: both are single-shuffle hash operations on the key columns. For
 skewed keys AQE skew-join handling does not apply to aggregates, so the
@@ -21,11 +23,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def exact(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """D1: drop duplicate rows (optionally on a column subset)."""
-    return df.dropDuplicates(list(subset)) if subset else df.dropDuplicates()
 
 
 def keyed_latest(

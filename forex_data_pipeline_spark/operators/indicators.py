@@ -35,15 +35,16 @@ MICRO = 1_000_000.0  # 6-decimal fixed-point grid for exact moving sums
 def with_indicators(
     candles: DataFrame,
     partition_cols: Sequence[str],
-    order_col: str = "candle_start",
-    close_col: str = "close_value",
     sma_windows: Sequence[int] = (20, 50),
 ) -> DataFrame:
-    base = Window.partitionBy(*partition_cols).orderBy(order_col)
-    iv = F.floor(F.col(close_col) * F.lit(MICRO))  # exact long both engines
+    """Add ``price_diff`` and ``sma_<n>`` over ``candles``, which carry
+    the candle operators' ``candle_start`` and ``close_value``."""
+    base = Window.partitionBy(*partition_cols).orderBy("candle_start")
+    close = "close_value"
+    iv = F.floor(F.col(close) * F.lit(MICRO))  # exact long both engines
     out = candles.withColumn("_iv", iv).withColumn(
         "price_diff",  # fct:76
-        F.col(close_col) - F.lag(close_col, 1).over(base),
+        F.col(close) - F.lag(close, 1).over(base),
     )
     for n in sma_windows:  # fct:77-78
         frame = base.rowsBetween(-(n - 1), 0)

@@ -34,28 +34,23 @@ def asof_join(
     value_cols: Sequence[str],
     *,
     suffix: str = "_asof",
-    strict: bool = False,
     direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach the latest right ``value_cols`` with
-    ``right_ts <= left_ts`` (or ``<`` when ``strict``), matching on
-    ``on`` keys — or, with ``direction="forward"``, the EARLIEST right
-    row with ``right_ts >= left_ts`` (``>`` when strict): the
-    next-event lookup (e.g. view → next purchase). Right value columns
-    come back as ``<col><suffix>``, NULL when no prior (resp. later)
-    right row exists. Either direction is the same single union +
-    key-partitioned window — one shuffle, no row explosion.
+    ``right_ts <= left_ts``, matching on ``on`` keys — or, with
+    ``direction="forward"``, the EARLIEST right row with
+    ``right_ts >= left_ts``: the next-event lookup (e.g. view → next
+    purchase). Right value columns come back as ``<col><suffix>``, NULL
+    when no prior (resp. later) right row exists. Either direction is
+    the same single union + key-partitioned window — one shuffle, no
+    row explosion.
     """
     on = list(on)
     forward = direction == "forward"
-    # Tag order decides ties at equal timestamps. Backward: right first
-    # (0) makes the join inclusive (<=). Forward (frame looks ahead):
-    # right AFTER left (1) keeps equal-ts rows visible, so inclusive
-    # and strict swap relative to backward.
-    if forward:
-        right_tag, left_tag = (0, 1) if strict else (1, 0)
-    else:
-        right_tag, left_tag = (1, 0) if strict else (0, 1)
+    # Tag order decides ties at equal timestamps, so both directions are
+    # inclusive. Backward: right first (0) makes the join <=. Forward
+    # (frame looks ahead): right AFTER left (1) makes it >=.
+    right_tag, left_tag = (1, 0) if forward else (0, 1)
 
     lcols = [c for c in left.columns]
     l = left.select(
@@ -114,16 +109,14 @@ def asof_join_bucketed(
     right_ts: str,
     value_cols: Sequence[str],
     *,
-    suffix: str = "_asof",
-    strict: bool = False,
+    suffix: str,
     time_bucket: str = "1 day",
 ) -> DataFrame:
     """SKEW-AWARE backward as-of join: same semantics as
     :func:`asof_join` (per value column, the latest NON-NULL right
-    value at-or-before — strictly-before when ``strict`` — each left
-    row), but the window partitions on ``(keys, time_bucket)`` instead
-    of keys alone, the same time-axis blocking ``range_join_bucketed``
-    applies to the value axis.
+    value at-or-before each left row), but the window partitions on
+    ``(keys, time_bucket)`` instead of keys alone, the same time-axis
+    blocking ``range_join_bucketed`` applies to the value axis.
 
     Why: ``asof_join`` sorts each key's ENTIRE history in one task —
     correct, but a hot key (one symbol carrying 10% of a 100 TB feed)
@@ -146,8 +139,8 @@ def asof_join_bucketed(
     on = list(on)
     value_cols = list(value_cols)
     # tags follow asof_join's backward convention: right first (0) for
-    # inclusive <=, left first for strict <
-    right_tag, left_tag = (1, 0) if strict else (0, 1)
+    # inclusive <=
+    right_tag, left_tag = 0, 1
     carry_tag = -1  # sorts before every real row in the bucket
 
     bucket = lambda ts: F.window(F.col(ts), time_bucket)["start"]  # noqa: E731

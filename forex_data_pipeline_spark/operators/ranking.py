@@ -10,7 +10,7 @@ partition-parallel:
 1. range-repartition on the sort key (sampled boundaries — the same
    machinery `orderBy` uses), materialized once so every downstream
    job sees identical partition assignment;
-2. one tiny job counts rows per range partition (≤ `partitions` rows
+2. one tiny job counts rows per range partition (≤ shuffle-width rows
    collected — a bounded driver scalar, same class as a high-watermark
    `first()`);
 3. global rank = (sum of counts of lower partitions) + local
@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import shuffle_width
+
 _PID = "__range_pid"
 _LOCAL = "__local_rn"
 
@@ -44,20 +46,19 @@ _LOCAL = "__local_rn"
 def global_rank(
     df: DataFrame,
     order_cols: Sequence[str | Column],
-    rank_col: str = "global_rank",
-    partitions: int | None = None,
+    rank_col: str,
 ) -> tuple[DataFrame, int]:
     """Add an exact 1-based global row number over ``order_cols``
     (which MUST be a total order — include a unique tie-break) without
     ever forming a single-task window. Returns ``(ranked_df, n_rows)``;
     the row count falls out of the per-partition count pass for free.
+    The range partitioning is the session's shuffle width wide.
 
     Two jobs by construction (count pass + downstream use); the ranked
     frame is backed by a materialized range partitioning so both see
     the same assignment.
     """
-    sc = df.sparkSession.sparkContext
-    p = partitions or sc.defaultParallelism
+    p = shuffle_width(df.sparkSession)
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     ranged = (
         df.repartitionByRange(p, *cols)

@@ -50,7 +50,7 @@ def salted_aggregate(
     aggs: dict[str, tuple[str, str]],
     *,
     salts: int = 16,
-    uniform_cols: Sequence[str] | None = None,
+    uniform_cols: Sequence[str],
 ) -> DataFrame:
     """Two-stage skew-safe aggregation.
 
@@ -63,7 +63,6 @@ def salted_aggregate(
         if fn not in _MERGES:
             raise ValueError(f"unsupported salted aggregate: {fn}")
     keys = list(keys)
-    uniform_cols = list(uniform_cols or df.columns)
 
     stage1 = (
         df.withColumn("_salt", salt_column(uniform_cols, salts))

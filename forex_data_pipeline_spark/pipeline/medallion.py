@@ -223,8 +223,7 @@ def gold_transform(cfg: PipelineConfig, silver: DataFrame) -> DataFrame:
         timeframes=cfg.timeframes,
     )
     indicated = with_indicators(
-        candles, ["symbol", "timeframe"], "candle_start",
-        "close_value", cfg.sma_windows,
+        candles, ["symbol", "timeframe"], cfg.sma_windows
     )
     return _finalize_gold(indicated)
 
@@ -321,8 +320,7 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
         .drop("_rank")
     )
     indicated = with_indicators(
-        unioned, ["symbol", "timeframe"], "candle_start",
-        "close_value", cfg.sma_windows,
+        unioned, ["symbol", "timeframe"], cfg.sma_windows
     )
     to_merge = _finalize_gold(indicated.filter(cs_epoch >= edge))
     kept = existing.filter(F.coalesce(cs_epoch < edge, F.lit(True))).select(
@@ -382,20 +380,3 @@ def run_batch(
     silver_run(spark, cfg)
     gold_run(spark, cfg)
     return gold_checks(spark, cfg)
-
-
-def run_daily(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    source,
-    date_str: str,
-) -> dict[str, int] | None:
-    """EP1 + EP3 end-to-end for one UTC day: REST fetch through the
-    retry wrapper (S1/S2, sources/rest.py), then the medallion DAG.
-    Returns the quality-check result, or None when the vendor returned
-    an empty day (the reference aborts that run with a non-zero exit,
-    extract_forex.py:245-247)."""
-    raw = source.to_spark(spark, date_str)
-    if raw is None:
-        return None
-    return run_batch(spark, cfg, raw)

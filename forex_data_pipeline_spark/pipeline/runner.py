@@ -108,15 +108,13 @@ def run_models(
     models: Sequence[Model],
     *,
     threads: int = 4,  # profiles.yml threads: 4 (reference README:147)
-    pool_prefix: str = "dbt",
-    fail_fast: bool = False,
 ) -> dict[str, ModelResult]:
-    """Execute the model DAG with up to ``threads`` concurrent models.
+    """Execute the model DAG with up to ``threads`` concurrent models,
+    each in scheduler pool ``dbt.<model>``.
 
     A model failure marks every (transitive) downstream model
-    ``skipped`` (dbt's behavior); independent subgraphs keep running
-    unless ``fail_fast``. Returns per-model results with monotonic
-    start/finish stamps.
+    ``skipped`` (dbt's behavior); independent subgraphs keep running.
+    Returns per-model results with monotonic start/finish stamps.
     """
     by_name = validate(models)
     results = {m.name: ModelResult(m.name, "pending") for m in models}
@@ -129,7 +127,7 @@ def run_models(
 
     def worker(name: str) -> None:
         sc = spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", f"{pool_prefix}.{name}")
+        sc.setLocalProperty("spark.scheduler.pool", f"dbt.{name}")
         sc.setJobGroup(f"model:{name}", f"model {name}", True)
         try:
             r = results[name]
@@ -169,11 +167,6 @@ def run_models(
                         if results[n].finished is None:
                             results[n].finished = time.monotonic()
                         skip_downstream(n)
-                        if fail_fast:
-                            for r in results.values():
-                                if r.status == "pending":
-                                    r.status = "skipped"
-                            return results
                     else:
                         for o in dependents[n]:
                             remaining_deps[o].discard(n)
@@ -187,28 +180,22 @@ def run_models(
     return results
 
 
-def medallion_models(cfg, raw=None) -> list[Model]:
-    """The reference's daily DAG as runner models for ONE symbol:
-    bronze → silver → gold → checks (each edge is a dbt ref()).
+def medallion_models(cfg, raw) -> list[Model]:
+    """The reference's daily DAG as runner models for ONE symbol and
+    its raw batch: bronze → silver → gold → checks (each edge is a dbt
+    ref()).
     Several symbols' model lists concatenate into one run — their
     models are mutually independent (per-symbol base_dir), which is
     exactly where ``threads: 4`` buys wall-clock."""
     from . import medallion as med
 
     sym = cfg.symbol.replace("/", "_").lower()
-    models = []
-    if raw is not None:
-        models.append(
-            Model(f"bronze_{sym}", lambda sp: med.bronze_ingest(cfg, raw))
-        )
-        silver_deps: tuple[str, ...] = (f"bronze_{sym}",)
-    else:
-        silver_deps = ()
-    models += [
+    return [
+        Model(f"bronze_{sym}", lambda sp: med.bronze_ingest(cfg, raw)),
         Model(
             f"silver_{sym}",
             lambda sp: med.silver_run(sp, cfg),
-            silver_deps,
+            (f"bronze_{sym}",),
         ),
         Model(
             f"gold_{sym}",
@@ -221,7 +208,6 @@ def medallion_models(cfg, raw=None) -> list[Model]:
             (f"gold_{sym}",),
         ),
     ]
-    return models
 
 
 def run_batch_concurrent(

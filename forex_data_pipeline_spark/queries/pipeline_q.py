@@ -86,9 +86,7 @@ def medallion_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     candles = multi_timeframe_ohlc(
         silver, "observed_at", "close_price", ["symbol"]
     )
-    ind = with_indicators(
-        candles, ["symbol", "timeframe"], "candle_start", "close_value"
-    )
+    ind = with_indicators(candles, ["symbol", "timeframe"])
     return ind.select(
         F.md5(
             F.concat_ws(
@@ -178,7 +176,7 @@ def compaction_file_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     before = before.localCheckpoint(eager=True)  # pin pre-compaction stats
-    compact(spark, root, target_files=1, partition_cols=["day"])
+    compact(spark, root, partition_cols=["day"])
     after = (
         spark.read.parquet(root)
         .groupBy("day")

@@ -152,7 +152,7 @@ def candle_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    return dedup.exact(ev.select("user_id", "event_type"))
+    return ev.select("user_id", "event_type").dropDuplicates()
 
 
 @register(

@@ -37,6 +37,14 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from .rest_datasource import MAX_ROWS_PER_FETCH
+
+#: The reference's backoff schedule (extract_forex.py:70-109): the first
+#: retry waits 10 s, each later one twice as long, at most 5 retries.
+MAX_RETRIES = 5
+INITIAL_DELAY_S = 10.0
+BACKOFF_FACTOR = 2.0
+
 #: transport(symbol, interval, start, end, outputsize) -> pd.DataFrame
 Transport = Callable[[str, str, str, str, int], pd.DataFrame]
 
@@ -51,24 +59,22 @@ def is_rate_limit_error(exc: BaseException) -> bool:
 
 @dataclass
 class RetryPolicy:
-    """Exponential backoff (extract_forex.py:70-109): 10 s, ×2, ≤5."""
+    """Exponential backoff on the reference's schedule (``MAX_RETRIES``,
+    ``INITIAL_DELAY_S``, ``BACKOFF_FACTOR``), sleeping through ``sleep``."""
 
-    max_retries: int = 5
-    initial_delay_s: float = 10.0
-    backoff_factor: float = 2.0
     sleep: Callable[[float], None] = _time.sleep
 
     def run(self, fn: Callable[[], pd.DataFrame]) -> pd.DataFrame:
-        attempt, delay = 0, self.initial_delay_s
+        attempt, delay = 0, INITIAL_DELAY_S
         while True:
             try:
                 return fn()
             except Exception as exc:  # noqa: BLE001 - classified below
-                if not is_rate_limit_error(exc) or attempt >= self.max_retries:
+                if not is_rate_limit_error(exc) or attempt >= MAX_RETRIES:
                     raise
                 attempt += 1
                 self.sleep(delay)
-                delay *= self.backoff_factor
+                delay *= BACKOFF_FACTOR
 
 
 @dataclass
@@ -79,7 +85,6 @@ class TimeSeriesRestSource:
     transport: Transport
     symbol: str = "EUR/USD"
     interval: str = "5min"
-    outputsize: int = 800  # vendor row cap, extract_forex.py:34
     retry: RetryPolicy = field(default_factory=RetryPolicy)
     now: Callable[[], datetime] = lambda: datetime.now(timezone.utc)
 
@@ -91,7 +96,7 @@ class TimeSeriesRestSource:
                 self.interval,
                 f"{date_str} 00:00:00",
                 f"{date_str} 23:59:59",
-                self.outputsize,
+                MAX_ROWS_PER_FETCH,
             )
         )
 

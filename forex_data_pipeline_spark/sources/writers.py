@@ -5,9 +5,8 @@ The reference's MERGE is day-partitioned, so its daily cost follows the
 batch, not the table (models/staging/stg_eurusd.sql:2-11,
 models/marts/fct_eurusd_timeframes.sql:2-13). Here:
 
-- ``merge_upsert`` — ``rewrite``: existing ⋉̸ keys(batch) ∪ batch, the
-  whole table, through :func:`replace_table`; ``dynamic``: the same over
-  only the partitions the batch touches, the 100 TB path.
+- ``merge_upsert`` — existing ⋉̸ keys(batch) ∪ batch, the whole table,
+  through :func:`replace_table`.
 - append — the medallion's silver: its watermark admits only keys above
   every stored key, so a MERGE would remove nothing. A day adds part
   files and rewrites none; nothing compacts them, so silver's file
@@ -18,9 +17,8 @@ models/marts/fct_eurusd_timeframes.sql:2-13). Here:
 
 Atomicity caveat (SURVEY §7 hard-part 1): without a transactional table
 format, :func:`replace_table` swaps directories (brief window where the
-table is a moved-aside copy) and ``dynamic`` relies on Spark's
-output-committer per-partition atomicity. Delta Lake's MERGE INTO would
-subsume these behind one interface; it is not available in this container.
+table is a moved-aside copy). Delta Lake's MERGE INTO would subsume this
+behind one interface; it is not available in this container.
 """
 
 from __future__ import annotations
@@ -102,8 +100,6 @@ def merge_upsert(
     new_df: DataFrame,
     keys: Sequence[str],
     *,
-    partition_cols: Sequence[str] = (),
-    strategy: str = "rewrite",
     sort_within: Sequence[str] = (),
 ) -> None:
     """S9 MERGE: upsert ``new_df`` into the parquet table at ``path`` on
@@ -115,31 +111,15 @@ def merge_upsert(
     keys = list(keys)
     existing = read_table(spark, path)
     if existing is None:
-        write_partitioned(new_df, path, partition_cols, sort_within=sort_within)
-        return
-
-    if strategy == "dynamic" and partition_cols:
-        # Scale path: touch only the partitions present in the new batch.
-        parts = new_df.select(*partition_cols).distinct()
-        touched = existing.join(F.broadcast(parts), list(partition_cols), "left_semi")
-        kept = touched.join(new_df.select(*keys).distinct(), keys, "left_anti")
-        result = kept.unionByName(new_df.select(*kept.columns))
-        if sort_within:
-            result = result.sortWithinPartitions(*sort_within)
-        # dynamic overwrite replaces only the partitions in `result`; a
-        # per-write option, as concurrent models share the session conf
-        w = result.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        w.partitionBy(*partition_cols).parquet(path)
+        write_partitioned(new_df, path, sort_within=sort_within)
         return
 
     kept = existing.join(new_df.select(*keys).distinct(), keys, "left_anti")
     result = kept.unionByName(new_df.select(*kept.columns))
-    replace_table(result, path, partition_cols, sort_within)
+    replace_table(result, path, sort_within=sort_within)
 
 
-def high_watermark(
-    spark: SparkSession, path: str, col: str, schema: StructType | None = None
-):
+def high_watermark(spark: SparkSession, path: str, col: str, schema: StructType):
     """P3: max(col) of an existing table, None when absent or empty
     (stg_eurusd.sql:18-21). Collected on the driver so the incremental
     filter becomes a pushable literal predicate. ``schema`` as in
@@ -156,15 +136,11 @@ def column_max(table: DataFrame, col: str):
 
 
 def compact(
-    spark: SparkSession,
-    path: str,
-    *,
-    target_files: int = 1,
-    partition_cols: Sequence[str] = (),
+    spark: SparkSession, path: str, *, partition_cols: Sequence[str]
 ) -> int:
-    """Small-file compaction: rewrite the table at ``path`` into
-    ``target_files`` files (per partition when partitioned), atomically
-    via :func:`replace_table`. Returns the row count preserved.
+    """Small-file compaction: rewrite the table at ``path`` into one file
+    per ``partition_cols`` partition, atomically via
+    :func:`replace_table`. Returns the row count preserved.
 
     The daily micro-batch regime produces one file per batch
     (the reference's one-parquet-per-day layout,
@@ -176,9 +152,7 @@ def compact(
     intends."""
     df = spark.read.parquet(path)
     n = df.count()
-    compacted = (df.repartition(target_files, *partition_cols)
-                 if partition_cols else df.coalesce(target_files))
-    replace_table(compacted, path, partition_cols)
+    replace_table(df.repartition(1, *partition_cols), path, partition_cols)
     return n
 
 

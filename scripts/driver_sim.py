@@ -48,16 +48,6 @@ TABLES = (
 ).split()
 
 
-def _empty_ok(name: str) -> bool:
-    """A 0-row oracle is vacuous unless the registry marks the query as
-    a violation detector whose pass state IS the empty set."""
-    from forex_data_pipeline_spark import catalog
-
-    catalog._ensure_loaded()
-    spec = catalog.REGISTRY.get(name)
-    return bool(spec and spec.empty_ok)
-
-
 def value_hash(df: pd.DataFrame) -> str:
     df = df.reindex(sorted(df.columns), axis=1)
     for c in df.columns:
@@ -532,7 +522,7 @@ def main() -> int:
                        None, f"{type(exc).__name__}: {exc}")
             continue
         ok = len(got) == len(exp) and value_hash(got) == value_hash(exp)
-        if ok and len(exp) == 0 and not _empty_ok(name):
+        if ok and len(exp) == 0:  # a 0-row oracle proves nothing
             ok = False
             print(f"{name}: VACUOUS (oracle returned 0 rows)")
         if not ok:

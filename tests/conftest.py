@@ -60,17 +60,13 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def assert_df_matches_oracle(
-    spark_df, oracle_con, oracle: str, rtol=1e-9, empty_ok=False
-):
+def assert_df_matches_oracle(spark_df, oracle_con, oracle: str, rtol=1e-9):
     got = _normalize(spark_df.toPandas())
     exp = _normalize(oracle_con.execute(oracle).df())
     # a 0-row oracle is vacuously "green" — the value-hash check proves
     # nothing about the operator — so treat it as a harness failure
-    # unless 0 rows is the semantically-correct pass state (empty_ok)
-    assert empty_ok or len(exp) > 0, (
-        "oracle returned 0 rows — vacuous check; retune the query "
-        "predicates or mark empty_ok"
+    assert len(exp) > 0, (
+        "oracle returned 0 rows — vacuous check; retune the query predicates"
     )
     assert list(got.columns) == list(exp.columns), (
         f"column mismatch: {list(got.columns)} vs {list(exp.columns)}"

@@ -17,10 +17,7 @@ NO_ORACLE_CASES = sorted(n for n, s in catalog.REGISTRY.items() if not s.oracle)
 @pytest.mark.parametrize("name", ORACLE_CASES)
 def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
     spec = catalog.REGISTRY[name]
-    assert_df_matches_oracle(
-        spec.fn(spark, sf_dir), oracle_con, spec.oracle,
-        empty_ok=spec.empty_ok,
-    )
+    assert_df_matches_oracle(spec.fn(spark, sf_dir), oracle_con, spec.oracle)
 
 
 @pytest.mark.parametrize("name", NO_ORACLE_CASES)

@@ -2,7 +2,8 @@
 it cites must exist in the registry, and every registered query must be
 documented there; every module, test and function it cites must exist.
 Every engine function and class must have a caller outside ``tests/``,
-only ``session.py`` writes session conf, and no stage is copied across
+every option a second value in use, only ``session.py`` writes session
+conf or reads the environment, and no stage is copied across
 functions."""
 
 from __future__ import annotations
@@ -103,6 +104,9 @@ NO_PRODUCT_CALLER = {
     "tests/test_properties.py checks l2sq_unrolled against, bit for bit",
     "_lsh_signature_col": "queries/llm_ops.py: the inline LSH signature "
     "that tests/test_opt_r10.py checks the hoisted _lsh_sig_table against",
+    "run_batch": "pipeline/medallion.py: the sequential daily run that "
+    "tests/test_pipeline.py test_concurrent_two_symbols_overlap_and_"
+    "match_sequential checks the threaded runner against",
 }
 
 _IDENT = re.compile(r"[A-Za-z_]\w*\Z")
@@ -275,6 +279,180 @@ def test_no_unused_imports():
     assert unused == [], (
         f"{len(unused)} unused imports:\n" + "\n".join(unused)
     )
+
+
+# Options kept although every product call passes them one value: each
+# is a seam a test varies, named with the test.
+SINGLE_VALUE_OK = {
+    ("asof_join_bucketed", "time_bucket"): "tests/test_properties.py "
+    "test_asof_join_bucketed_matches_plain and tests/test_skew_bucketing.py "
+    "cross 1-minute buckets on data only minutes long",
+    ("salted_aggregate", "salts"): "tests/test_properties.py "
+    "test_salted_aggregate_salt_invariance varies the salt count",
+    ("main", "argv"): "the entry-point convention: python -m passes none, "
+    "tests/test_cli.py passes argument lists",
+}
+
+
+def _literal(node: ast.expr) -> str | None:
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError):
+        return None
+
+
+def _options(sources: dict[str, str]) -> dict[str, tuple]:
+    """``name -> (path, def, {param: (position or None, default)})`` for
+    every top-level function and method with a defaulted parameter. A
+    name two such defs share is left out: a call cannot tell them apart."""
+    found: dict[str, list] = {}
+    for path, src in sources.items():
+        for stmt in ast.parse(src, path).body:
+            if isinstance(stmt, ast.FunctionDef):
+                members = [(stmt, False)]
+            elif isinstance(stmt, ast.ClassDef):
+                members = [(m, True) for m in stmt.body
+                           if isinstance(m, ast.FunctionDef)]
+            else:
+                continue
+            for fn, method in members:
+                a = fn.args
+                positional = a.posonlyargs + a.args
+                if method and not any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in fn.decorator_list
+                ):
+                    positional = positional[1:]  # self / cls
+                params = {
+                    arg.arg: (positional.index(arg), d)
+                    for arg, d in zip(positional[::-1], a.defaults[::-1])
+                }
+                params.update(
+                    (arg.arg, (None, d))
+                    for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                )
+                if params:
+                    found.setdefault(fn.name, []).append((path, fn, params))
+    return {name: defs[0] for name, defs in found.items() if len(defs) == 1}
+
+
+def _single_valued(
+    package: dict[str, str], product: dict[str, str]
+) -> list[str]:
+    """The census: for each option of ``package``, the values ``product``
+    calls pass it — by position, by keyword, or by leaving it out (the
+    default). A call with ``*``/``**`` or a non-literal argument counts
+    as varied. Returns ``path:line name(param) value`` for each option
+    with fewer than two values, ``SINGLE_VALUE_OK`` aside."""
+    options = _options(package)
+    varied = None  # as _literal reads a non-literal argument
+    values: dict[tuple[str, str], set] = {
+        (name, p): set() for name, (_, _, ps) in options.items() for p in ps
+    }
+    for path, src in product.items():
+        for call in ast.walk(ast.parse(src, path)):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name not in options:
+                continue
+            starred = any(isinstance(x, ast.Starred) for x in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            keywords = {k.arg: k.value for k in call.keywords}
+            for p, (pos, default) in options[name][2].items():
+                if starred:
+                    value = varied
+                elif pos is not None and pos < len(call.args):
+                    value = _literal(call.args[pos])
+                elif p in keywords:
+                    value = _literal(keywords[p])
+                else:
+                    value = _literal(default) or ast.unparse(default)
+                values[(name, p)].add(value)
+    return sorted(
+        f"{options[name][0]}:{options[name][1].lineno} {name}({p}) "
+        f"{' | '.join(sorted(vs)) or 'no product call'}"
+        for (name, p), vs in values.items()
+        if varied not in vs and len(vs) < 2
+        and (name, p) not in SINGLE_VALUE_OK
+    )
+
+
+def _product_sources() -> dict[str, str]:
+    sources = _package_sources()
+    for path in _product_files():
+        sources[path] = open(path).read()
+    return sources
+
+
+def test_every_option_has_two_values_in_use():
+    """Every defaulted parameter of a package function or method gets at
+    least two values from product code (the package, ``scripts/``,
+    ``bench.py``, ``__spark_entry__.py`` and ``perfbench/``): an option
+    every caller sets alike is a constant, and the code behind its other
+    values runs nowhere. Make it one, or drop the default of a parameter
+    that names the caller's data; ``SINGLE_VALUE_OK`` lists the test
+    seams, each with the test that varies it."""
+    package = _package_sources()
+    single = _single_valued(package, _product_sources())
+    assert single == [], (
+        f"{len(single)} options with one value in product use:\n"
+        + "\n".join(single)
+    )
+    options = _options(package)
+    stale = sorted(
+        f"{n}({p})" for n, p in SINGLE_VALUE_OK
+        if n not in options or p not in options[n][2]
+    )
+    assert stale == [], f"SINGLE_VALUE_OK names no option: {stale}"
+
+
+def test_option_census_flags_a_new_single_valued_keyword():
+    """A function pasted into a copy of a package module, whose product
+    callers set one keyword two ways and never set the other, is flagged
+    for the second keyword only; a non-literal argument clears it."""
+    path = os.path.join(PACKAGE, "operators", "candles.py")
+    src = open(path).read() + (
+        "\n\ndef ohlc_again(df, ts_col, *, duration=\"5 minutes\", "
+        "fill=False):\n"
+        "    return ohlc_window(df, ts_col, \"value\", [], duration=duration)\n"
+    )
+    calls = (
+        "ohlc_again(ev, 'ts')\n"
+        "ohlc_again(ev, 'ts', duration='1 hour')\n"
+        "ohlc_again(ev, 'ts', fill=False)\n"
+    )
+    package = {path: src}
+
+    def flagged(calls: str) -> list[str]:
+        single = _single_valued(package, {**package, "caller.py": calls})
+        return [s.split(" ", 1)[1] for s in single if "ohlc_again" in s]
+
+    assert flagged(calls) == ["ohlc_again(fill) False"]
+    assert flagged(calls + "ohlc_again(ev, 'ts', fill=flag)\n") == []
+
+
+def test_only_session_module_reads_the_environment():
+    """No package module but ``session.py`` reads ``os.environ`` or
+    ``os.getenv``: engine behaviour is set by arguments, not by
+    environment variables, so no option hides outside the census."""
+    reads = []
+    for path, src in _package_sources().items():
+        if path == os.path.join(PACKAGE, "session.py"):
+            continue
+        reads += [
+            f"{path}:{n.lineno} {getattr(n, 'attr', None) or n.module}"
+            for n in ast.walk(ast.parse(src, path))
+            if (isinstance(n, ast.Attribute)
+                and n.attr in ("environ", "environb", "getenv", "getenvb"))
+            or (isinstance(n, ast.ImportFrom) and n.module == "os"
+                and any(a.name.startswith(("environ", "getenv"))
+                        for a in n.names))
+        ]
+    assert reads == [], "\n".join(reads)
 
 
 def test_only_session_module_writes_session_conf():

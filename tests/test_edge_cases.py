@@ -16,7 +16,7 @@ from forex_data_pipeline_spark.operators.candles import (
     multi_timeframe_ohlc,
     ohlc_window,
 )
-from forex_data_pipeline_spark.operators.dedup import exact, keyed_latest
+from forex_data_pipeline_spark.operators.dedup import keyed_latest
 from forex_data_pipeline_spark.operators.indicators import with_indicators
 from forex_data_pipeline_spark.operators.quality import (
     accepted_values_violations,
@@ -45,9 +45,7 @@ def test_candles_and_indicators_on_empty_input(spark):
     assert {"timeframe", "candle_start", "open_value", "close_value"} <= set(
         candles.columns
     )
-    ind = with_indicators(
-        candles, ["symbol", "timeframe"], "candle_start", "close_value"
-    )
+    ind = with_indicators(candles, ["symbol", "timeframe"])
     assert ind.count() == 0
     assert {"price_diff", "sma_20", "sma_50"} <= set(ind.columns)
 
@@ -61,7 +59,7 @@ def test_ohlc_window_on_empty_input(spark):
 
 def test_dedup_on_empty_input(spark):
     df = _empty_ticks(spark)
-    assert exact(df).count() == 0
+    assert df.dropDuplicates().count() == 0
     assert (
         keyed_latest(
             df, ["symbol", "observed_at"],

@@ -305,7 +305,4 @@ def test_simhash_kernel_branch_matches_oracle_directly(
 
     spec = catalog.REGISTRY["simhash_hamming_pairs"]
     monkeypatch.setattr(llm_ops, "_SH_KERNEL_MIN_DOCS", 0)
-    assert_df_matches_oracle(
-        spec.fn(spark, sf_dir), oracle_con, spec.oracle,
-        empty_ok=spec.empty_ok,
-    )
+    assert_df_matches_oracle(spec.fn(spark, sf_dir), oracle_con, spec.oracle)

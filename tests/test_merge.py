@@ -1,4 +1,4 @@
-"""Unit tests for the incremental MERGE writer (S9) — both strategies."""
+"""Unit tests for the incremental MERGE writer (S9) and its helpers."""
 
 from __future__ import annotations
 
@@ -44,81 +44,14 @@ def test_merge_rewrite_upserts(spark, tmp_path):
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
-def test_merge_dynamic_touches_only_new_partitions(spark, tmp_path):
-    path = f"{tmp_path}/p"
-    base = spark.createDataFrame(
-        [(1, "2024-01-01", 10), (2, "2024-01-01", 20), (3, "2024-01-02", 30)],
-        "k int, day string, v int",
-    )
-    write_partitioned(base, path, ("day",))
-    batch = spark.createDataFrame(
-        [(3, "2024-01-02", 99), (4, "2024-01-03", 40)], "k int, day string, v int"
-    )
-    merge_upsert(spark, path, batch, ["k"], partition_cols=("day",),
-                 strategy="dynamic")
-    got = _rows(spark, path)
-    # partition dirs come back type-inferred (date-like strings → DATE)
-    got["day"] = got["day"].astype(str)
-    exp = pd.DataFrame(
-        {
-            "k": [1, 2, 3, 4],
-            "v": [10, 20, 99, 40],
-            "day": ["2024-01-01", "2024-01-01", "2024-01-02", "2024-01-03"],
-        }
-    )
-    pd.testing.assert_frame_equal(
-        got[["k", "v", "day"]], exp, check_dtype=False
-    )
-
-
-def test_merge_dynamic_leaves_session_conf_unchanged(spark, tmp_path):
-    """Dynamic overwrite is a per-write option: the runner runs models
-    concurrently in one session, so a merge must not flip the
-    session-wide partitionOverwriteMode under another model's write."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.unset(key)
-    before = spark.conf.get(key)
-    path = f"{tmp_path}/c"
-    base = spark.createDataFrame(
-        [(1, "d1", 1), (2, "d2", 2)], "k int, day string, v int"
-    )
-    write_partitioned(base, path, ("day",))
-    batch = spark.createDataFrame([(2, "d2", 22)], "k int, day string, v int")
-    merge_upsert(spark, path, batch, ["k"], partition_cols=("day",),
-                 strategy="dynamic")
-    assert spark.conf.get(key) == before
-    # d1 was not in the batch and survives: the write was dynamic
-    assert _rows(spark, path).v.tolist() == [1, 22]
-
-
-def test_merge_key_moving_partition_dynamic(spark, tmp_path):
-    """A key that moves partitions in the batch must not end up twice:
-    the old partition copy survives only if untouched — document the
-    dynamic-strategy contract: keys are immutable within partitions
-    (true for event-time partitioning, the reference's model)."""
-    path = f"{tmp_path}/m"
-    base = spark.createDataFrame(
-        [(1, "d1", 1), (2, "d2", 2)], "k int, day string, v int"
-    )
-    write_partitioned(base, path, ("day",))
-    # same key, same partition — the supported shape
-    batch = spark.createDataFrame([(2, "d2", 22)], "k int, day string, v int")
-    merge_upsert(spark, path, batch, ["k"], partition_cols=("day",),
-                 strategy="dynamic")
-    got = _rows(spark, path)
-    assert got.v.tolist() == [1, 22]
-
-
 def test_high_watermark(spark, tmp_path):
     from forex_data_pipeline_spark.sources.writers import column_max
 
     path = f"{tmp_path}/w"
-    assert high_watermark(spark, path, "v") is None
-    write_partitioned(
-        spark.createDataFrame([(1, 5), (2, 9), (3, None)], "k int, v int"),
-        path,
-    )
-    assert high_watermark(spark, path, "v") == 9  # NULLs never win
+    df = spark.createDataFrame([(1, 5), (2, 9), (3, None)], "k int, v int")
+    assert high_watermark(spark, path, "v", df.schema) is None
+    write_partitioned(df, path)
+    assert high_watermark(spark, path, "v", df.schema) == 9  # NULLs never win
     assert column_max(spark.createDataFrame([], "v int"), "v") is None
 
 

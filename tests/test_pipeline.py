@@ -405,7 +405,6 @@ def test_run_daily_from_rest_source(spark, tmp_path):
     gold, quality-green, with the S2 retry wrapper in the path."""
     from datetime import datetime
 
-    from forex_data_pipeline_spark.pipeline.medallion import run_daily
     from forex_data_pipeline_spark.sources.rest import (
         RetryPolicy,
         TimeSeriesRestSource,
@@ -427,8 +426,9 @@ def test_run_daily_from_rest_source(spark, tmp_path):
         now=lambda: datetime(2026, 1, 3, 1, 0, 0),
     )
     cfg = _cfg(tmp_path, "daily")
-    checks = run_daily(spark, cfg, src, "2026-01-02")
-    assert checks is not None
+    raw = src.to_spark(spark, "2026-01-02")
+    assert raw is not None
+    checks = run_batch(spark, cfg, raw)
     assert all(v == 0 for v in checks.values()), checks
     gold = spark.read.parquet(cfg.gold_path)
     assert gold.count() > 0

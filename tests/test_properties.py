@@ -32,7 +32,7 @@ _SETTINGS = dict(
 )
 @settings(**_SETTINGS)
 def test_bucket_matches_integer_floor_semantics(spark, epochs, dur, shift):
-    """bucket(ts, dur, shift) must equal the pure-integer definition
+    """bucket_epoch(ts, dur, shift) must equal the pure-integer definition
     floor((epoch+shift)/dur)*dur - shift for any timestamp, duration,
     and clock shift — the invariant the reference hand-stamps per
     timeframe (fct_eurusd_timeframes.sql:42-56)."""
@@ -278,12 +278,9 @@ def test_l2sq_unrolled_is_bit_identical_to_fold(spark, vecs):
         max_size=20,
         unique_by=lambda t: (t[0], t[1]),
     ),
-    strict=st.booleans(),
 )
 @settings(**_SETTINGS)
-def test_asof_join_bucketed_matches_plain(
-    spark, left_rows, right_rows, strict
-):
+def test_asof_join_bucketed_matches_plain(spark, left_rows, right_rows):
     """The skew-aware (key, time-bucket)-partitioned as-of join must be
     row-identical to the plain keys-only form on arbitrary inputs —
     equal timestamps, NULL right values (the per-column ignorenulls
@@ -304,7 +301,7 @@ def test_asof_join_bucketed_matches_plain(
 
     kwargs = dict(
         on=["k"], left_ts="lts", right_ts="rts",
-        value_cols=["val"], strict=strict,
+        value_cols=["val"], suffix="_asof",
     )
     base = asof_join(l, r, **kwargs).orderBy("lid").toPandas()
     bucketed = (

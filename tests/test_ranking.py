@@ -1,6 +1,6 @@
 """operators/ranking.py global_rank: the distributed two-pass rank must
-equal a single-window row_number, for any partition count, and must not
-contain an unpartitioned window in its plan."""
+equal a single-window row_number, for any shuffle width (its partition
+count), and must not contain an unpartitioned window in its plan."""
 
 from __future__ import annotations
 
@@ -9,20 +9,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from forex_data_pipeline_spark.operators.ranking import global_rank
+from forex_data_pipeline_spark.session import child_session
 from forex_data_pipeline_spark.tables import load
 from tests.test_plans import plan_of
 
 
 @pytest.mark.parametrize("partitions", [1, 3, 8])
 def test_global_rank_matches_single_window(spark, sf_dir, partitions):
-    orders = load(spark, sf_dir, "orders").select(
+    child = child_session(
+        spark, {"spark.sql.shuffle.partitions": str(partitions)}
+    )
+    orders = load(child, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         "o_orderkey",
     )
-    ranked, n = global_rank(
-        orders, ["cents", "o_orderkey"], rank_col="rn",
-        partitions=partitions,
-    )
+    ranked, n = global_rank(orders, ["cents", "o_orderkey"], rank_col="rn")
     assert n == orders.count()
 
     w = Window.orderBy("cents", "o_orderkey")
