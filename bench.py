@@ -166,21 +166,44 @@ BENCH_SETS: dict[str, tuple[str, ...]] = {
     "extended5": EXTENDED5,
 }
 
-#: The round-1 headline set (BENCH_r01.json) — emitted as a separate
-#: subtotal so per-round totals stay apples-to-apples as the headline
-#: set widens.
-R1_SET: frozenset[str] = frozenset(
-    {
-        "candles_5m", "candles_multi_tf", "medallion_gold",
-        "dedup_keyed_latest", "pricing_summary", "join_revenue_by_nation",
-        "star_join_revenue", "topk_orders_per_customer",
-        "global_topk_orders", "asof_join_purchases", "cohort_retention",
-        "rolling_correlation_30", "twap_daily", "ewma_macd",
-        "fk_integrity_check", "fuzzy_name_pairs", "minhash_lsh_pairs",
-        "simhash_hamming_pairs", "embedding_cosine_topk", "text_stats",
-        "repetition_stats", "tfidf_top_terms", "sequence_chunking",
-    }
-)
+#: The round-1 headline set (BENCH_r01.json), HEADLINE's first 23
+#: names — emitted as a separate subtotal so per-round totals stay
+#: apples-to-apples as the headline set widens.
+R1_SET: frozenset[str] = frozenset(HEADLINE[:23])
+
+
+def release_state(spark) -> None:
+    """Release the previous query's executor-side state BEFORE each
+    timed section: localCheckpoint blocks are only freed when the
+    Python DataFrame is GC'd and the JVM ContextCleaner runs, so
+    across a 36-query suite the storage memory fills with dead
+    blocks and late queries pay eviction + GC instead of compute
+    (measured 3.2x inflation on the last queries at sf1: triangle
+    33s alone vs 107s in-suite before this)."""
+    spark.catalog.clearCache()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    # clearCache+gc only ENQUEUE localCheckpoint block removal
+    # (ContextCleaner is async and the weak-ref chain through py4j
+    # can lag >15 s); at sf10 the blocks are big enough that the
+    # next query starts against a still-full storage pool and pays
+    # eviction/spill instead of compute (measured:
+    # exact_substring_spans 149.6 s in-suite vs 40.9 s solo at
+    # sf10). Between queries every persistent RDD is DEAD by
+    # construction (results are count()'d and dropped), so
+    # unpersist them explicitly and BLOCKING — deterministic,
+    # instant drain.
+    # INVARIANT this relies on (also stated at the @register
+    # contract in catalog.py): a registered query must not retain
+    # checkpointed/persisted state across calls — each call builds
+    # its localCheckpoints fresh. If a query ever cached a
+    # DataFrame in a module global for reuse, this loop would
+    # truncate its lineage and the NEXT call would die with
+    # missing checkpoint blocks.
+    sc = spark.sparkContext._jsc.sc()
+    prdds = sc.getPersistentRDDs().toList()
+    for i in range(prdds.size()):
+        prdds.apply(i)._2().unpersist(True)
 
 
 def main() -> None:
@@ -253,44 +276,11 @@ def main() -> None:
     # noise floor is irrelevant (sf10: triangle ~9 min/run).
     n_runs = max(1, int(os.environ.get("BENCH_RUNS", "2")))
 
-    def _release_state() -> None:
-        # Release the previous query's executor-side state BEFORE each
-        # timed section: localCheckpoint blocks are only freed when the
-        # Python DataFrame is GC'd and the JVM ContextCleaner runs, so
-        # across a 36-query suite the storage memory fills with dead
-        # blocks and late queries pay eviction + GC instead of compute
-        # (measured 3.2x inflation on the last queries at sf1: triangle
-        # 33s alone vs 107s in-suite before this).
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        # clearCache+gc only ENQUEUE localCheckpoint block removal
-        # (ContextCleaner is async and the weak-ref chain through py4j
-        # can lag >15 s); at sf10 the blocks are big enough that the
-        # next query starts against a still-full storage pool and pays
-        # eviction/spill instead of compute (measured:
-        # exact_substring_spans 149.6 s in-suite vs 40.9 s solo at
-        # sf10). Between queries every persistent RDD is DEAD by
-        # construction (results are count()'d and dropped), so
-        # unpersist them explicitly and BLOCKING — deterministic,
-        # instant drain.
-        # INVARIANT this relies on (also stated at the @register
-        # contract in catalog.py): a registered query must not retain
-        # checkpointed/persisted state across calls — each call builds
-        # its localCheckpoints fresh. If a query ever cached a
-        # DataFrame in a module global for reuse, this loop would
-        # truncate its lineage and the NEXT call would die with
-        # missing checkpoint blocks.
-        sc = spark.sparkContext._jsc.sc()
-        prdds = sc.getPersistentRDDs().toList()
-        for i in range(prdds.size()):
-            prdds.apply(i)._2().unpersist(True)
-
     timings: dict[str, float] = {}
     for name in names:
         best = float("inf")
         for _ in range(n_runs):
-            _release_state()
+            release_state(spark)
             t0 = time.perf_counter()
             catalog.REGISTRY[name].fn(spark, sf_dir).count()
             best = min(best, time.perf_counter() - t0)
@@ -351,11 +341,11 @@ def main() -> None:
                 reverse=True,
             )[:6]
             for _, name in flagged:
-                _release_state()
+                release_state(spark)
                 c0 = round(min(_canary_jvm(), _canary_jvm()), 3)
                 best = float("inf")
                 for _ in range(n_runs):
-                    _release_state()
+                    release_state(spark)
                     t0 = time.perf_counter()
                     catalog.REGISTRY[name].fn(spark, sf_dir).count()
                     best = min(best, time.perf_counter() - t0)

@@ -88,7 +88,6 @@ def multi_timeframe_ohlc(
     *,
     min_candle_start=None,
     keep_spec: bool = False,
-    strategy: str = "auto",
 ) -> DataFrame:
     """All timeframes in ONE scan via explode (vs the reference's 7-way
     UNION ALL, fct:40-57). Output grain: (series..., timeframe,
@@ -117,19 +116,17 @@ def multi_timeframe_ohlc(
     i.e. every coarse boundary lies on a base boundary; otherwise the
     exploded one-scan form runs instead (both proven equal to the
     reference's 7-way UNION oracle, and to each other in
-    tests/test_edge_cases.py). ``strategy``: "auto" (rollup when
-    aligned) or "explode" — the single-stage form, marginally lower
-    latency on tiny inputs where the extra rollup stage outweighs the
-    multi-fold shuffle-byte saving.
+    tests/test_edge_cases.py). An edge also selects the exploded form:
+    an incremental recompute reads only the rows since its edge plus one
+    coarsest bucket, where the extra rollup stage costs more than the
+    shuffle bytes it saves.
     """
     base = min(timeframes, key=lambda t: t.seconds)
-    aligned = all(
+    rollup = min_candle_start is None and all(
         t.seconds % base.seconds == 0
         and (t.shift_seconds - base.shift_seconds) % base.seconds == 0
         for t in timeframes
     )
-    if strategy == "explode":
-        aligned = False
     tf_array = F.array(
         *[
             F.struct(
@@ -159,7 +156,7 @@ def multi_timeframe_ohlc(
             ),
         ).agg(*aggs)
 
-    if not aligned:
+    if not rollup:
         exploded = df.withColumn("_tf", F.explode(tf_array))
         return _grouped(
             exploded,

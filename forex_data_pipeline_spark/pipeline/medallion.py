@@ -294,7 +294,6 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
         timeframes=cfg.timeframes,
         min_candle_start=wm,
         keep_spec=True,
-        strategy="explode",
     )
 
     existing = _with_tf_spec(gold, cfg)

@@ -37,7 +37,8 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .rest_datasource import MAX_ROWS_PER_FETCH
+#: The reference's fetch cap (extract_forex.py:34): rows per day window.
+MAX_ROWS_PER_FETCH = 800
 
 #: The reference's backoff schedule (extract_forex.py:70-109): the first
 #: retry waits 10 s, each later one twice as long, at most 5 retries.

@@ -14,7 +14,6 @@ Prints one line per query:
 
 from __future__ import annotations
 
-import gc
 import io
 import os
 import sys
@@ -23,18 +22,9 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release_state  # noqa: E402
 from forex_data_pipeline_spark import catalog  # noqa: E402
 from forex_data_pipeline_spark.session import get_spark  # noqa: E402
-
-
-def _release(spark) -> None:
-    spark.catalog.clearCache()
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    sc = spark.sparkContext._jsc.sc()
-    prdds = sc.getPersistentRDDs().toList()
-    for i in range(prdds.size()):
-        prdds.apply(i)._2().unpersist(True)
 
 
 def _canary(spark) -> float:
@@ -74,7 +64,7 @@ def main() -> None:
         c_pre = round(min(_canary(spark), _canary(spark)), 3)
         best, rows = float("inf"), -1
         for _ in range(runs):
-            _release(spark)
+            release_state(spark)
             t0 = time.perf_counter()
             rows = catalog.REGISTRY[name].fn(spark, sf_dir).count()
             best = min(best, time.perf_counter() - t0)

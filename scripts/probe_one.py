@@ -9,13 +9,13 @@ Usage: python scripts/probe_one.py SF_DIR NAME [NAME...]
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release_state  # noqa: E402
 from forex_data_pipeline_spark import catalog  # noqa: E402
 from forex_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -31,9 +31,7 @@ def main() -> None:
     warm = os.environ.get("PROBE_WARMUP", "pricing_summary")
     catalog.REGISTRY[warm].fn(spark, sf_dir).count()
     for name in names:
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        release_state(spark)
         t0 = time.perf_counter()
         n = catalog.REGISTRY[name].fn(spark, sf_dir).count()
         dt = time.perf_counter() - t0

@@ -5,7 +5,6 @@ value check."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -100,10 +99,3 @@ def assert_df_matches_oracle(spark_df, oracle_con, oracle: str, rtol=1e-9):
                 f"col {c}: {len(bad)} mismatches, first at row {bad[0]}: "
                 f"{g.iloc[bad[0]]!r} vs {e.iloc[bad[0]]!r}"
             )
-
-
-def exact_float_check(got: pd.Series, exp: pd.Series) -> bool:
-    return all(
-        (math.isnan(a) and math.isnan(b)) or a == b
-        for a, b in zip(got, exp)
-    )

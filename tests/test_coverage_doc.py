@@ -1,10 +1,10 @@
 """COVERAGE.md is the operator inventory — every q:`name`
 it cites must exist in the registry, and every registered query must be
 documented there; every module, test and function it cites must exist.
-Every engine function and class must have a caller outside ``tests/``,
-every option a second value in use, only ``session.py`` writes session
-conf or reads the environment, and no stage is copied across
-functions."""
+Every engine function and class must have a caller outside ``tests/``
+and a name no other one shares, every option a second value in use,
+only ``session.py`` writes session conf or reads the environment, and
+no stage is copied across functions."""
 
 from __future__ import annotations
 
@@ -216,6 +216,27 @@ def test_every_engine_def_has_a_product_caller():
         f"{len(unreached)} engine defs have no product caller (besides "
         f"the {len(NO_PRODUCT_CALLER)} in NO_PRODUCT_CALLER):\n"
         + "\n".join(unreached)
+    )
+
+
+def test_no_top_level_name_defined_twice():
+    """No two top-level functions or classes of the package share a name.
+    The reach scan above follows references by name, so a def that
+    shares its name with a reached one counts as reached through it."""
+    defs: dict[str, list[str]] = {}
+    for path, src in _package_sources().items():
+        for stmt in ast.parse(src, path).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append(
+                    f"{path}:{stmt.lineno}"
+                )
+    shared = sorted(
+        f"{name}: {', '.join(paths)}"
+        for name, paths in defs.items() if len(paths) > 1
+    )
+    assert shared == [], (
+        f"{len(shared)} names defined more than once; rename one so the "
+        "reach scan can tell them apart:\n" + "\n".join(shared)
     )
 
 

@@ -8,6 +8,8 @@ empty relation through every stage)."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,12 +98,10 @@ def test_merge_upsert_with_empty_new_batch(spark, tmp_path):
 def test_multi_timeframe_strategies_agree(spark, sf_dir):
     """The hierarchical-rollup and exploded-single-pass forms of
     multi_timeframe_ohlc must produce identical candles on the
-    reference frame set ("auto" takes the rollup there, because its
-    exactness condition holds: every coarse boundary lies on a 5m
-    boundary)."""
-    from forex_data_pipeline_spark.operators.candles import (
-        multi_timeframe_ohlc,
-    )
+    reference frame set. Without an edge it takes the rollup there,
+    because its exactness condition holds (every coarse boundary lies
+    on a 5m boundary); an edge selects the exploded form, and one
+    before the first tick keeps every candle."""
     from forex_data_pipeline_spark.tables import load
 
     ev = load(spark, sf_dir, "events").select(
@@ -109,11 +109,10 @@ def test_multi_timeframe_strategies_agree(spark, sf_dir):
         F.col("ts").alias("observed_at"),
         F.col("value").alias("close_price"),
     )
-    a = multi_timeframe_ohlc(
-        ev, "observed_at", "close_price", ["symbol"], strategy="auto"
-    )
+    a = multi_timeframe_ohlc(ev, "observed_at", "close_price", ["symbol"])
     b = multi_timeframe_ohlc(
-        ev, "observed_at", "close_price", ["symbol"], strategy="explode"
+        ev, "observed_at", "close_price", ["symbol"],
+        min_candle_start=datetime(2000, 1, 1),
     )
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0

@@ -126,86 +126,3 @@ def test_to_spark_schema_and_rows(spark):
 def test_to_spark_empty_day_returns_none(spark):
     src = _source(lambda *a: _bars(0))
     assert src.to_spark(spark, "2026-01-02") is None
-
-
-def test_python_datasource_parallel_backfill(spark):
-    """forex_rest as a native Spark data source: a 3-day × 2-symbol
-    backfill must fan out as 6 input partitions, produce 288 bars per
-    (symbol, day) at 5min, and be bit-deterministic across reads."""
-    from forex_data_pipeline_spark.sources import rest_datasource
-
-    rest_datasource.register(spark)
-    reader = (
-        spark.read.format("forex_rest")
-        .option("symbols", "EUR/USD,GBP/USD")
-        .option("start", "2024-01-01")
-        .option("end", "2024-01-03")
-        .option("interval", "5min")
-    )
-    df = reader.load()
-    assert df.schema.simpleString() == (
-        "struct<symbol:string,ts:timestamp,open:double,high:double,"
-        "low:double,close:double>"
-    )
-    assert df.rdd.getNumPartitions() == 6
-    assert df.count() == 2 * 3 * 288
-
-    from pyspark.sql import functions as F
-
-    per_day = (
-        df.groupBy("symbol", F.to_date("ts").alias("d"))
-        .count()
-        .collect()
-    )
-    assert all(r["count"] == 288 for r in per_day)
-    # high/low envelope invariant from the generator
-    bad = df.filter(
-        (F.col("high") < F.col("open")) | (F.col("high") < F.col("close"))
-        | (F.col("low") > F.col("open")) | (F.col("low") > F.col("close"))
-    )
-    assert bad.count() == 0
-    # determinism: a second read hashes identically
-    h = lambda d: d.selectExpr(  # noqa: E731
-        "sum(hash(symbol, ts, open, high, low, close)) AS h"
-    ).first()["h"]
-    assert h(df) == h(reader.load())
-
-
-def test_python_datasource_streaming_day_offsets(spark, tmp_path):
-    """forex_rest as a STREAMING source: the offset is a day; an
-    availableNow drain of a 3-day range must ingest 3 × 288 bars
-    exactly once, checkpointed through the streaming offset log."""
-    from forex_data_pipeline_spark.sources import rest_datasource
-
-    rest_datasource.register(spark)
-    stream = (
-        spark.readStream.format("forex_rest")
-        .option("symbols", "EUR/USD")
-        .option("start", "2024-02-01")
-        .option("end", "2024-02-03")
-        .option("interval", "5min")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("rest_stream_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "rest_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("rest_stream_t")
-    assert got.count() == 3 * 288
-
-    from pyspark.sql import functions as F
-
-    days = sorted(
-        r["d"]
-        for r in got.select(
-            F.to_date("ts").alias("d")
-        ).distinct().collect()
-    )
-    assert [str(d) for d in days] == [
-        "2024-02-01", "2024-02-02", "2024-02-03",
-    ]
